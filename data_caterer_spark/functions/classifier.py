@@ -450,6 +450,42 @@ def score_doc(
     return sf, sf >= FIXED_SCALE // 2
 
 
+def score_keyed(
+    src: DataFrame,
+    model: QualityClassifier,
+    key_cols: list[str],
+    text_col: str,
+) -> DataFrame:
+    """(*key_cols, score_fixed, keep): broadcast weights, one Arrow pass
+    of ``score_doc`` over ``text_col``, key columns passed through with
+    their ``src`` types — the batch (:func:`infer`) and the streaming
+    (``streaming_classifier_scores``) scorers share this loop."""
+    bc = src.sparkSession.sparkContext.broadcast(
+        (model.weights.tobytes(), model.bias, model.n_features,
+         model.include_bigrams)
+    )
+    schema = StructType(
+        [StructField(k, src.schema[k].dataType) for k in key_cols]
+        + _SCORE_SCHEMA.fields[1:]
+    )
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        wv, bv, nf, bg = bc.value
+        wloc = np.frombuffer(wv, dtype=np.float64)
+        for pdf in batches:
+            texts = pdf[text_col].where(pdf[text_col].notna(), None)
+            scored = [score_doc(t, wloc, bv, nf, bg) for t in texts]
+            yield pd.DataFrame(
+                {
+                    **{k: pdf[k] for k in key_cols},
+                    "score_fixed": [s[0] for s in scored],
+                    "keep": [s[1] for s in scored],
+                }
+            )
+
+    return src.select(*key_cols, text_col).mapInPandas(gen, schema)
+
+
 def infer(
     df: DataFrame,
     model: QualityClassifier,
@@ -457,31 +493,11 @@ def infer(
     text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, score_fixed, keep): broadcast weights, one Arrow pass."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (model.weights.tobytes(), model.bias, model.n_features,
-         model.include_bigrams)
-    )
     src = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).alias("__text"),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        wv, bv, nf, bg = bc.value
-        wloc = np.frombuffer(wv, dtype=np.float64)
-        for pdf in batches:
-            texts = pdf["__text"].where(pdf["__text"].notna(), None)
-            scored = [score_doc(t, wloc, bv, nf, bg) for t in texts]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "score_fixed": [s[0] for s in scored],
-                    "keep": [s[1] for s in scored],
-                }
-            )
-
-    return src.mapInPandas(gen, _SCORE_SCHEMA)
+    return score_keyed(src, model, ["doc_id"], "__text")
 
 
 def infer_from_features(

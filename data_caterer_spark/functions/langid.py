@@ -1,90 +1,39 @@
-"""Language-ID stage: broadcast model + iterator pandas UDF.
+"""Language-ID stage: the n-gram model through the shared model stage.
 
 Deployment shape per BASELINE north_star: "fastText language-ID via
-broadcast model in a pandas/Arrow UDF".  The model object is serialized
-once on the driver, broadcast, and deserialized ONCE PER WORKER inside the
-``Iterator[pd.Series]`` UDF (init-once pattern — reference analog: faker
-objects shipped to executors, ``BatchDataProcessor.scala:83-99``).
+broadcast model in a pandas/Arrow UDF".  The model object is broadcast
+once and unpickled once per Python worker by
+:func:`functions.scoring.model_stage` (init-once pattern — reference
+analog: faker objects shipped to executors,
+``BatchDataProcessor.scala:83-99``).
 
 ``LangIdModel`` is the n-gram stand-in (fasttext lib not in this image);
-swapping in real fastText means replacing ``LangIdModel.from_bytes`` with
-``fasttext.load_model`` — the Spark plumbing is unchanged.
+swapping in real fastText means passing a model object with the same
+``predict`` / ``predict_margin`` batch methods — the Spark plumbing is
+unchanged.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from pyspark.sql import DataFrame
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
+from .scoring import default_langid, model_stage
 from .textcore import LangIdModel
-
-_DEFAULT_MODEL: LangIdModel | None = None
-
-
-def default_model() -> LangIdModel:
-    global _DEFAULT_MODEL
-    if _DEFAULT_MODEL is None:
-        _DEFAULT_MODEL = LangIdModel.train()
-    return _DEFAULT_MODEL
-
-
-def langid_udf(spark: SparkSession, model: LangIdModel | None = None):
-    """Build a ``text -> struct<lang, lang_score>`` iterator pandas UDF."""
-    model = model or default_model()
-    bc = spark.sparkContext.broadcast(model.to_bytes())
-
-    @pandas_udf("lang string, lang_score double")
-    def _predict(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        local = LangIdModel.from_bytes(bc.value)  # once per worker task
-        for series in batches:
-            langs, scores = local.predict(
-                [None if pd.isna(t) else t for t in series]
-            )
-            yield pd.DataFrame({"lang": langs, "lang_score": scores})
-
-    return _predict
 
 
 def with_language(
     df: DataFrame,
     text_col: str = "text",
     model: LangIdModel | None = None,
-    out_prefix: str = "",
 ) -> DataFrame:
     """Add ``lang`` + ``lang_score`` columns (one Arrow round-trip)."""
-    spark = df.sparkSession
-    udf = langid_udf(spark, model)
-    tmp = "__langid"
-    df = df.withColumn(tmp, udf(F.col(text_col)))
-    return df.withColumns(
-        {
-            f"{out_prefix}lang": F.col(f"{tmp}.lang"),
-            f"{out_prefix}lang_score": F.col(f"{tmp}.lang_score"),
-        }
-    ).drop(tmp)
-
-
-def langid_margin_udf(spark: SparkSession, model: LangIdModel | None = None):
-    """``text -> struct<lang, lang_margin>`` iterator pandas UDF: the
-    top1-top2 log-prob margin is the language-ID CONFIDENCE (CCNet gates
-    on it — a small margin means mixed/ambiguous text)."""
-    model = model or default_model()
-    bc = spark.sparkContext.broadcast(model.to_bytes())
-
-    @pandas_udf("lang string, lang_margin double")
-    def _margin(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        local = LangIdModel.from_bytes(bc.value)  # once per worker task
-        for series in batches:
-            langs, margins = local.predict_margin(
-                [None if pd.isna(t) else t for t in series]
-            )
-            yield pd.DataFrame({"lang": langs, "lang_margin": margins})
-
-    return _margin
+    return model_stage(
+        df,
+        text_col,
+        {"lang": "string", "lang_score": "double"},
+        model or default_langid(),
+        lambda m, texts: m.predict(texts),
+    )
 
 
 def with_language_margin(
@@ -92,9 +41,13 @@ def with_language_margin(
     text_col: str = "text",
     model: LangIdModel | None = None,
 ) -> DataFrame:
-    """Add ``lang`` + ``lang_margin`` (one Arrow round-trip)."""
-    udf = langid_margin_udf(df.sparkSession, model)
-    out = df.withColumn("__lm", udf(F.col(text_col)))
-    return out.withColumns(
-        {"lang_pred": F.col("__lm.lang"), "lang_margin": F.col("__lm.lang_margin")}
-    ).drop("__lm")
+    """Add ``lang_pred`` + ``lang_margin`` (one Arrow round-trip): the
+    top1-top2 log-prob margin is the language-ID CONFIDENCE (CCNet gates
+    on it — a small margin means mixed/ambiguous text)."""
+    return model_stage(
+        df,
+        text_col,
+        {"lang_pred": "string", "lang_margin": "double"},
+        model or default_langid(),
+        lambda m, texts: m.predict_margin(texts),
+    )

@@ -1,54 +1,34 @@
-"""Perplexity stage: hashed char-trigram LM scored in a pandas/Arrow UDF.
+"""Perplexity stage: hashed char-trigram LM through the shared model stage.
 
 KenLM-style deployment shape (BASELINE north_star): the log-prob table is a
-flat float64 numpy array broadcast once and shared per worker; scoring is
-numpy table lookups over vectorized FNV-1a n-gram hashes — no per-row
-Python in Spark's eval loop, batches cross via Arrow.
+flat float64 numpy array inside a ``PerplexityModel``, broadcast once and
+unpickled once per Python worker by :func:`functions.scoring.model_stage`;
+scoring is numpy table lookups over vectorized FNV-1a n-gram hashes — no
+per-row Python in Spark's eval loop, batches cross via Arrow.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
+from .scoring import default_ppl, model_stage
 from .textcore import PerplexityModel
-
-_DEFAULT_MODEL: PerplexityModel | None = None
-
-
-def default_model() -> PerplexityModel:
-    global _DEFAULT_MODEL
-    if _DEFAULT_MODEL is None:
-        _DEFAULT_MODEL = PerplexityModel.train()
-    return _DEFAULT_MODEL
-
-
-def perplexity_udf(spark: SparkSession, model: PerplexityModel | None = None):
-    model = model or default_model()
-    bc = spark.sparkContext.broadcast(model.to_bytes())
-
-    @pandas_udf("double")
-    def _score(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        local = PerplexityModel.from_bytes(bc.value)  # once per worker task
-        for series in batches:
-            vals = local.score([None if pd.isna(t) else t for t in series])
-            yield pd.Series(vals, dtype="float64")
-
-    return _score
 
 
 def with_perplexity(
     df: DataFrame,
     text_col: str = "text",
     model: PerplexityModel | None = None,
-    out_col: str = "ppl",
 ) -> DataFrame:
-    udf = perplexity_udf(df.sparkSession, model)
-    return df.withColumn(out_col, udf(F.col(text_col)))
+    """Add ``ppl`` (one Arrow round-trip)."""
+    return model_stage(
+        df,
+        text_col,
+        {"ppl": "double"},
+        model or default_ppl(),
+        lambda m, texts: (m.score(texts),),
+    )
 
 
 def with_ppl_buckets(

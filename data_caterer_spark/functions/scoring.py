@@ -1,58 +1,70 @@
-"""Fused model-scoring stage: langid + perplexity in ONE Arrow crossing.
+"""The model stage: every text-model score crosses into Python here.
 
-``with_language`` and ``with_perplexity`` each pay a full JVM->Arrow->
-pandas->Arrow->JVM round trip over the text column.  The per-row kernel
-work is small (batched numpy, functions/textcore.py), so on short
-transcript turns the two crossings ARE the stage cost — fusing them
-halves the Arrow serialization, the pandas Series construction, and the
-Python-worker scheduling for the whole model block.  Outputs are
-byte-identical to running the two stages separately (same broadcast
+:func:`model_stage` is the one broadcast-model iterator pandas UDF in the
+package.  It broadcasts the model OBJECT (a PySpark worker caches
+``Broadcast.value`` across the tasks it runs, so each model is unpickled
+once per Python worker), maps NULL texts to ``None``, runs a per-batch
+kernel, and unpacks the kernel's columns into named output columns.
+``with_language`` / ``with_language_margin`` (functions/langid.py),
+``with_perplexity`` (functions/perplexity.py) and :func:`with_model_scores`
+are one call each into it; swapping in a real fastText / KenLM model means
+passing a different model object and kernel, the Spark plumbing is shared.
+
+:func:`with_model_scores` fuses langid + perplexity into ONE Arrow
+crossing.  On short transcript turns the per-row kernel work is small
+(batched numpy, functions/textcore.py), so the crossing IS the stage
+cost — fusing halves the Arrow serialization, the pandas Series
+construction, and the Python-worker scheduling.  Outputs are
+byte-identical to running the single-model stages separately (same
 models, same kernels, same batch shapes).
-
-The single-model stages remain available for pipelines that genuinely
-need only one of the scores (and as the documented deployment shape for
-swapping in a real fastText / KenLM model).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import cache
+from typing import Any, Callable, Iterator, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .langid import default_model as default_langid
-from .perplexity import default_model as default_ppl
 from .textcore import LangIdModel, PerplexityModel
 
 
-def scoring_udf(
-    spark: SparkSession,
-    langid_model: LangIdModel | None = None,
-    ppl_model: PerplexityModel | None = None,
-):
-    """text -> struct<lang, lang_score, ppl> iterator pandas UDF (both
-    models broadcast once, deserialized once per worker task)."""
-    lm = langid_model or default_langid()
-    pm = ppl_model or default_ppl()
-    bc_l = spark.sparkContext.broadcast(lm.to_bytes())
-    bc_p = spark.sparkContext.broadcast(pm.to_bytes())
+@cache
+def default_langid() -> LangIdModel:
+    return LangIdModel.train()
 
-    @pandas_udf("lang string, lang_score double, ppl double")
-    def _score(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        local_l = LangIdModel.from_bytes(bc_l.value)
-        local_p = PerplexityModel.from_bytes(bc_p.value)
+
+@cache
+def default_ppl() -> PerplexityModel:
+    return PerplexityModel.train()
+
+
+def model_stage(
+    df: DataFrame,
+    text_col: str,
+    fields: dict[str, str],
+    model: Any,
+    kernel: Callable[[Any, list], Sequence[list]],
+) -> DataFrame:
+    """Add ``fields`` (output name -> Spark SQL type) computed over Arrow
+    batches of ``text_col``: ``kernel(model, texts)`` returns one list
+    per field, in field order, with NULL texts passed as ``None``."""
+    bc = df.sparkSession.sparkContext.broadcast(model)
+    names = list(fields)
+
+    @pandas_udf(", ".join(f"{n} {t}" for n, t in fields.items()))
+    def _stage(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        local = bc.value  # unpickled once per Python worker
         for series in batches:
             texts = [None if pd.isna(t) else t for t in series]
-            langs, scores = local_l.predict(texts)
-            ppls = local_p.score(texts)
-            yield pd.DataFrame(
-                {"lang": langs, "lang_score": scores, "ppl": ppls}
-            )
+            yield pd.DataFrame(dict(zip(names, kernel(local, texts))))
 
-    return _score
+    tmp = "__model"
+    df = df.withColumn(tmp, _stage(F.col(text_col)))
+    return df.withColumns({n: F.col(f"{tmp}.{n}") for n in names}).drop(tmp)
 
 
 def with_model_scores(
@@ -62,13 +74,10 @@ def with_model_scores(
     ppl_model: PerplexityModel | None = None,
 ) -> DataFrame:
     """Add ``lang``, ``lang_score``, ``ppl`` in one Arrow round trip."""
-    udf = scoring_udf(df.sparkSession, langid_model, ppl_model)
-    tmp = "__scores"
-    df = df.withColumn(tmp, udf(F.col(text_col)))
-    return df.withColumns(
-        {
-            "lang": F.col(f"{tmp}.lang"),
-            "lang_score": F.col(f"{tmp}.lang_score"),
-            "ppl": F.col(f"{tmp}.ppl"),
-        }
-    ).drop(tmp)
+    return model_stage(
+        df,
+        text_col,
+        {"lang": "string", "lang_score": "double", "ppl": "double"},
+        (langid_model or default_langid(), ppl_model or default_ppl()),
+        lambda m, texts: (*m[0].predict(texts), m[1].score(texts)),
+    )

@@ -1,62 +1,21 @@
-"""PII/toxicity scrub stage.
+"""PII/toxicity scrub stage: the one Spark implementation of the bank.
 
-Two interchangeable implementations of the SAME bank
-(``textcore.SCRUB_BANK``, total order):
+:func:`scrub_columns` runs ``textcore.SCRUB_BANK`` (total order) as a
+staged chain of JVM ``regexp_replace`` calls — pure Catalyst, whole-stage
+codegen, zero Python.  The pure-Python ``textcore.scrub_text`` (used by
+the reference labeler) is the independent reference it is checked
+against.
 
-* :func:`scrub_columns` — chained JVM ``regexp_replace`` (default; pure
-  Catalyst, whole-stage codegen, zero Python).  Hit flags come from
-  ``RLIKE`` on the pre-scrub text.
-* :func:`scrub_udf` — compiled-regex ``pd.Series.str.replace`` pandas UDF
-  (the BASELINE north_star shape; useful when the bank outgrows what Java
-  regex shares with the authoring dialect).
-
-Byte-equality across both paths and the pure-Python labeler holds because
-all patterns live in the common Java/Python regex subset — pinned by
-tests/test_parity.py.
+Byte-equality with the reference labeler holds because all patterns live
+in the common Java/Python regex subset — pinned by tests/test_parity.py.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from .textcore import SCRUB_BANK, scrub_text
-
-
-def _scrub_pair(text: str | Column) -> tuple[Column, Column]:
-    """(scrubbed, hits) with SEQUENTIAL hit semantics.
-
-    Each step's hit flag is evaluated against the text as scrubbed by the
-    PRIOR steps — matching the Python kernel exactly.  (A 16-digit card
-    also matches the phone pattern in the raw text, but not once the card
-    step has replaced it; flagging against the raw text would diverge.)
-
-    Hit = "this step changed the text" (``new != cur``), byte-identical to
-    the Python kernel's ``rx.sub() != out`` — and one regex pass per step
-    instead of two (the RLIKE variant ran each pattern twice; codegen CSE
-    dedupes the shared ``regexp_replace`` between flag and chain).
-    """
-    cur = F.col(text) if isinstance(text, str) else text
-    flags = []
-    for rid, pattern, replacement in SCRUB_BANK:
-        new = F.regexp_replace(cur, pattern, replacement)
-        flags.append(F.when(new != cur, F.lit(rid)))
-        cur = new
-    return cur, F.array_compact(F.array(*flags))
-
-
-def scrubbed_column(text: str | Column) -> Column:
-    """Sequential regexp_replace chain in bank order (JVM path)."""
-    return _scrub_pair(text)[0]
-
-
-def scrub_hits_column(text: str | Column) -> Column:
-    """array<string> of bank rule ids, sequential semantics (see _scrub_pair)."""
-    return _scrub_pair(text)[1]
+from .textcore import SCRUB_BANK
 
 
 def scrub_columns(
@@ -68,9 +27,17 @@ def scrub_columns(
     """Staged scrub: each bank step is its own column referencing the
     previous step, so every regex executes exactly ONCE per row (each
     intermediate is referenced twice — by the next step and by its hit
-    flag — which keeps Catalyst's CollapseProject from inlining it)."""
-    if not hits_col:
-        return df.withColumn(out_col, scrubbed_column(text_col))
+    flag — which keeps Catalyst's CollapseProject from inlining it).
+    With ``hits_col=None`` there are no flags, each intermediate is
+    referenced once, and Catalyst collapses the chain into one nested
+    ``regexp_replace`` expression.
+
+    Hit flags have SEQUENTIAL semantics: step k's flag is "step k changed
+    the text as scrubbed by the prior steps" (``new != cur``),
+    byte-identical to the Python kernel's ``rx.sub() != out``.  (A 16-digit
+    card also matches the phone pattern in the raw text, but not once the
+    card step has replaced it; flagging against the raw text would
+    diverge.)"""
     steps = []
     prev = text_col
     for i, (rid, pattern, replacement) in enumerate(SCRUB_BANK):
@@ -80,30 +47,11 @@ def scrub_columns(
         )
         steps.append((rid, prev, cur))
         prev = cur
-    flags = [
-        F.when(F.col(cur) != F.col(prev), F.lit(rid))
-        for rid, prev, cur in steps
-    ]
-    df = df.withColumns(
-        {out_col: F.col(prev), hits_col: F.array_compact(F.array(*flags))}
-    )
-    return df.drop(*[cur for _, _, cur in steps])
-
-
-def scrub_udf():
-    """Arrow-batched scrub via the shared pure-Python kernel (factory —
-    pandas_udf return-type parsing needs an active session)."""
-
-    @pandas_udf("scrubbed_text string, scrub_hits array<string>")
-    def _scrub(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for series in batches:
-            out_text, out_hits = [], []
-            for t in series:
-                scrubbed, hits = scrub_text(None if pd.isna(t) else t)
-                out_text.append(scrubbed)
-                out_hits.append(hits)
-            yield pd.DataFrame(
-                {"scrubbed_text": out_text, "scrub_hits": out_hits}
-            )
-
-    return _scrub
+    out = {out_col: F.col(prev)}
+    if hits_col:
+        flags = [
+            F.when(F.col(cur) != F.col(prev), F.lit(rid))
+            for rid, prev, cur in steps
+        ]
+        out[hits_col] = F.array_compact(F.array(*flags))
+    return df.withColumns(out).drop(*[cur for _, _, cur in steps])

@@ -228,8 +228,8 @@ def _langid_clean(text: str) -> str:
 class LangIdModel:
     """Hashed byte-trigram log-probability profiles per language.
 
-    Deployment shape mirrors a broadcast fastText model: ``to_bytes`` /
-    ``from_bytes`` for ``SparkContext.broadcast``, batch ``predict``.
+    Deployment shape mirrors a broadcast fastText model: the object itself
+    is broadcast (functions/scoring.py), scoring is batch ``predict``.
     Scoring is a dense numpy matrix gather over FNV-hashed trigrams — no
     per-gram Python (the dict-profile formulation cost ~50us/text; this is
     ~3us) — the same dense-lookup shape as a real fastText model.
@@ -254,17 +254,6 @@ class LangIdModel:
                 (counts + LANGID_ALPHA) / (total + LANGID_ALPHA * LANGID_BUCKETS)
             )
         return cls(langs=langs, profiles=mat)
-
-    def to_bytes(self) -> bytes:
-        import pickle
-
-        return pickle.dumps(self)
-
-    @classmethod
-    def from_bytes(cls, raw: bytes) -> "LangIdModel":
-        import pickle
-
-        return pickle.loads(raw)
 
     def predict_one(self, text: str | None) -> tuple[str, float]:
         """Returns (lang, avg trigram log-prob of the winning language).
@@ -443,13 +432,6 @@ class PerplexityModel:
         total = counts.sum()
         logp = np.log((counts + PPL_ALPHA) / (total + PPL_ALPHA * PPL_BUCKETS))
         return cls(logprob=logp)
-
-    def to_bytes(self) -> bytes:
-        return self.logprob.tobytes()
-
-    @classmethod
-    def from_bytes(cls, raw: bytes) -> "PerplexityModel":
-        return cls(logprob=np.frombuffer(raw, dtype=np.float64).copy())
 
     def score_one(self, text: str | None) -> float:
         if text is None:

@@ -816,6 +816,10 @@ def connected_components(
     checkpoint on clusters, see above) and the convergence signal rides
     the same action as an ``observe`` sum of per-row changed flags — no
     separate old-vs-new comparison job.
+
+    Raises ``RuntimeError`` when ``max_iter`` rounds pass and the last
+    one still changed a label: unconverged labels would silently split
+    clusters.
     """
     from pyspark.sql import Observation
 
@@ -830,6 +834,7 @@ def connected_components(
         .distinct()
         .withColumn("cluster", F.col("id"))
     )
+    changed = None
     for i in range(max_iter):
         neigh = (
             edges.join(
@@ -860,9 +865,13 @@ def connected_components(
             .select("id", F.col("new_cluster").alias("cluster"))
         )
         labels = new_labels
-        if obs.get["changed"] == 0:
-            break
-    return labels
+        changed = obs.get["changed"]
+        if changed == 0:
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds: "
+        f"{changed} labels still changed in the last round"
+    )
 
 
 def drop_near_duplicates(

@@ -2,8 +2,7 @@
 north_star —
 
     scan → conversation window features → JVM text features
-         → langid (pandas UDF, broadcast model)
-         → perplexity (pandas UDF, broadcast table)
+         → langid + perplexity (one pandas UDF, broadcast models)
          → heuristic RuleSet (pure Catalyst)
          → regex scrub (JVM regexp_replace chain)
          → keep / rule_hits / scrubbed_text
@@ -28,10 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as T
-from ..functions.langid import with_language  # noqa: F401 (single-model path)
-from ..functions.perplexity import with_perplexity  # noqa: F401
 from ..functions.scoring import with_model_scores
-from ..functions.scrub import scrub_columns, scrub_udf
+from ..functions.scrub import scrub_columns
 from ..functions.textcore import LangIdModel, PerplexityModel
 from ..operators.rules import Rule, RuleSet, expr_rule
 from ..operators.windows import (
@@ -58,7 +55,6 @@ class QualityFilterConfig:
     max_ppl: float = 5000.0
     salt_buckets: int = 16
     drop_on_toxicity: bool = True
-    use_udf_scrub: bool = False  # pandas-UDF scrub instead of JVM chain
     with_conv_stats: bool = False  # salted per-conversation aggregates
 
 
@@ -140,33 +136,30 @@ class QualityFilterPipeline:
     def run(self, df: DataFrame, ordered: bool = False) -> DataFrame:
         """Full pipeline.  Adds: prev_* window cols, feature cols, lang,
         lang_score, ppl, rule_hits, keep, scrubbed_text, scrub_hits."""
-        cfg = self.config
         df = self.with_features(df)
         # both models in ONE Arrow crossing (functions/scoring.py) —
         # outputs byte-identical to the two single-model stages
         df = with_model_scores(
             df, langid_model=self.langid_model, ppl_model=self.ppl_model
         )
-        rules = self.heuristic_rules()
-        df = df.withColumn("heur_hits", rules.hits_column())
-        if cfg.use_udf_scrub:
-            df = df.withColumn("__scrub", scrub_udf()(F.col("text"))).withColumns(
-                {
-                    "scrubbed_text": F.col("__scrub.scrubbed_text"),
-                    "scrub_hits": F.col("__scrub.scrub_hits"),
-                }
-            ).drop("__scrub")
-        else:
-            df = scrub_columns(df)
-        # total rule_hits order: heuristic bank order, then scrub bank order
-        df = df.withColumn("rule_hits", F.concat("heur_hits", "scrub_hits"))
-        keep = rules.keep_column(F.col("heur_hits"))
-        if cfg.drop_on_toxicity:
-            keep = keep & ~F.array_contains("scrub_hits", TOXICITY_RULE_ID)
-        df = df.withColumn("keep", keep).drop("heur_hits")
+        df = self.with_labels(df, self.heuristic_rules())
         if ordered:
             df = stable_order(df)
         return df
+
+    # ------------------------------------------------------------------
+    def with_labels(self, df: DataFrame, rules: RuleSet) -> DataFrame:
+        """The label tail shared by batch and stream: heuristic hits, the
+        scrub, ``rule_hits`` (heuristic bank order, then scrub bank
+        order) and ``keep`` (no drop-rule hit, and no toxicity hit when
+        ``drop_on_toxicity``).  Needs the feature and model columns."""
+        df = df.withColumn("heur_hits", rules.hits_column())
+        df = scrub_columns(df)
+        df = df.withColumn("rule_hits", F.concat("heur_hits", "scrub_hits"))
+        keep = rules.keep_column(F.col("heur_hits"))
+        if self.config.drop_on_toxicity:
+            keep = keep & ~F.array_contains("scrub_hits", TOXICITY_RULE_ID)
+        return df.withColumn("keep", keep).drop("heur_hits")
 
     # ------------------------------------------------------------------
     def metrics(self, labeled: DataFrame) -> DataFrame:

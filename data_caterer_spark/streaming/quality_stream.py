@@ -35,7 +35,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions import text as T
 from ..functions.scoring import with_model_scores
-from ..functions.scrub import scrub_columns
 from ..operators.rules import RuleSet
 from ..plans.pipeline import QualityFilterConfig, QualityFilterPipeline
 
@@ -57,19 +56,11 @@ def streaming_quality_filter(
     need ordering state (see :func:`stateful_turn_order`).
     """
     pipe = QualityFilterPipeline(config)
-    cfg = pipe.config
-    df = T.with_text_features(stream, char_run=cfg.char_run)
+    df = T.with_text_features(stream, char_run=pipe.config.char_run)
     df = with_model_scores(
         df, langid_model=pipe.langid_model, ppl_model=pipe.ppl_model
     )
-    rules = _stateless_rules(pipe)
-    df = df.withColumn("heur_hits", rules.hits_column())
-    df = scrub_columns(df)
-    df = df.withColumn("rule_hits", F.concat("heur_hits", "scrub_hits"))
-    keep = rules.keep_column(F.col("heur_hits"))
-    if cfg.drop_on_toxicity:
-        keep = keep & ~F.array_contains("scrub_hits", "toxicity")
-    return df.withColumn("keep", keep).drop("heur_hits")
+    return pipe.with_labels(df, _stateless_rules(pipe))
 
 
 def windowed_conversation_metrics(
@@ -222,58 +213,15 @@ def streaming_classifier_scores(stream: DataFrame, model) -> DataFrame:
     """Serve a batch-trained quality classifier on a live stream — the
     train-offline / score-online deployment every quality gate runs in
     production.  Broadcast weights, one Arrow crossing per micro-batch,
-    per-turn keys preserved; the scoring kernel is the shared
-    ``classifier.score_doc``, so streamed scores are bit-identical to
-    batch and to the sequential replay."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    per-turn keys preserved; the scoring loop is the batch ``infer``'s
+    (``classifier.score_keyed``), so streamed scores are bit-identical
+    to batch and to the sequential replay."""
+    from ..functions.classifier import score_keyed
+
+    src = stream.select(
+        "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "text"
     )
-
-    from ..functions.classifier import score_doc
-
-    spark = stream.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (
-            model.weights.tobytes(),
-            model.bias,
-            model.n_features,
-            model.include_bigrams,
-        )
-    )
-    schema = StructType(
-        [
-            StructField("conv_id", StringType()),
-            StructField("turn_idx", IntegerType()),
-            StructField("score_fixed", LongType()),
-            StructField("keep", BooleanType()),
-        ]
-    )
-    src = stream.select("conv_id", "turn_idx", "text")
-
-    def gen(batches):
-        import numpy as np
-
-        wv, bv, nf, bg = bc.value
-        w = np.frombuffer(wv, dtype=np.float64)
-        for pdf in batches:
-            texts = pdf["text"].where(pdf["text"].notna(), None)
-            scored = [score_doc(t, w, bv, nf, bg) for t in texts]
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"],
-                    "turn_idx": pdf["turn_idx"].astype("int32"),
-                    "score_fixed": [s[0] for s in scored],
-                    "keep": [s[1] for s in scored],
-                }
-            )
-
-    return src.mapInPandas(gen, schema)
+    return score_keyed(src, model, ["conv_id", "turn_idx"], "text")
 
 
 # ---------------------------------------------------------------------------

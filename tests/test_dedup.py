@@ -154,6 +154,19 @@ def test_connected_components_clusters(spark):
     assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 8: 8, 9: 8, 10: 8}
 
 
+def test_connected_components_raises_when_unconverged(spark):
+    """A planted 8-node path needs 7 propagation rounds: 3 rounds leave
+    labels changing, which must raise instead of returning split
+    clusters; the default cap converges to one cluster."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(8 - 1)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match=r"in 3 rounds: \d+ labels"):
+        D.connected_components(pairs, max_iter=3)
+    got = {r["id"]: r["cluster"] for r in D.connected_components(pairs).collect()}
+    assert got == {i: 0 for i in range(8)}
+
+
 def test_get_spark_defaults_checkpoint_dir(spark):
     """config.get_spark must default a checkpoint dir so iterative
     operators never silently downgrade to non-fault-tolerant

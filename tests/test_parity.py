@@ -11,10 +11,7 @@ import pytest
 
 from data_caterer_spark.fixtures import generate_transcripts, transcripts_df
 from data_caterer_spark.labeler import ReferenceLabeler
-from data_caterer_spark.plans.pipeline import (
-    QualityFilterConfig,
-    QualityFilterPipeline,
-)
+from data_caterer_spark.plans.pipeline import QualityFilterPipeline
 
 
 @pytest.fixture(scope="module")
@@ -30,10 +27,9 @@ def golden(fixture_rows):
     }
 
 
-def _run_pipeline(spark, fixture_rows, **cfg_kwargs):
-    cfg = QualityFilterConfig(**cfg_kwargs)
+def _run_pipeline(spark, fixture_rows):
     df = transcripts_df(spark, fixture_rows).repartition(8)
-    out = QualityFilterPipeline(cfg).run(df)
+    out = QualityFilterPipeline().run(df)
     return out.select(
         "conv_id", "turn_idx", "keep", "rule_hits", "scrubbed_text"
     ).collect()
@@ -66,11 +62,6 @@ def _assert_parity(rows, golden):
 
 def test_pipeline_matches_reference_labels(spark, fixture_rows, golden):
     rows = _run_pipeline(spark, fixture_rows)
-    _assert_parity(rows, golden)
-
-
-def test_udf_scrub_path_matches_too(spark, fixture_rows, golden):
-    rows = _run_pipeline(spark, fixture_rows, use_udf_scrub=True)
     _assert_parity(rows, golden)
 
 
