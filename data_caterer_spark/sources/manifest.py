@@ -74,22 +74,12 @@ class ManifestSidecar:
         return {r["group_id"] for r in df.select("group_id").distinct().collect()}
 
     def append(self, row: dict) -> None:
-        df = self.spark.createDataFrame(
-            [
-                (
-                    row["run_id"],
-                    row["run_scope"],
-                    row["group_id"],
-                    row["rows_in"],
-                    row["rows_kept"],
-                    row["rule_hits"],
-                    row["wall_s"],
-                    row["finished_at"],
-                )
-            ],
-            MANIFEST_SCHEMA,
-        )
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        """Write one manifest row, built from JVM literals typed by
+        ``MANIFEST_SCHEMA`` (no Python-side DataFrame conversion)."""
+        fields = [f.split() for f in MANIFEST_SCHEMA.split(", ")]
+        self.spark.range(0, 1, 1, 1).select(
+            *[F.lit(row[name]).cast(dtype).alias(name) for name, dtype in fields]
+        ).write.mode("append").parquet(self.path)
 
     def read(self) -> DataFrame:
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)

@@ -363,6 +363,7 @@ def test_stratified_sample_salted_two_phase(spark, sf_dir):
     # Spark 4 pushes the row_number limit map-side (Partial) AND
     # reduce-side (Final) around BOTH exchanges — each shuffle carries
     # at most k rows per (stratum[, salt]) group, not the corpus
-    assert plan.count("WindowGroupLimit") == 4, plan
+    if int(spark.version.split(".")[0]) >= 4:
+        assert plan.count("WindowGroupLimit") == 4, plan
     # both sorts are partition-local (no global Sort / range exchange)
     assert "rangepartitioning" not in plan.lower(), plan

@@ -85,6 +85,36 @@ def test_resume_is_scope_aware(spark, transcripts, tmp_path):
     )
 
 
+def test_manifest_append_roundtrips_schema(spark, tmp_path):
+    """One appended row reads back with the exact ``MANIFEST_SCHEMA``
+    types, as written to the parquet files, and the exact values."""
+    import datetime
+
+    from pyspark.sql.types import _parse_datatype_string
+
+    from data_caterer_spark.sources.manifest import MANIFEST_SCHEMA
+
+    row = {
+        "run_id": "run-1",
+        "run_scope": "cfg-v1",
+        "group_id": 3,
+        "rows_in": 2**40,
+        "rows_kept": 7,
+        "rule_hits": '{"pii_email": 2}',
+        "wall_s": 1.25,
+        "finished_at": datetime.datetime(2026, 1, 2, 3, 4, 5, 678901),
+    }
+    path = str(tmp_path / "man")
+    man = ManifestSidecar(spark, path)
+    man.append(row)
+    expected = _parse_datatype_string(MANIFEST_SCHEMA)
+    written = spark.read.parquet(path).schema
+    assert [(f.name, f.dataType) for f in written] == [
+        (f.name, f.dataType) for f in expected
+    ]
+    assert [r.asDict() for r in man.read().collect()] == [row]
+
+
 def test_lineage_metrics(spark, transcripts, tmp_path):
     runner = ResumableRunner(
         spark, str(tmp_path / "out"), str(tmp_path / "man"), n_groups=2
