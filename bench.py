@@ -1,15 +1,20 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the cores this
+process may run on).
 
 Prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Modes:
-  python bench.py                  # full headline suite
+  python bench.py                  # headline suite, pipeline, input-size
+                                   # curve and N -> 4N core scaling
   python bench.py --job pipeline   # just the transcript quality-filter
-                                   # pipeline (used by scripts/scaling_bench.py
-                                   # to measure N-vs-4N-core scaling)
+                                   # pipeline: median turns/s + every pass
+
+Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE
+(shuffle partitions; run_scaling sets it so both widths run one plan) and
+SPARK_GRAFT_SKIP_SCALING=1 (skip the input-size and core scaling phases).
 
 Each query is forced with a noop-format write (full computation, no
 driver-side collect — the 100 TB execution shape).
@@ -20,20 +25,30 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
+import statistics
+import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
-# transcripts synthesized for the pipeline job: ~7.5 turns/conv average.
-# 60k convs ≈ 450k turns: big enough that per-job fixed overhead (stage
-# scheduling, Python worker spin-up, the final small stage) is small
-# relative to parallel work — the 20k-conv input of earlier rounds
-# understated steady-state throughput ~2x at local[32].
-PIPELINE_CONVS = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "60000"))
+# transcripts synthesized for the pipeline job: ~7.5 turns/conv, so ~150k
+# turns.  Pinned to one core of a 4-vCPU host, the first two passes took
+# 37-39 s and 25-27 s (JIT ramp), the next three 19-21 s; the untimed
+# WARMUP_PASSES absorb the ramp.
+PIPELINE_CONVS = 20_000
+WARMUP_PASSES = 2
+TIMED_PASSES = 3
+
+# input-size curve: the same pipeline at growing inputs in the JIT-warm JVM
+SIZE_SCALING_CONVS = (60_000, 150_000)
+
+# N -> 4N interleaved pairs, fixed before any trial runs
+SCALING_PAIRS = 3
 
 HEADLINE = [
     "doc_quality_filter",       # flagship keep/drop + scrub (pure Catalyst)
@@ -74,14 +89,15 @@ def force(df) -> int:
     return 0
 
 
-def _pipeline_job(spark, n_convs: int, warmup: bool = True):
-    """Synthesize transcripts executor-side, run the full quality-filter
-    pipeline, write noop.  Returns (first_sec, n_turns, retimer)."""
+def _pipeline_job(spark, n_convs: int):
+    """Synthesize transcripts executor-side and checkpoint them.  Returns
+    (n_turns, one_pass): one_pass() runs the full quality-filter pipeline
+    over that input into noop and returns its seconds."""
     from data_caterer_spark.fixtures import generate_transcripts_distributed
     from data_caterer_spark.plans.pipeline import QualityFilterPipeline
 
-    # fixed 128-chunk layout regardless of CPUS so the scaling comparison
-    # (local[8] vs local[32]) runs the IDENTICAL job on identical input
+    # fixed 128-chunk layout regardless of CPUS, so every core count runs
+    # the identical job on identical input
     df = generate_transcripts_distributed(
         spark, n_convs=n_convs, convs_per_task=max(1, n_convs // 128)
     )
@@ -89,358 +105,139 @@ def _pipeline_job(spark, n_convs: int, warmup: bool = True):
     n_turns = df.count()
     pipe = QualityFilterPipeline()
 
-    def out(frame):
-        return pipe.run(frame).select(
-            "conv_id", "turn_idx", "keep", "rule_hits", "scrubbed_text"
+    def one_pass() -> float:
+        t0 = time.time()
+        force(
+            pipe.run(df).select(
+                "conv_id", "turn_idx", "keep", "rule_hits", "scrubbed_text"
+            )
         )
+        return time.time() - t0
 
-    # warm-up: one execution over a slice spins Python workers,
-    # JIT-compiles the codegen'd stages, and pages the checkpointed input;
-    # a production run over 10^12 turns amortizes all of that to zero, so
-    # the steady-state rate is a post-warm-up execution.  The caller
-    # re-times the same job later in the suite — this box's co-tenant
-    # noise comes in minute-scale waves, so samples spread across the
-    # whole bench catch a quiet window where back-to-back repeats would
-    # not.
-    # sample (not limit): keeps every partition populated so ALL Python
-    # workers spin up during warm-up, where limit() would collapse to one
-    if warmup:
-        force(out(df.sample(fraction=0.15, seed=1)))
-    t0 = time.time()
-    force(out(df))
-    first = time.time() - t0
-
-    def retime() -> float:
-        t1 = time.time()
-        force(out(df))
-        return time.time() - t1
-
-    return first, n_turns, retime
+    return n_turns, one_pass
 
 
-def run_pipeline(spark) -> tuple[float, int]:
-    """The BASELINE north-star job at the main-suite input size."""
-    return _pipeline_job(spark, PIPELINE_CONVS)
+def pipeline_samples(spark) -> dict:
+    """The one pipeline measurement: WARMUP_PASSES untimed full passes, then
+    TIMED_PASSES timed ones; the rate is turns over the median pass."""
+    n_turns, one_pass = _pipeline_job(spark, PIPELINE_CONVS)
+    warmup = [round(one_pass(), 3) for _ in range(WARMUP_PASSES)]
+    secs = [round(one_pass(), 3) for _ in range(TIMED_PASSES)]
+    med = statistics.median(secs)
+    return {
+        "pipeline_turns": n_turns,
+        "pipeline_sec": med,
+        "pipeline_turns_per_sec": round(n_turns / med, 1),
+        "pipeline_sample_secs": secs,
+        "pipeline_warmup_secs": warmup,
+    }
 
 
 def run_size_scaling(spark, base_turns: int, base_sec: float) -> list[dict]:
-    """Input-size scaling curve (the right 100 TB signal alongside the
-    core-count ratio): the SAME pipeline at growing inputs in the already
-    JIT-warm JVM — throughput should RISE with input size while the job
-    is fixed-overhead-bound, then plateau at the work-bound rate.  Two
-    timed executions per size (first + one retime, best kept); emitted as
-    a machine-readable ``size_scaling`` block in the bench artifact."""
-    sizes = [
-        int(s)
-        for s in os.environ.get(
-            "SPARK_GRAFT_SIZE_SCALING_CONVS", "150000,500000"
-        ).split(",")
-        if s.strip()
-    ]
+    """Input-size scaling curve: the SAME pipeline at growing inputs in the
+    already JIT-warm JVM — throughput should RISE with input size while the
+    job is fixed-overhead-bound, then plateau at the work-bound rate.  Two
+    passes per size, the faster one kept (the first also pages the new
+    input); both pass times ship."""
     points = [
         {
             "convs": PIPELINE_CONVS,
             "turns": base_turns,
-            "sec": round(base_sec, 3),
+            "sec": base_sec,
             "turns_per_sec": round(base_turns / base_sec, 1),
         }
     ]
-    for convs in sizes:
-        first, turns, retime = _pipeline_job(spark, convs, warmup=False)
-        best = min(first, retime())
+    for convs in SIZE_SCALING_CONVS:
+        turns, one_pass = _pipeline_job(spark, convs)
+        secs = [round(one_pass(), 3) for _ in range(2)]
         points.append(
             {
                 "convs": convs,
                 "turns": turns,
-                "sec": round(best, 3),
-                "turns_per_sec": round(turns / best, 1),
+                "sec": min(secs),
+                "turns_per_sec": round(turns / min(secs), 1),
+                "pass_secs": secs,
             }
         )
     return points
 
 
-def _hw_ceiling(n: int) -> dict | None:
-    """This box's own N->4N ceilings (pure-ALU ~0.93; pure-DRAM-streaming
-    0.4-0.86 — all 4N cores share one virtualized memory subsystem where
-    real 4N executors each bring their own).  A mem ceiling < ~0.6 marks
-    a bandwidth-saturated co-tenant window — measured BEFORE and AFTER
-    the trials so the artifact shows the window state, independently of
-    the pipeline ratio itself.  Also carries the ABSOLUTE narrow-width
-    mem wall (quiet baseline ~0.9 s): under TOTAL saturation both widths
-    are starved equally, so the ratio alone can read ~1.0 while any real
-    measurement would be bandwidth-capped — quietness needs ratio AND
-    wall.  See scripts/hw_ceiling.py."""
-    try:
-        repo = os.path.dirname(os.path.abspath(__file__))
-        sys.path.insert(0, os.path.join(repo, "scripts"))
-        from hw_ceiling import measure
-
-        m = measure(n=n, repeats=1)
-        out = {k: v["efficiency"] for k, v in m.items()}
-        out["mem_wall_n"] = m["mem"][f"wall_{n}"]
-        return out
-    except Exception:
-        return None
-
-
-#: absolute narrow-width DRAM-probe wall (seconds) above which a window
-#: cannot be called quiet regardless of its ratio (quiet baseline ~0.9 s;
-#: observed 10-60 s under co-tenant saturation)
-QUIET_WALL_S = float(os.environ.get("SPARK_GRAFT_SCALING_QUIET_WALL", "3.0"))
-
-
-def _window_quiet(hw: "dict | None") -> bool:
-    """Quiet = streaming RATIO >= 0.7 AND absolute wall near baseline."""
-    return bool(
-        hw
-        and hw.get("mem", 0.0) >= 0.7
-        and hw.get("mem_wall_n", float("inf")) <= QUIET_WALL_S
-    )
-
-
-def run_scaling(
-    n: int = 4,
-    quiet_wait: "float | None" = None,
-    budget: "float | None" = None,
-    convs: "str | None" = None,
-) -> dict | None:
-    """Two-cluster-size evidence (BASELINE: efficiency >= 0.8 from N to 4N
-    executors).  No real cluster in this sandbox, so the same job runs at
-    two parallelism levels — taskset-pinned local[N] vs local[4N] in fresh
-    JVMs — on identical input; configs are interleaved and each keeps its
-    best trial (co-tenant noise on this box varies runs up to 3x).
-    Efficiency = rate(4N) / (4 * rate(N)).
-
-    The scaling input is LARGER than the main-suite pipeline input
-    (default 90k convs ≈ 675k turns): per-job fixed overhead (stage
-    scheduling, the final small-stage barrier) must be small relative to
-    parallel work or it masquerades as poor scaling — the criterion is
-    about throughput on big data, and a 4N-core run over a small input is
-    mostly overhead.
-
-    MINIMUM TWO SAMPLE PAIRS: round 3's artifact carried one pair per
-    config and landed in a bandwidth-saturated minute (hw mem ceiling
-    0.582), recording 0.668 against quiet-window readings of 0.896-0.925.
-    The pair floor is a SAMPLE-COUNT rule, not a result rule — trials
-    alternate on a fixed schedule and every sample is reported, so the
-    scheme still cannot select for a passing ratio.
-    """
-    import shutil
-    import subprocess
-
-    if shutil.which("taskset") is None:
-        return None
-    scaling_convs = convs or os.environ.get("SPARK_GRAFT_SCALING_CONVS", "90000")
-    min_pairs = int(os.environ.get("SPARK_GRAFT_SCALING_MIN_PAIRS", "2"))
+def _pipeline_trial(width: int, shuffle: int) -> dict:
+    """One scaling trial: a fresh ``bench.py --job pipeline`` child pinned
+    (whole process tree: JVM task threads and Python workers) to the first
+    ``width`` cores this process may use.  Returns the child's JSON line;
+    raises on a failed or unparseable run."""
     repo = os.path.dirname(os.path.abspath(__file__))
-    rates: dict[int, list[float]] = {n: [], n * 4: []}
-    trial_log: list[dict] = []
-    durs: dict[int, float] = {}
-    budget_s = (
-        budget
-        if budget is not None
-        else float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET", "700"))
-    )
-
-    hw_before = _hw_ceiling(n)
-    # Probe-gated start (bounded): a saturated co-tenant DRAM window caps
-    # ANY job's N->4N ratio at the window's own streaming ceiling — this
-    # box's wave oscillates 0.27-0.86 on minute scales, and all three
-    # round-4 readings (0.662, 0.59, 0.585) landed in windows whose every
-    # probe read < 0.65 while quiet-window readings under the identical
-    # protocol are 0.896-0.925.  Wait up to SPARK_GRAFT_SCALING_QUIET_WAIT
-    # seconds for a quiet probe (mem >= 0.7) before the FIRST trial.  The
-    # gate reads only the independent hardware probe — no pipeline rate
-    # exists yet to condition on — and expires on a fixed clock, so it can
-    # delay the measurement but cannot select its outcome; the probe that
-    # released (or timed out) the gate ships as hw_ceiling_before and the
-    # waited seconds ship as quiet_wait_s.
-    if quiet_wait is None:
-        quiet_wait = float(
-            os.environ.get("SPARK_GRAFT_SCALING_QUIET_WAIT", "600")
-        )
-    t_gate = time.time()
-    while (
-        hw_before
-        and not _window_quiet(hw_before)
-        and time.time() - t_gate < quiet_wait
-    ):
-        time.sleep(35)
-        hw_before = _hw_ceiling(n)
-    quiet_wait_used = round(time.time() - t_gate, 1)
-    t_start = time.time()
-
-    def trial(cpus: int) -> None:
-        env = dict(os.environ)
-        env["SPARK_GRAFT_CPUS"] = str(cpus)
-        env["SPARK_GRAFT_BENCH_CONVS"] = scaling_convs
-        if cpus == n * 4:
-            # WIDE-config noise straddle (count/time rule, never reads the
-            # ratio): a 16-core quiet DRAM window is strictly rarer than a
-            # 4-core one on a shared box, and in-JVM retimes cost seconds
-            # where a fresh trial costs minutes — so past the symmetric
-            # JIT-plateau depth the wide trial keeps drawing samples until
-            # a wall floor elapses.  max() over more samples approaches
-            # the noise-free rate from below; it cannot inflate.
-            env["SPARK_GRAFT_PIPE_RETIMES"] = os.environ.get(
-                "SPARK_GRAFT_PIPE_RETIMES_WIDE", "40"
-            )
-            env["SPARK_GRAFT_PIPE_WALL"] = os.environ.get(
-                "SPARK_GRAFT_PIPE_WALL_WIDE", "150"
-            )
-        # IDENTICAL plan at both cluster sizes: shuffle partitions are
-        # part of the job, not of the cluster — a real N-vs-4N-executor
-        # comparison varies only resources.  (Without this, the N-core
-        # config runs fewer/bigger shuffle tasks and banks a per-task
-        # overhead advantage that reads as anti-scaling.)
-        env["SPARK_GRAFT_SHUFFLE"] = "64"
-        # SYMMETRIC minimum retime depth: the JIT plateau needs ~5 in-JVM
-        # executions, so an asymmetric depth measures one config
-        # pre-plateau and biases the ratio (an understated N denominator
-        # inflates efficiency).  Both configs get the same plateau depth
-        # and stale rule; the wide config's extra post-plateau samples
-        # (set above) are noise-straddle draws, not a deeper plateau.
-        env.setdefault(
-            "SPARK_GRAFT_PIPE_RETIMES",
-            os.environ.get("SPARK_GRAFT_PIPE_RETIMES", "8"),
-        )
-        env["SPARK_GRAFT_PIPE_STALE"] = os.environ.get(
-            "SPARK_GRAFT_PIPE_STALE", "2"
-        )
-        cmd = [
-            "taskset", "-c", f"0-{cpus - 1}",
-            sys.executable, os.path.join(repo, "bench.py"),
-            "--job", "pipeline",
-        ]
-        t0 = time.time()
-        try:
-            out = subprocess.run(
-                cmd, capture_output=True, text=True, env=env, cwd=repo,
-                timeout=600, check=True,
-            )
-        except (subprocess.SubprocessError, OSError):
-            return  # keep whatever trials already finished
-        durs[cpus] = time.time() - t0
-        line = [
-            l for l in out.stdout.strip().splitlines() if l.startswith("{")
-        ][-1]
-        parsed = json.loads(line)
-        rates[cpus].append(parsed["pipeline_turns_per_sec"])
-        # cheap adjacent noise probe (seconds): gives the artifact a
-        # per-trial trace of the box's DRAM window, independent of the
-        # pipeline ratio itself
-        probe = _hw_ceiling(n)
-        trial_log.append(
-            {
-                "cpus": cpus,
-                "turns_per_sec": round(parsed["pipeline_turns_per_sec"], 1),
-                "sample_secs": parsed.get("pipeline_sample_secs", []),
-                "wall_s": round(durs[cpus], 1),
-                "hw_mem_after": probe.get("mem") if probe else None,
-                "hw_mem_wall_after": (
-                    probe.get("mem_wall_n") if probe else None
-                ),
-                "hw_quiet_after": _window_quiet(probe),
-            }
-        )
-
-    def best(cpus: int) -> float:
-        return max(rates[cpus], default=0.0)
-
-    def eff_now() -> float:
-        if not rates[n] or not rates[n * 4]:
-            return 0.0
-        return best(n * 4) / (4.0 * best(n))
-
-    # Interleaved trials at full retime depth (each trial's in-JVM retime
-    # loop spreads samples across this box's minute-scale co-tenant noise
-    # waves) on a FIXED schedule: symmetric until both configs hold
-    # min_pairs samples, then top-ups favor the WIDE config 2:1 — a
-    # quiet window for 16 pinned cores is strictly rarer than for 4 on a
-    # shared box, so equal draw counts bias best-of-per-config DOWN (the
-    # narrow config's quiet-window best arrives early; the wide config's
-    # needs more attempts).  The schedule depends only on sample COUNTS
-    # and the budget, never on the measured ratio, and every sample is
-    # reported — the scheme cannot select for a passing efficiency.  A
-    # hard 1.6x budget backstop bounds the worst case below the floor.
-    def wide_quiet_seen() -> bool:
-        """True once some WIDE trial ran adjacent to a quiet DRAM probe
-        (ratio >= 0.7 AND near-baseline absolute wall — ratio alone reads
-        ~1.0 under TOTAL saturation) — the independent signal that the
-        wide config got at least one fair window.  Used only to EXTEND
-        the sampling budget (never to stop early or drop samples), so the
-        rule cannot select for a passing ratio."""
-        return any(
-            t["cpus"] == n * 4 and t.get("hw_quiet_after")
-            for t in trial_log
-        )
-
-    trial(n)
-    trial(n * 4)
-    while rates[n] and rates[n * 4]:
-        pairs_done = min(len(rates[n]), len(rates[n * 4]))
-        if pairs_done < min_pairs:
-            nxt = n if len(rates[n]) <= len(rates[n * 4]) else n * 4
-        else:
-            nxt = n if len(rates[n * 4]) >= 2 * len(rates[n]) else n * 4
-        expected = durs.get(nxt, 300.0)
-        elapsed = time.time() - t_start
-        # saturation-conditioned extension: while NO wide trial has seen
-        # a quiet adjacent probe, stretch the soft budget up to the 2x
-        # hard cap so the schedule keeps straddling the bandwidth wave
-        # (conditioned on the probe only — the measured ratio is never
-        # read by any sampling decision)
-        soft = budget_s if wide_quiet_seen() else 2.0 * budget_s
-        if pairs_done >= min_pairs and elapsed + expected > soft:
-            break
-        if elapsed + expected > 2.0 * budget_s:
-            break  # hard backstop even below the pair floor
-        trial(nxt)
-    if not rates[n] or not rates[n * 4]:
-        return None
-    hw_after = _hw_ceiling(n)
-    mems = [h["mem"] for h in (hw_before, hw_after) if h and "mem" in h]
-    walls = [
-        h["mem_wall_n"]
-        for h in (hw_before, hw_after)
-        if h and h.get("mem_wall_n") is not None
+    cores = sorted(os.sched_getaffinity(0))[:width]
+    env = dict(os.environ)
+    env["SPARK_GRAFT_CPUS"] = str(width)
+    env["SPARK_GRAFT_SHUFFLE"] = str(shuffle)
+    cmd = [
+        "taskset", "-c", ",".join(map(str, cores)),
+        sys.executable, os.path.join(repo, "bench.py"), "--job", "pipeline",
     ]
-    result = {
-        "protocol": (
-            "taskset-pinned, interleaved, symmetric JIT-plateau depth + "
-            "wall-floor noise-straddle retimes on the wide config, "
-            "best of %d N-trials / %d 4N-trials (symmetric to min %d "
-            "pairs, then 2:1 wide-config top-up — a 16-core quiet window "
-            "is rarer than a 4-core one; per-trial DRAM probes attached; "
-            "budget extends toward the 2x cap only while no wide trial "
-            "saw a quiet adjacent probe; every sampling decision is "
-            "count/probe-driven, never ratio-conditioned, all samples "
-            "reported)"
-            % (len(rates[n]), len(rates[n * 4]), min_pairs)
-        ),
+    out = subprocess.run(
+        cmd, capture_output=True, text=True, env=env, cwd=repo,
+        timeout=900, check=True,
+    )
+    lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
+    return json.loads(lines[-1] if lines else "")
+
+
+def run_scaling(cpus: int | None = None, trial=_pipeline_trial) -> dict | None:
+    """N -> 4N core scaling (BASELINE: efficiency >= 0.8), N = cpus // 4.
+    No real cluster here, so the same job runs pinned to N and to 4N cores,
+    each trial in a fresh JVM (``trial(width, shuffle)``), on identical
+    input and one shuffle-partition count.  SCALING_PAIRS pairs alternate
+    N,4N / 4N,N / ...; the schedule is fixed before the first trial and
+    nothing measured changes what runs next.  Efficiency = median(4N trial
+    rates) / (4 * median(N trial rates)); every rate and pass time ships.
+    None when there is no 4N-core width to pin: N < 1, fewer than 4N usable
+    cores, or no ``taskset``."""
+    n = (CPUS if cpus is None else cpus) // 4
+    usable = len(os.sched_getaffinity(0))
+    if n < 1 or usable < 4 * n or shutil.which("taskset") is None:
+        return None
+    shuffle = max(4 * n, 8)
+    order = []
+    for k in range(SCALING_PAIRS):
+        order += [n, 4 * n] if k % 2 == 0 else [4 * n, n]
+    runs: dict[int, list[dict]] = {n: [], 4 * n: []}
+    failed = []
+    t0 = time.time()
+    for width in order:
+        try:
+            runs[width].append(trial(width, shuffle))
+        except (subprocess.SubprocessError, OSError, ValueError) as e:
+            failed.append({"cpus": width, "error": repr(e)[-300:]})
+
+    def field(width: int, key: str) -> list:
+        return [r[key] for r in runs[width]]
+
+    rate_n, rate_4n = (
+        statistics.median(field(w, "pipeline_turns_per_sec")) if runs[w] else None
+        for w in (n, 4 * n)
+    )
+    return {
         "cpus_n": n,
-        "cpus_4n": n * 4,
-        "scaling_convs": int(scaling_convs),
-        "quiet_wait_s": quiet_wait_used,
-        "turns_per_sec_n": round(best(n), 1),
-        "turns_per_sec_4n": round(best(n * 4), 1),
-        "samples_n": [round(r, 1) for r in rates[n]],
-        "samples_4n": [round(r, 1) for r in rates[n * 4]],
-        "trials": trial_log,
-        "efficiency": round(eff_now(), 3),
-        "hw_ceiling": hw_after or hw_before,
-        "hw_ceiling_before": hw_before,
-        "hw_ceiling_after": hw_after,
-        # mem ceiling < 0.6 at either probe = the window itself couldn't
-        # scale a pure streaming kernel; a near-baseline RATIO with a huge
-        # absolute wall = TOTAL saturation (both widths equally starved) —
-        # either way, read the pipeline ratio with that
-        "window_saturated": (bool(mems) and min(mems) < 0.6)
-        or (bool(walls) and max(walls) > QUIET_WALL_S),
-        # did any wide trial run adjacent to a quiet (mem >= 0.7) probe?
-        "wide_quiet_seen": wide_quiet_seen(),
+        "cpus_4n": 4 * n,
+        "convs": PIPELINE_CONVS,
+        "shuffle_partitions": shuffle,
+        "order": order,
+        "samples_n": field(n, "pipeline_turns_per_sec"),
+        "samples_4n": field(4 * n, "pipeline_turns_per_sec"),
+        "pass_secs_n": field(n, "pipeline_sample_secs"),
+        "pass_secs_4n": field(4 * n, "pipeline_sample_secs"),
+        "warmup_secs_n": field(n, "pipeline_warmup_secs"),
+        "warmup_secs_4n": field(4 * n, "pipeline_warmup_secs"),
+        "turns_per_sec_n": rate_n,
+        "turns_per_sec_4n": rate_4n,
+        "efficiency": (
+            round(rate_4n / (4 * rate_n), 3) if rate_n and rate_4n else None
+        ),
+        "failed": failed,
+        "wall_s": round(time.time() - t0, 1),
     }
-    return result
 
 
 def main() -> None:
@@ -460,125 +257,43 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    pipe = pipeline_samples(spark)
+    if args.job == "pipeline":
+        spark.stop()
+        # consumed by run_scaling's parser: sample lists stay inline
+        print(json.dumps({"cpus": CPUS, **pipe}))
+        return
+
+    # best-of-2 per query, second pass in reverse order
     timings: dict[str, float] = {}
-
-    pipe_sec, n_turns, retime_pipeline = run_pipeline(spark)
-
+    for name in HEADLINE + HEADLINE[::-1]:
+        t0 = time.time()
+        force(QUERIES[name](spark, SF_DIR))
+        timings[name] = min(timings.get(name, 1e9), round(time.time() - t0, 3))
+    timings["transcript_pipeline"] = pipe["pipeline_sec"]
+    skip_scaling = os.environ.get("SPARK_GRAFT_SKIP_SCALING") == "1"
     size_scaling = None
-    if args.job == "all":
-        # best-of-2 per query, second pass in reverse order, with the
-        # pipeline re-timed between and after the passes: co-tenant noise
-        # on this box comes in minute-scale waves, so every measurement
-        # gets samples from well-separated time windows
-        for name in HEADLINE:
-            t0 = time.time()
-            force(QUERIES[name](spark, SF_DIR))
-            timings[name] = round(time.time() - t0, 3)
-        pipe_sec = min(pipe_sec, retime_pipeline())
-        for name in reversed(HEADLINE):
-            t0 = time.time()
-            force(QUERIES[name](spark, SF_DIR))
-            timings[name] = min(timings[name], round(time.time() - t0, 3))
-        pipe_sec = min(pipe_sec, retime_pipeline())
-        if os.environ.get("SPARK_GRAFT_SKIP_SIZE_SCALING") != "1":
-            size_scaling = run_size_scaling(spark, n_turns, pipe_sec)
-    else:
-        # scaling trials: repeated timed runs in the same JVM strip the
-        # residual first-run effects (page-in of the checkpointed input,
-        # remaining JIT — C2 keeps recompiling the codegen'd stages for
-        # several executions) that otherwise masquerade as poor rates.
-        # Adaptive: keep re-timing while the best improves > 2%, so both
-        # cluster sizes are measured at their JIT-warm steady state.
-        # A retimed sample in a warm JVM costs seconds where a fresh
-        # subprocess trial costs minutes, so in-JVM repeats are the cheap
-        # way to both (a) reach the JIT-warm plateau and (b) spread
-        # samples across this box's minute-scale co-tenant noise waves.
-        # run_scaling gives BOTH configs the same depth and stale rule
-        # (asymmetric depth measures one config pre-plateau and biases
-        # the efficiency ratio); the per-sample list is emitted for the
-        # artifact.
-        max_retimes = int(os.environ.get("SPARK_GRAFT_PIPE_RETIMES", "5"))
-        max_stale = int(os.environ.get("SPARK_GRAFT_PIPE_STALE", "2"))
-        # noise-straddle wall floor: keep drawing post-plateau samples
-        # until this many seconds of retiming have elapsed, even when the
-        # stale rule says the JIT plateau is reached.  best-of (max rate)
-        # can only approach the noise-free rate FROM BELOW, so extra
-        # samples never inflate a config — they exist to let a trial
-        # straddle this box's minute-scale DRAM-bandwidth waves instead
-        # of exiting early with every sample clipped by the same wave.
-        wall_floor = float(os.environ.get("SPARK_GRAFT_PIPE_WALL", "0"))
-        stale = 0
-        pipe_samples = [round(pipe_sec, 3)]
-        t_loop = time.time()
-        for _ in range(max_retimes):
-            t = retime_pipeline()
-            pipe_samples.append(round(t, 3))
-            stale = 0 if t < pipe_sec * 0.98 else stale + 1
-            pipe_sec = min(pipe_sec, t)
-            if stale >= max_stale and time.time() - t_loop >= wall_floor:
-                break  # warm plateau AND past the straddle floor
-    timings["transcript_pipeline"] = round(pipe_sec, 3)
+    if not skip_scaling:
+        size_scaling = run_size_scaling(
+            spark, pipe["pipeline_turns"], pipe["pipeline_sec"]
+        )
     spark.stop()
 
-    # scaling subprocesses run LAST, after the main JVM has released its
-    # 32 threads
-    scaling = None
-    if args.job == "all" and os.environ.get("SPARK_GRAFT_SKIP_SCALING") != "1":
-        # base width N (wide = 4N).  The default 4->16 maximizes parallel
-        # work; 2->8 halves the wide config's DRAM footprint — useful when
-        # the co-tenant streaming wave never opens a 16-core quiet window
-        # (both satisfy the brief's "N and 4N cores" form).
-        scaling = run_scaling(
-            n=int(os.environ.get("SPARK_GRAFT_SCALING_N", "4"))
-        )
-        # Narrow-pair fallback: when the primary phase's own hardware
-        # probes say the whole run sat inside a saturated co-tenant DRAM
-        # window (window_saturated AND efficiency below the criterion),
-        # re-measure at 2->8 cores on the same job.  The wide 8-core
-        # config takes a quarter of the box's one virtualized memory
-        # subsystem where 16 cores take half — measured in a saturated
-        # window, 2->8 reads ~1.0 while 4->16 reads 0.58-0.73, isolating
-        # plan scaling from the co-tenant wave (real 4N executors do not
-        # share one DRAM bus at all; the brief's criterion is "N and 4N
-        # cores" with the width free).  This conditions WALLCLOCK, not
-        # samples: both measurements ship in full, each with its own
-        # per-trial probe flags — nothing is replaced or dropped.
-        if (
-            scaling is not None
-            and scaling.get("window_saturated")
-            and scaling["efficiency"] < 0.8
-            and scaling["cpus_n"] > 2
-            and os.environ.get("SPARK_GRAFT_SCALING_FALLBACK", "1") != "0"
-        ):
-            fb = run_scaling(
-                n=2,
-                quiet_wait=0,  # window state known saturated; start now
-                budget=float(
-                    os.environ.get("SPARK_GRAFT_SCALING_FB_BUDGET", "550")
-                ),
-                convs=os.environ.get("SPARK_GRAFT_SCALING_FB_CONVS", "60000"),
-            )
-            if fb is not None:
-                scaling["fallback_2_8"] = fb
+    # core-scaling children run after the main JVM has released its cores
+    scaling = None if skip_scaling else run_scaling()
 
-    total = round(sum(timings.values()), 3)
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     result = {
         "metric": "headline_suite_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cpus": CPUS,
-        "pipeline_turns": n_turns,
-        "pipeline_turns_per_sec": round(n_turns / pipe_sec, 1),
+        "pipeline_turns": pipe["pipeline_turns"],
+        "pipeline_turns_per_sec": pipe["pipeline_turns_per_sec"],
+        "pipeline_sample_secs": pipe["pipeline_sample_secs"],
     }
-    if args.job == "pipeline":
-        # subprocess mode (consumed by run_scaling's parser, not the
-        # round driver): sample list stays inline
-        result["pipeline_sample_secs"] = pipe_samples
-        print(json.dumps(result))
-        return
     if size_scaling is not None:
         result["size_scaling"] = size_scaling
     if scaling is not None:
@@ -590,17 +305,17 @@ def main() -> None:
 #: protocol prose) outgrew the driver's stdout capture and the artifact
 #: recorded parsed=null — scalars only below this size, everything
 #: verbose goes to BENCH_DETAIL.json
-MAX_DRIVER_LINE = int(os.environ.get("SPARK_GRAFT_MAX_DRIVER_LINE", "1800"))
+MAX_DRIVER_LINE = 1800
 
 DETAIL_FILE = "BENCH_DETAIL.json"
 
 
 def _compact_for_driver(result: dict) -> dict:
-    """Write the FULL result (per-trial logs, DRAM probe traces, protocol
-    text, hw ceilings) to ``BENCH_DETAIL.json`` and return a scalars-only
-    line guaranteed to fit the driver's capture.  Lesson of round 4:
-    `parsed: null` loses the whole round's numbers — the driver-facing
-    JSON must stay small no matter how much evidence the run gathered."""
+    """Write the FULL result (every pass time of every trial) to
+    ``BENCH_DETAIL.json`` and return a scalars-only line guaranteed to fit
+    the driver's capture.  Lesson of round 4: `parsed: null` loses the
+    whole round's numbers — the driver-facing JSON must stay small no
+    matter how much evidence the run gathered."""
     repo = os.path.dirname(os.path.abspath(__file__))
     try:
         with open(os.path.join(repo, DETAIL_FILE), "w") as f:
@@ -629,28 +344,13 @@ def _compact_for_driver(result: dict) -> dict:
     s = result.get("scaling")
     if s is not None:
         compact["scaling"] = {
-            "efficiency": s["efficiency"],
-            "cpus_n": s["cpus_n"],
-            "cpus_4n": s["cpus_4n"],
-            "turns_per_sec_n": round(s["turns_per_sec_n"]),
-            "turns_per_sec_4n": round(s["turns_per_sec_4n"]),
-            "samples_n": [round(r) for r in s["samples_n"]][:8],
-            "samples_4n": [round(r) for r in s["samples_4n"]][:8],
-            "window_saturated": s["window_saturated"],
-            "wide_quiet_seen": s["wide_quiet_seen"],
-            "quiet_wait_s": s["quiet_wait_s"],
+            k: s[k]
+            for k in (
+                "efficiency", "cpus_n", "cpus_4n", "turns_per_sec_n",
+                "turns_per_sec_4n", "samples_n", "samples_4n", "wall_s",
+            )
         }
-        fb = s.get("fallback_2_8")
-        if fb is not None:
-            compact["scaling"]["fallback_2_8"] = {
-                "efficiency": fb["efficiency"],
-                "cpus_n": fb["cpus_n"],
-                "cpus_4n": fb["cpus_4n"],
-                "turns_per_sec_n": round(fb["turns_per_sec_n"]),
-                "turns_per_sec_4n": round(fb["turns_per_sec_4n"]),
-                "pairs": min(len(fb["samples_n"]), len(fb["samples_4n"])),
-                "window_saturated": fb["window_saturated"],
-            }
+        compact["scaling"]["failed"] = len(s["failed"])
         if detail_ok:
             compact["scaling"]["detail"] = DETAIL_FILE
     elif detail_ok:

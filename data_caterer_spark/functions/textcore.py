@@ -9,8 +9,13 @@ rows".  No pyspark imports here.
 Regex patterns are authored in the common subset of Java regex (Spark
 ``regexp_replace``/``RLIKE``) and Python ``re``: explicit ASCII classes, no
 ``\\d``/``\\s`` shorthands (their Unicode semantics differ between engines),
-no lookaround.  The scrub bank order is TOTAL and documented — scrubbing is
-sequential, so order is part of the spec (SURVEY.md §7 "hard parts").
+no lookaround.  One construct still differs: ``\\b`` (the card, SSN, phone
+and IP patterns).  Java's word characters are the
+``Character.isLetterOrDigit`` ones, Python's every ``str.isalnum()`` one,
+so next to a character such as ``²`` a boundary can match in one engine
+and not the other.  The scrub bank order is TOTAL and documented —
+scrubbing is sequential, so order is part of the spec (SURVEY.md §7 "hard
+parts").
 
 The langid model is an n-gram-profile classifier standing in for fastText
 (the fasttext lib is not in this image).  It keeps fastText's deployment

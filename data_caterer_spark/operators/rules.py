@@ -282,12 +282,15 @@ class RuleSet:
         return len(self.rules)
 
     def hits_column(self) -> Column:
-        hits = [
-            F.when(r.column == F.lit(False), F.lit(r.rule_id)) for r in self.rules
-        ]
-        return F.array_compact(F.array(*hits)) if hits else F.array().cast(
-            "array<string>"
+        if not self.rules:
+            return F.array().cast("array<string>")
+        # one SQL expression: each Column operation is a py4j round trip,
+        # and the pipeline rebuilds this column on every run
+        hits = ", ".join(
+            f"CASE WHEN ({r.expr}) = false THEN {lit_sql(r.rule_id)} END"
+            for r in self.rules
         )
+        return F.expr(f"array_compact(array({hits}))")
 
     def keep_column(self, hits_col: Column | None = None) -> Column:
         drop_ids = [r.rule_id for r in self.rules if r.severity == SEVERITY_DROP]
