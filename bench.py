@@ -38,10 +38,11 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 # transcripts synthesized for the pipeline job: ~7.5 turns/conv, so ~150k
 # turns.  Pinned to one core of a 4-vCPU host, the first two passes took
-# 37-39 s and 25-27 s (JIT ramp), the next three 19-21 s; the untimed
-# WARMUP_PASSES absorb the ramp.
+# 37-39 s and 25-27 s (JIT ramp), and the next three still fell pass by
+# pass (21.3 -> 20.7 -> 20.1 s); the untimed WARMUP_PASSES absorb the ramp
+# at both widths.
 PIPELINE_CONVS = 20_000
-WARMUP_PASSES = 2
+WARMUP_PASSES = 4
 TIMED_PASSES = 3
 
 # input-size curve: the same pipeline at growing inputs in the JIT-warm JVM

@@ -18,7 +18,7 @@ new-build requirement of the training-data brief, built Spark-first:
   shuffle-free — the treeAggregate shape, right at small feature
   counts) or sparse (nonzero ``(bucket, sum)`` pairs + ONE combinable
   ``groupBy`` so nothing n_features-dense crosses to the driver — the
-  fastText-scale shape, default above ``SPARSE_FEATURES_THRESHOLD``);
+  fastText-scale shape, used above ``SPARSE_FEATURES_THRESHOLD``);
 * **infer** — broadcast weights, one Arrow crossing, pure per-row
   scoring.
 
@@ -34,9 +34,9 @@ weight TRAJECTORY is reproducible.
 At 10^9+ documents and n_features beyond ~2^20, the dense partial row
 (8 B x n_features per partition) stops being free: fastText's default
 2^21 buckets x 10^4-10^5 partitions would move 100s of GB to one
-process.  ``partial_mode="auto"`` therefore switches to the sparse
-(bucket, sum) + combinable-groupBy reduction above
-``SPARSE_FEATURES_THRESHOLD`` — same integer sums, same weight
+process.  ``train`` therefore uses the sparse (bucket, sum) +
+combinable-groupBy reduction whenever ``n_features >
+SPARSE_FEATURES_THRESHOLD`` — same integer sums, same weight
 trajectory, bounded driver traffic.
 """
 
@@ -248,8 +248,8 @@ _BIAS_KEY, _LOSS_KEY, _NDOCS_KEY = -1, -2, -3
 #: above this feature count the dense per-partition partial row
 #: (8 B x n_features each, collected to the driver) stops being free —
 #: fastText's own default is 2^21 bigram buckets x 10^4-10^5 partitions
-#: = 100s of GB to one process — so ``partial_mode="auto"`` switches to
-#: the sparse (bucket, sum) + ONE combinable groupBy reduction
+#: = 100s of GB to one process — so ``train`` switches to the sparse
+#: (bucket, sum) + ONE combinable groupBy reduction
 SPARSE_FEATURES_THRESHOLD = 65536
 
 
@@ -362,36 +362,33 @@ def train(
     text_col: str = "text",
     include_bigrams: bool = True,
     features: "DataFrame | None" = None,
-    partial_mode: str = "auto",
 ) -> QualityClassifier:
     """Batch-GD training: per iteration ONE pass emitting int64 partial
     gradients per partition; the driver sums the integers
     (order-independent) and takes the float step.
 
-    ``partial_mode`` picks the reduction shape — identical bits either
+    ``n_features`` picks the reduction shape — identical bits either
     way, different wire cost:
 
-    * ``"dense"`` — one ``n_features``-long int64 row per partition,
-      summed on the driver.  Shuffle-free; right while
-      8 B x n_features x n_partitions fits one process.
-    * ``"sparse"`` — each partition emits only its nonzero
+    * up to ``SPARSE_FEATURES_THRESHOLD`` — dense: one
+      ``n_features``-long int64 row per partition, summed on the driver.
+      Shuffle-free; right while 8 B x n_features x n_partitions fits one
+      process.
+    * above it — sparse: each partition emits only its nonzero
       ``(bucket, sum)`` pairs (+ 3 sentinel scalars) and ONE combinable
       ``groupBy(bucket).sum`` reduces them cluster-side; the driver
       collects at most nnz+3 two-long rows.  Right at fastText-scale
       feature counts (2^21) x 10^4+ partitions, where the dense shape
       would move 100s of GB to the driver.
-    * ``"auto"`` (default) — sparse when ``n_features >
-      SPARSE_FEATURES_THRESHOLD``, dense otherwise.
 
     ``features`` — a pre-built (and ideally persisted) :func:`featurize`
     frame.  Featurization is the expensive text pass; a caller that also
     scores should build it ONCE, train with it, then score via
     :func:`infer_from_features` instead of re-featurizing in
     :func:`infer`.  The caller owns its persistence."""
-    if partial_mode not in ("auto", "dense", "sparse"):
-        raise ValueError(f"unknown partial_mode {partial_mode!r}")
-    use_sparse = partial_mode == "sparse" or (
-        partial_mode == "auto" and n_features > SPARSE_FEATURES_THRESHOLD
+    reduce = (
+        _reduce_sparse if n_features > SPARSE_FEATURES_THRESHOLD
+        else _reduce_dense
     )
     owns_feat = features is None
     feat = (
@@ -410,7 +407,6 @@ def train(
     try:
         for _ in range(iters):
             bc = spark.sparkContext.broadcast((w.tobytes(), bias))
-            reduce = _reduce_sparse if use_sparse else _reduce_dense
             grad, bias_g, loss, n = reduce(feat, bc, n_features)
             if n == 0:
                 break

@@ -695,16 +695,15 @@ def media_resize_golden_sql(
 # which are flag-severity — keep/drop is unaffected, hits lists shrink)
 # --------------------------------------------------------------------------
 
-_CROSS_TURN_RULES = ("role_alternation", "turn_contiguous", "ts_monotone")
-
 
 def _streaming_labeled(n_convs: int, seed: int):
     from .fixtures import generate_transcripts
     from .labeler import ReferenceLabeler
+    from .plans.pipeline import CROSS_TURN_RULE_IDS
 
     rows = generate_transcripts(n_convs=n_convs, seed=seed)
     for t in ReferenceLabeler().label_rows(rows):
-        hits = [h for h in t.rule_hits if h not in _CROSS_TURN_RULES]
+        hits = [h for h in t.rule_hits if h not in CROSS_TURN_RULE_IDS]
         digest = (
             None
             if t.scrubbed_text is None

@@ -151,7 +151,7 @@ class ReferenceLabeler:
         hits = [rid for rid, v, _d in outcomes if v is False]
         drop = any(v is False for _rid, v, d in outcomes if d)
         scrubbed, scrub_hits = tc.scrub_text(row.get("text"))
-        if self.config.drop_on_toxicity and TOXICITY_RULE_ID in scrub_hits:
+        if TOXICITY_RULE_ID in scrub_hits:
             drop = True
         return LabeledTurn(
             conv_id=row["conv_id"],

@@ -24,10 +24,10 @@ docs, e.g. "the quick brown") are the skew risk; `max_block` caps block
 size by dropping top-frequency shingles from *blocking only* (they still
 count toward verification), the standard prefix-filter trick.
 
-Signature computation (MinHash permutation grids, SimHash bit votes)
-defaults to vectorized numpy over Arrow batches — measured 40-100x faster
-than the interpreted Catalyst lambda folds; zero-Python JVM variants are
-retained behind ``impl='jvm'``.  Candidate generation, verification, and
+Signature computation (MinHash permutation grids, SimHash bit votes) is
+vectorized numpy over Arrow batches — measured 40-100x faster than the
+interpreted Catalyst lambda folds — over crc32 shingle hashes that the
+golden replays reproduce.  Candidate generation, verification, and
 clustering stay JVM-side (equi-joins + aggregates).
 """
 
@@ -461,55 +461,31 @@ def with_minhash_signature(
     num_hashes: int = 64,
     k: int = 3,
     seed: int = 42,
-    impl: str = "numpy",
 ) -> DataFrame:
     """Add an ``array<bigint>`` MinHash signature without explode/shuffle.
 
-    ``impl='numpy'`` (default): one Arrow round trip; the permutation
-    matrix ``(a*h + b) mod p`` evaluates as a numpy broadcast over the
-    (num_hashes x shingles) grid — measured ~40x faster than the Catalyst
-    fold (lambda HOFs are interpreted per element, ~3.5 ms/doc).
-    ``impl='jvm'``: zero-Python fallback — materializes xxhash64 base
-    hashes once (the column MUST stay multiply-referenced so
-    CollapseProject keeps it; inlined it re-tokenizes the text 64x).
+    One Arrow round trip; the permutation matrix ``(a*h + b) mod p``
+    evaluates as a numpy broadcast over the (num_hashes x shingles) grid
+    — measured ~40x faster than a Catalyst fold (lambda HOFs are
+    interpreted per element, ~3.5 ms/doc).
     """
-    if impl == "numpy":
-        params = np.array(_perm_params(num_hashes, seed), dtype=np.int64)
-        a_vec, b_vec = params[:, 0][:, None], params[:, 1][:, None]
+    params = np.array(_perm_params(num_hashes, seed), dtype=np.int64)
+    a_vec, b_vec = params[:, 0][:, None], params[:, 1][:, None]
 
-        @pandas_udf("array<bigint>")
-        def _sig(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            for series in batches:
-                out = []
-                for t in series:
-                    h = _py_shingle_hashes(None if pd.isna(t) else t, k)
-                    if h.size == 0:
-                        out.append(np.full(num_hashes, _MERSENNE, dtype=np.int64))
-                        continue
-                    # (num_hashes, n_shingles) grid; int64 safe: p^2 < 2^63
-                    out.append(((a_vec * h[None, :] + b_vec) % _MERSENNE).min(axis=1))
-                yield pd.Series(out)
+    @pandas_udf("array<bigint>")
+    def _sig(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        for series in batches:
+            out = []
+            for t in series:
+                h = _py_shingle_hashes(None if pd.isna(t) else t, k)
+                if h.size == 0:
+                    out.append(np.full(num_hashes, _MERSENNE, dtype=np.int64))
+                    continue
+                # (num_hashes, n_shingles) grid; int64 safe: p^2 < 2^63
+                out.append(((a_vec * h[None, :] + b_vec) % _MERSENNE).min(axis=1))
+            yield pd.Series(out)
 
-        return df.withColumn(out_col, _sig(F.col(text_col)))
-    base_col = "__mh_base"
-    df = df.withColumn(
-        base_col,
-        F.transform(
-            word_shingles(text_col, k),
-            lambda s: F.abs(F.xxhash64(s)) % F.lit(_MERSENNE),
-        ),
-    )
-    mins = []
-    for a, b in _perm_params(num_hashes, seed):
-        mins.append(
-            F.array_min(
-                F.transform(
-                    F.col(base_col),
-                    lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE),
-                )
-            )
-        )
-    return df.withColumn(out_col, F.array(*mins)).drop(base_col)
+    return df.withColumn(out_col, _sig(F.col(text_col)))
 
 
 def minhash_lsh_pairs(
@@ -611,39 +587,8 @@ SIMHASH_BITS = 64
 _CHUNKS = 4  # 4 x 16-bit chunks => finds all pairs with hamming <= 3
 
 
-def _simhash_votes(text: str | Column, k: int) -> Column:
-    """Per-bit vote sums: array<int>[64].  Each shingle votes +1/-1 per bit
-    of its xxhash64; folded with ``aggregate`` — no explode, no shuffle, no
-    Python.  Shift amounts must be Python ints (shiftright takes no Column
-    numBits), so the bit vector is unrolled at plan-build time."""
-    hashes = F.transform(word_shingles(text, k), lambda s: F.xxhash64(s))
-    zero = F.array_repeat(F.lit(0), SIMHASH_BITS)
-    return F.aggregate(
-        hashes,
-        zero,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
-                    ).otherwise(-1)
-                    for i in range(SIMHASH_BITS)
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-
-
-def _bit_literal(i: int) -> Column:
-    # 1<<63 does not fit a positive signed long; use its two's complement
-    v = (1 << i) if i < 63 else -(1 << 63)
-    return F.lit(v).cast("long")
-
-
 def _py_shingle_hashes64(text: str | None, k: int) -> np.ndarray:
-    """64-bit shingle hashes (two salted crc32 halves), numpy path."""
+    """64-bit shingle hashes (two salted crc32 halves)."""
     if text is None:
         return np.empty(0, dtype=np.uint64)
     toks = text.lower().split()
@@ -666,47 +611,33 @@ def with_simhash(
     text_col: str = "text",
     out_col: str = "simhash",
     k: int = 2,
-    impl: str = "numpy",
 ) -> DataFrame:
     """Add a 64-bit SimHash fingerprint column (Charikar construction).
 
-    ``impl='numpy'`` (default): per Arrow batch, the vote matrix is one
-    broadcast ``(shingles x 64) -> sum -> sign`` in numpy (~100x faster
-    than the interpreted Catalyst fold, measured 3.6 ms/doc there).
-    ``impl='jvm'``: zero-Python fallback — two stacked projections:
-    materialize the vote array once, then fold sign bits into a long
-    (inlining the aggregate 64x would explode the expression tree).
+    Per Arrow batch, the vote matrix is one broadcast
+    ``(shingles x 64) -> sum -> sign`` in numpy (~100x faster than a
+    Catalyst fold, measured 3.6 ms/doc there).
     """
-    if impl == "numpy":
-        bit_idx = np.arange(SIMHASH_BITS, dtype=np.uint64)
+    bit_idx = np.arange(SIMHASH_BITS, dtype=np.uint64)
 
-        @pandas_udf("long")
-        def _fp(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            for series in batches:
-                out = np.zeros(len(series), dtype=np.int64)
-                for j, t in enumerate(series):
-                    h = _py_shingle_hashes64(None if pd.isna(t) else t, k)
-                    if h.size == 0:
-                        continue
-                    bits = ((h[:, None] >> bit_idx[None, :]) & 1).astype(np.int64)
-                    votes = (2 * bits - 1).sum(axis=0)
-                    out[j] = np.int64(
-                        np.bitwise_or.reduce(
-                            np.where(votes > 0, np.uint64(1) << bit_idx, np.uint64(0))
-                        ).astype(np.uint64).view(np.int64)
-                    )
-                yield pd.Series(out)
+    @pandas_udf("long")
+    def _fp(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        for series in batches:
+            out = np.zeros(len(series), dtype=np.int64)
+            for j, t in enumerate(series):
+                h = _py_shingle_hashes64(None if pd.isna(t) else t, k)
+                if h.size == 0:
+                    continue
+                bits = ((h[:, None] >> bit_idx[None, :]) & 1).astype(np.int64)
+                votes = (2 * bits - 1).sum(axis=0)
+                out[j] = np.int64(
+                    np.bitwise_or.reduce(
+                        np.where(votes > 0, np.uint64(1) << bit_idx, np.uint64(0))
+                    ).astype(np.uint64).view(np.int64)
+                )
+            yield pd.Series(out)
 
-        return df.withColumn(out_col, _fp(F.col(text_col)))
-    votes = "__simhash_votes"
-    df = df.withColumn(votes, _simhash_votes(text_col, k))
-    fp = F.lit(0).cast("long")
-    for i in range(SIMHASH_BITS):
-        fp = fp.bitwiseOR(
-            F.when(F.element_at(F.col(votes), i + 1) > 0, _bit_literal(i))
-            .otherwise(F.lit(0).cast("long"))
-        )
-    return df.withColumn(out_col, fp).drop(votes)
+    return df.withColumn(out_col, _fp(F.col(text_col)))
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -1294,50 +1225,6 @@ def _bloom_member_broadcast(
     return df.withColumn(out_col, hit)
 
 
-def _bloom_member_join(
-    df: DataFrame,
-    bitmap_df: DataFrame,
-    span_col: str,
-    n_bits: int,
-    n_hashes: int,
-    out_col: str,
-    key_cols: "list[str]",
-) -> DataFrame:
-    """Membership via an equi-join on the bitmap WORD — the 100 TB path.
-
-    A 10^12-paragraph history needs m ~ 2^40 bits = 128 GiB of bitmap:
-    far past broadcast, trivial as a (word, bits) table co-partitioned
-    with the probe positions.  Probes explode to (key, word, mask) longs,
-    join the bitmap on ``word`` (plain equi-join, AQE-safe: word ids are
-    uniform by construction of the hash), and a span is a member iff ALL
-    its ``n_hashes`` probes found their bit set.  Only ids and longs
-    shuffle — never text."""
-    probes = df.select(
-        *[F.col(c) for c in key_cols],
-        F.explode(
-            bloom_positions(span_col, n_bits, n_hashes)
-        ).alias("pos"),
-    ).select(
-        *key_cols,
-        F.floor(F.col("pos") / F.lit(64)).cast("long").alias("word"),
-        F.call_function(
-            "shiftleft", F.lit(1).cast("long"), F.pmod(F.col("pos"), F.lit(64))
-        ).alias("mask"),
-    )
-    joined = probes.join(bitmap_df, "word", "left").withColumn(
-        "__hit",
-        F.when(
-            F.col("bits").isNotNull()
-            & (F.col("bits").bitwiseAND(F.col("mask")) != 0),
-            1,
-        ).otherwise(0),
-    )
-    agg = joined.groupBy(*key_cols).agg(
-        (F.sum("__hit") == F.count(F.lit(1))).alias(out_col)
-    )
-    return df.join(agg, key_cols, "left")
-
-
 def bloom_paragraph_dedup(
     df: DataFrame,
     k: int = 8,
@@ -1345,7 +1232,6 @@ def bloom_paragraph_dedup(
     n_hashes: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    membership: str = "broadcast",
 ) -> DataFrame:
     """Dolma-style Bloom-filter paragraph dedup (allenai/dolma's deduper:
     a fixed-RAM Bloom filter over paragraph hashes marks re-seen
@@ -1363,10 +1249,9 @@ def bloom_paragraph_dedup(
     replays the IDENTICAL bitmap — including false positives — making a
     probabilistic structure hash-exactly verifiable.
 
-    Scale shape: the build collects only m/8 bitmap bytes; the probe side
-    is one literal-array test per span (``membership='broadcast'``) or a
-    (word, bits) equi-join shuffling longs only (``membership='join'``,
-    the 2^40-bit path).  Both paths are tested equal."""
+    Scale shape: the build collects only m/8 bitmap bytes to the driver;
+    the probe side is one literal-array test per span against that
+    bitmap, which rides the plan (one copy per executor)."""
     # doc_spans emits the id as "id"; the split salts THAT column
     is_seen = (
         F.conv(
@@ -1388,25 +1273,9 @@ def bloom_paragraph_dedup(
     bitmap = bloom_build(
         builder, span_col="span", n_bits=n_bits, n_hashes=n_hashes
     )
-    if membership == "join":
-        spark = df.sparkSession
-        bitmap_df = spark.createDataFrame(
-            [(w, b) for w, b in enumerate(bitmap) if b != 0],
-            "word long, bits long",
-        )
-        marked = _bloom_member_join(
-            query,
-            bitmap_df,
-            "span",
-            n_bits,
-            n_hashes,
-            "__dup",
-            key_cols=["id", "cidx"],
-        )
-    else:
-        marked = _bloom_member_broadcast(
-            query, bitmap, "span", n_bits, n_hashes, "__dup"
-        )
+    marked = _bloom_member_broadcast(
+        query, bitmap, "span", n_bits, n_hashes, "__dup"
+    )
     return (
         marked.groupBy("id")
         .agg(

@@ -71,10 +71,6 @@ class Rule:
     def column(self) -> Column:
         return F.expr(self.expr)
 
-    @property
-    def negated_column(self) -> Column:
-        return F.expr(f"!({self.expr})")
-
     # -- fluent modifiers -------------------------------------------------
     def with_id(self, rule_id: str) -> "Rule":
         return replace(self, rule_id=rule_id)

@@ -97,14 +97,6 @@ def fixed_log_ratios(
     return out
 
 
-def gumbel_fixed(seed: int, doc_id, scale: int = FIXED_SCALE) -> int:
-    """Seeded Gumbel noise in fixed-point: u from the md5 of (seed, id)
-    mapped to (0,1), g = -log(-log(u)).  Deterministic on any cluster."""
-    h = hashlib.md5(f"gumbel\x1f{seed}\x1f{doc_id}".encode()).hexdigest()
-    u = (int(h[:15], 16) + 0.5) / float(1 << 60)
-    return round(scale * -math.log(-math.log(u)))
-
-
 def score_rows_python(
     rows: "Iterable[tuple[object, str | None]]",
     ratios: "dict[int, int]",

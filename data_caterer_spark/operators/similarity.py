@@ -165,23 +165,6 @@ def _hyperplanes(dim: int, num_planes: int, seed: int) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-pattern bucket id (long) for one hyperplane bank (JVM path —
-    fine for a handful of planes; the multi-table production path is the
-    numpy matmul in :func:`with_lsh_buckets`)."""
-    bits = []
-    for i, p in enumerate(planes):
-        pc = F.array(*[F.lit(float(x)) for x in p])
-        bits.append(
-            F.when(dot(vec, pc) >= 0, F.shiftleft(F.lit(1).cast("long"), i))
-            .otherwise(F.lit(0).cast("long"))
-        )
-    out = F.lit(0).cast("long")
-    for b in bits:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def with_lsh_buckets(
     df: DataFrame,
     dim: int,

@@ -23,10 +23,6 @@ from pyspark.sql import functions as F
 DEFAULT_SALT_BUCKETS = 16
 
 
-def conversation_window() -> Window:
-    return Window.partitionBy("conv_id").orderBy("turn_idx")
-
-
 def with_turn_order_features(
     df: DataFrame,
     conv_col: str = "conv_id",
@@ -80,33 +76,6 @@ def salted_conversation_stats(
         F.min("__min_idx").alias("conv_min_idx"),
         F.max("__max_idx").alias("conv_max_idx"),
     )
-
-
-def with_conversation_stats(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-) -> DataFrame:
-    """Join per-conversation stats back onto turns.
-
-    The stats side is one row per conversation — orders of magnitude
-    smaller than the turn table; AQE picks broadcast when it fits, and its
-    skew-join splitting covers the join back to a hot key (config pinned in
-    ``config.DEFAULT_CONF``).
-    """
-    stats = salted_conversation_stats(df, conv_col, salt_buckets)
-    return df.join(stats, on=conv_col, how="left")
-
-
-def stable_order(df: DataFrame, conv_col: str = "conv_id", idx_col: str = "turn_idx") -> DataFrame:
-    """Cluster rows by conversation and sort within partitions.
-
-    Gives the deterministic (conv_id, turn_idx) ordering the byte-equality
-    criterion requires without a global sort: repartition by conv hash,
-    then sortWithinPartitions — each conversation is contiguous and
-    ordered; no total order across conversations is promised or needed.
-    """
-    return df.repartition(conv_col).sortWithinPartitions(conv_col, idx_col)
 
 
 def budget_prefix(

@@ -21,7 +21,7 @@ keep/drop reframing is SURVEY.md §2.2.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,15 +29,14 @@ from pyspark.sql import functions as F
 from ..functions import text as T
 from ..functions.scoring import with_model_scores
 from ..functions.scrub import scrub_columns
-from ..functions.textcore import LangIdModel, PerplexityModel
-from ..operators.rules import Rule, RuleSet, expr_rule
-from ..operators.windows import (
-    stable_order,
-    with_conversation_stats,
-    with_turn_order_features,
-)
+from ..functions.textcore import SCRUB_BANK, LangIdModel, PerplexityModel
+from ..operators.rules import RuleSet, expr_rule
+from ..operators.windows import with_turn_order_features
 
 TOXICITY_RULE_ID = "toxicity"
+#: the flag-only rules that read the previous turn (``prev_*`` window
+#: columns); the stateless streaming filter runs the bank without them
+CROSS_TURN_RULE_IDS = ("role_alternation", "turn_contiguous", "ts_monotone")
 
 
 @dataclass(frozen=True)
@@ -53,9 +52,6 @@ class QualityFilterConfig:
     allowed_roles: tuple[str, ...] = ("assistant", "system", "tool", "user")
     keep_langs: tuple[str, ...] = ("en",)
     max_ppl: float = 5000.0
-    salt_buckets: int = 16
-    drop_on_toxicity: bool = True
-    with_conv_stats: bool = False  # salted per-conversation aggregates
 
 
 class QualityFilterPipeline:
@@ -76,10 +72,7 @@ class QualityFilterPipeline:
         materializes them — nothing downstream re-tokenizes, and the
         shuffle rows carry compact numerics instead of recomputed HOFs."""
         df = T.with_text_features(df, char_run=self.config.char_run)
-        df = with_turn_order_features(df)
-        if self.config.with_conv_stats:
-            df = with_conversation_stats(df, salt_buckets=self.config.salt_buckets)
-        return df
+        return with_turn_order_features(df)
 
     # ------------------------------------------------------------------
     def heuristic_rules(self) -> RuleSet:
@@ -132,8 +125,16 @@ class QualityFilterPipeline:
             ]
         )
 
+    def rule_ids(self) -> list[str]:
+        """Every id :meth:`run` can emit into ``rule_hits``: the heuristic
+        bank's, then the scrub bank's (the ``rule_ids`` a
+        ``ResumableRunner`` over this plan declares)."""
+        return [r.rule_id for r in self.heuristic_rules()] + [
+            rid for rid, _pattern, _rep in SCRUB_BANK
+        ]
+
     # ------------------------------------------------------------------
-    def run(self, df: DataFrame, ordered: bool = False) -> DataFrame:
+    def run(self, df: DataFrame) -> DataFrame:
         """Full pipeline.  Adds: prev_* window cols, feature cols, lang,
         lang_score, ppl, rule_hits, keep, scrubbed_text, scrub_hits."""
         df = self.with_features(df)
@@ -142,23 +143,20 @@ class QualityFilterPipeline:
         df = with_model_scores(
             df, langid_model=self.langid_model, ppl_model=self.ppl_model
         )
-        df = self.with_labels(df, self.heuristic_rules())
-        if ordered:
-            df = stable_order(df)
-        return df
+        return self.with_labels(df, self.heuristic_rules())
 
     # ------------------------------------------------------------------
     def with_labels(self, df: DataFrame, rules: RuleSet) -> DataFrame:
         """The label tail shared by batch and stream: heuristic hits, the
         scrub, ``rule_hits`` (heuristic bank order, then scrub bank
-        order) and ``keep`` (no drop-rule hit, and no toxicity hit when
-        ``drop_on_toxicity``).  Needs the feature and model columns."""
+        order) and ``keep`` (no drop-rule hit and no toxicity hit).  Needs
+        the feature and model columns."""
         df = df.withColumn("heur_hits", rules.hits_column())
         df = scrub_columns(df)
         df = df.withColumn("rule_hits", F.concat("heur_hits", "scrub_hits"))
-        keep = rules.keep_column(F.col("heur_hits"))
-        if self.config.drop_on_toxicity:
-            keep = keep & ~F.array_contains("scrub_hits", TOXICITY_RULE_ID)
+        keep = rules.keep_column(F.col("heur_hits")) & ~F.array_contains(
+            "scrub_hits", TOXICITY_RULE_ID
+        )
         return df.withColumn("keep", keep).drop("heur_hits")
 
     # ------------------------------------------------------------------

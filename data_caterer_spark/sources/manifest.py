@@ -25,6 +25,11 @@ snapshot commit.  The reference's analog is sequential batch splitting
 The rule-hit metrics aggregate rides the SAME job as the output write
 (one action per group via ``observe``) — no second scan, honoring the
 reference's own count-avoidance advice (``SinkFactory.scala:26-32``).
+The caller declares the rule ids the plan can emit (one
+``count_if(array_contains)`` counter each); one more counter,
+``sum(size(rule_hits))``, must equal their sum, so an id list that
+misses a rule raises before the manifest row is written instead of
+silently under-counting.
 """
 
 from __future__ import annotations
@@ -96,10 +101,9 @@ class ResumableRunner:
         manifest_dir: str,
         n_groups: int = 16,
         conv_col: str = "conv_id",
-        keep_col: str = "keep",
-        hits_col: str = "rule_hits",
         scope: str = "default",
-        rule_ids: "Sequence[str] | None" = None,
+        *,
+        rule_ids: Sequence[str],
         group_col: "F.Column | None" = None,
     ):
         self.spark = spark
@@ -111,17 +115,13 @@ class ResumableRunner:
         # keys; callers needing an externally-reproducible placement (an
         # ANSI-SQL oracle, a partner system) pass their own expression
         self.group_col = group_col
-        self.keep_col = keep_col
-        self.hits_col = hits_col
         # scope = plan/config fingerprint: manifest rows from a DIFFERENT
         # scope never satisfy this runner's resume check
         self.scope = scope
-        # with a declared rule bank the per-rule hit histogram rides the
-        # write action as observe counters (one count_if(array_contains)
-        # per rule — the bank is bounded); without it the histogram needs
-        # a read-back scan of the just-written group (one extra job per
-        # group — 256 extra read jobs at 256 groups)
-        self.rule_ids = list(rule_ids) if rule_ids is not None else None
+        # the per-rule hit histogram rides the write action as observe
+        # counters (one count_if(array_contains) per rule — the bank is
+        # bounded)
+        self.rule_ids = list(rule_ids)
 
     def pending_groups(self) -> list[int]:
         done = self.manifest.completed_groups(run_scope=self.scope)
@@ -170,18 +170,19 @@ class ResumableRunner:
             part = grouped.where(F.col("__group") == gid).drop("__group")
             out = pipeline_fn(part)
             obs = Observation(f"g{gid}")
-            obs_aggs = [
+            hits = F.col("rule_hits")
+            out = out.observe(
+                obs,
                 F.count(F.lit(1)).alias("rows_in"),
-                F.count_if(F.col(self.keep_col)).alias("rows_kept"),
-            ]
-            if self.rule_ids is not None:
-                obs_aggs.extend(
-                    F.count_if(
-                        F.array_contains(F.col(self.hits_col), rid)
-                    ).alias(f"__hit_{i}")
+                F.count_if(F.col("keep")).alias("rows_kept"),
+                # NULL hits count 0 (legacy size(NULL) is -1)
+                F.sum(F.when(hits.isNull(), 0).otherwise(F.size(hits)))
+                .alias("__hits_total"),
+                *[
+                    F.count_if(F.array_contains(hits, rid)).alias(f"__hit_{i}")
                     for i, rid in enumerate(self.rule_ids)
-                )
-            out = out.observe(obs, *obs_aggs)
+                ],
+            )
             (
                 out.withColumn("group", F.lit(gid))
                 .write.mode("overwrite")
@@ -190,25 +191,18 @@ class ResumableRunner:
                 .parquet(self.out_dir)
             )
             stats = obs.get
-            if self.rule_ids is not None:
-                # histogram rode the write action — ONE job per group
-                hits_map = {
-                    rid: stats[f"__hit_{i}"]
-                    for i, rid in enumerate(self.rule_ids)
-                    if stats[f"__hit_{i}"]
-                }
-            else:
-                # no declared bank: second (tiny) aggregate over the
-                # group's already-written slice
-                hits = (
-                    self.spark.read.parquet(self.out_dir)
-                    .where(F.col("group") == gid)
-                    .select(F.explode(self.hits_col).alias("rid"))
-                    .groupBy("rid")
-                    .count()
-                    .collect()
+            hits_map = {
+                rid: stats[f"__hit_{i}"]
+                for i, rid in enumerate(self.rule_ids)
+                if stats[f"__hit_{i}"]
+            }
+            total = stats["__hits_total"] or 0  # sum over no rows is NULL
+            if total != sum(hits_map.values()):
+                raise ValueError(
+                    f"group {gid}: rule_hits holds {total} ids but the "
+                    f"declared rule_ids count {sum(hits_map.values())}; "
+                    "rule_ids misses an id the plan emits"
                 )
-                hits_map = {r["rid"]: r["count"] for r in hits}
             self.manifest.append(
                 {
                     "run_id": run_id,

@@ -36,13 +36,18 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..functions import text as T
 from ..functions.scoring import with_model_scores
 from ..operators.rules import RuleSet
-from ..plans.pipeline import QualityFilterConfig, QualityFilterPipeline
+from ..plans.pipeline import (
+    CROSS_TURN_RULE_IDS,
+    QualityFilterConfig,
+    QualityFilterPipeline,
+)
 
 
 def _stateless_rules(pipe: QualityFilterPipeline) -> RuleSet:
     """The per-turn subset of the heuristic bank (no prev_* references)."""
-    cross_turn = {"role_alternation", "turn_contiguous", "ts_monotone"}
-    return RuleSet([r for r in pipe.heuristic_rules() if r.rule_id not in cross_turn])
+    return RuleSet(
+        [r for r in pipe.heuristic_rules() if r.rule_id not in CROSS_TURN_RULE_IDS]
+    )
 
 
 def streaming_quality_filter(

@@ -67,7 +67,8 @@ def main() -> None:
         )
 
     runner = ResumableRunner(
-        spark, args.output, args.manifest, n_groups=args.n_groups
+        spark, args.output, args.manifest, n_groups=args.n_groups,
+        rule_ids=pipe.rule_ids(),
     )
     processed = runner.run(df, run)
     print(f"processed groups: {processed}")

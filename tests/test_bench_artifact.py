@@ -150,7 +150,8 @@ def test_scaling_schedule_is_fixed_and_ships_every_sample(four_cores):
         assert res["samples_n"] == [1000.0 * 1.01, 1000.0 * 1.04, 1000.0 * 1.05]
         assert res["samples_4n"] == [rate_4n * 1.02, rate_4n * 1.03, rate_4n * 1.06]
         assert res["pass_secs_n"] == [[1.0] * 3, [4.0] * 3, [5.0] * 3]
-        assert res["warmup_secs_4n"] == [[-2.0] * 2, [-3.0] * 2, [-6.0] * 2]
+        w = bench.WARMUP_PASSES
+        assert res["warmup_secs_4n"] == [[-2.0] * w, [-3.0] * w, [-6.0] * w]
         # median(4N) / (4 * median(N))
         assert res["turns_per_sec_n"] == 1000.0 * 1.04
         assert res["turns_per_sec_4n"] == rate_4n * 1.03

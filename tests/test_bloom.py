@@ -3,8 +3,8 @@
 The structure is probabilistic, so correctness is defined as BIT-EXACT
 agreement with the pure-Python twin (hashing.spark_xxhash64_str +
 golden._py_bloom_positions): same bitmap, same hits, same false
-positives.  Tests pin the hash twin, both membership paths, the forced-
-FP regime, and the JVM-only plan.
+positives.  Tests pin the hash twin, the broadcast literal-array
+membership test, the forced-FP regime, and the JVM-only plan.
 """
 
 import hashlib
@@ -132,14 +132,6 @@ def test_bloom_dedup_matches_sequential_replay(spark, corpus):
     assert got == expected
     # the fixture plants one genuine cross-split duplicate span
     assert sum(v[1] for v in expected.values()) >= 1
-
-
-def test_bloom_membership_paths_agree(spark, corpus):
-    a = sorted(
-        bloom_paragraph_dedup(corpus, membership="broadcast").collect()
-    )
-    b = sorted(bloom_paragraph_dedup(corpus, membership="join").collect())
-    assert a == b
 
 
 def test_bloom_false_positives_replay_exactly(spark, corpus):

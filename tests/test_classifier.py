@@ -85,18 +85,38 @@ def test_empty_and_null_text_score_bias_only(spark):
     assert rows[1]["score_fixed"] == rows[2]["score_fixed"]
 
 
-def test_sparse_partials_match_dense_bit_exactly(spark):
+def _spy_reductions(monkeypatch):
+    """Record which reduction shape each ``train`` iteration calls."""
+    used = []
+
+    def spy(name):
+        fn = getattr(CLS, name)
+
+        def reduce(*args):
+            used.append(name)
+            return fn(*args)
+
+        return reduce
+
+    for name in ("_reduce_dense", "_reduce_sparse"):
+        monkeypatch.setattr(CLS, name, spy(name))
+    return used
+
+
+def test_sparse_partials_match_dense_bit_exactly(spark, monkeypatch):
     """The fastText-scale sparse (bucket, sum) + combinable-groupBy
     reduction must produce the IDENTICAL weight trajectory as the dense
     per-partition rows and the sequential replay — integer sums commute
-    regardless of the reduction wire shape."""
+    regardless of the reduction wire shape.  Lowering the threshold below
+    ``N_FEATURES`` sends the same-size run down the sparse path."""
+    used = _spy_reductions(monkeypatch)
     kw = dict(n_features=N_FEATURES, iters=5, lr=0.5)
-    m_dense = CLS.train(
-        _df(spark), F.col("y") == 1, partial_mode="dense", **kw
-    )
-    m_sparse = CLS.train(
-        _df(spark, 8), F.col("y") == 1, partial_mode="sparse", **kw
-    )
+    m_dense = CLS.train(_df(spark), F.col("y") == 1, **kw)
+    assert set(used) == {"_reduce_dense"}
+    used.clear()
+    monkeypatch.setattr(CLS, "SPARSE_FEATURES_THRESHOLD", N_FEATURES - 1)
+    m_sparse = CLS.train(_df(spark, 8), F.col("y") == 1, **kw)
+    assert set(used) == {"_reduce_sparse"}
     m_seq = CLS.train_sequential([(d, t, y) for d, t, y in ROWS], **kw)
     assert m_sparse.weights.tobytes() == m_dense.weights.tobytes()
     assert m_sparse.weights.tobytes() == m_seq.weights.tobytes()
@@ -108,17 +128,27 @@ def test_sparse_partials_match_dense_bit_exactly(spark):
     )
 
 
-def test_auto_mode_picks_sparse_above_threshold():
+def test_auto_mode_picks_sparse_above_threshold(spark, monkeypatch):
+    """``n_features`` alone picks the reduction: dense up to and at
+    ``SPARSE_FEATURES_THRESHOLD``, sparse above it — and the sparse run
+    still replays the sequential trainer bit for bit."""
     assert CLS.SPARSE_FEATURES_THRESHOLD < 2**21  # fastText default size
-    # the auto rule itself (no Spark needed): mirrors train()'s gate
-    for nf, expect in [
-        (4096, False),
-        (CLS.SPARSE_FEATURES_THRESHOLD, False),
-        (CLS.SPARSE_FEATURES_THRESHOLD + 1, True),
-        (2**21, True),
+    used = _spy_reductions(monkeypatch)
+    for nf, shape in [
+        (CLS.SPARSE_FEATURES_THRESHOLD, "_reduce_dense"),
+        (CLS.SPARSE_FEATURES_THRESHOLD + 1, "_reduce_sparse"),
     ]:
-        use_sparse = nf > CLS.SPARSE_FEATURES_THRESHOLD
-        assert use_sparse is expect, nf
+        used.clear()
+        kw = dict(n_features=nf, iters=3, lr=0.5)
+        m = CLS.train(_df(spark, 8), F.col("y") == 1, **kw)
+        assert set(used) == {shape}, nf
+        if shape == "_reduce_sparse":
+            m_seq = CLS.train_sequential(
+                [(d, t, y) for d, t, y in ROWS], **kw
+            )
+            assert m.weights.tobytes() == m_seq.weights.tobytes(), nf
+            assert m.bias == m_seq.bias, nf
+            assert m.loss_history_fixed == m_seq.loss_history_fixed, nf
 
 
 def test_sparse_reduction_shape_no_dense_rows_to_driver(spark):

@@ -18,6 +18,9 @@ def transcripts(spark):
     return generate_transcripts_df(spark, n_convs=80).localCheckpoint()
 
 
+RULE_IDS = QualityFilterPipeline().rule_ids()
+
+
 def _pipeline_fn(df):
     out = QualityFilterPipeline().run(df)
     return out.select("conv_id", "turn_idx", "keep", "rule_hits", "scrubbed_text")
@@ -26,7 +29,9 @@ def _pipeline_fn(df):
 def test_resume_after_crash(spark, transcripts, tmp_path):
     out_dir = str(tmp_path / "out")
     man_dir = str(tmp_path / "manifest")
-    runner = ResumableRunner(spark, out_dir, man_dir, n_groups=4)
+    runner = ResumableRunner(
+        spark, out_dir, man_dir, n_groups=4, rule_ids=RULE_IDS
+    )
 
     with pytest.raises(RuntimeError, match="injected failure on group 2"):
         runner.run(transcripts, _pipeline_fn, fail_on_group=2)
@@ -53,7 +58,9 @@ def test_resume_after_crash(spark, transcripts, tmp_path):
 def test_rerun_is_noop(spark, transcripts, tmp_path):
     out_dir = str(tmp_path / "out")
     man_dir = str(tmp_path / "manifest")
-    runner = ResumableRunner(spark, out_dir, man_dir, n_groups=3)
+    runner = ResumableRunner(
+        spark, out_dir, man_dir, n_groups=3, rule_ids=RULE_IDS
+    )
     assert len(runner.run(transcripts, _pipeline_fn)) == 3
     assert runner.run(transcripts, _pipeline_fn) == []
     # manifest has exactly one record per group
@@ -66,12 +73,16 @@ def test_resume_is_scope_aware(spark, transcripts, tmp_path):
     manifest rows from another scope never satisfy the resume check."""
     out_dir = str(tmp_path / "out")
     man_dir = str(tmp_path / "manifest")
-    r1 = ResumableRunner(spark, out_dir, man_dir, n_groups=2, scope="cfg-v1")
+    r1 = ResumableRunner(
+        spark, out_dir, man_dir, n_groups=2, scope="cfg-v1", rule_ids=RULE_IDS
+    )
     assert len(r1.run(transcripts, _pipeline_fn)) == 2
     # same scope: noop
     assert r1.run(transcripts, _pipeline_fn) == []
     # new scope: all groups pending again
-    r2 = ResumableRunner(spark, out_dir, man_dir, n_groups=2, scope="cfg-v2")
+    r2 = ResumableRunner(
+        spark, out_dir, man_dir, n_groups=2, scope="cfg-v2", rule_ids=RULE_IDS
+    )
     assert r2.pending_groups() == [0, 1]
     assert len(r2.run(transcripts, _pipeline_fn)) == 2
     man = ManifestSidecar(spark, man_dir)
@@ -117,7 +128,8 @@ def test_manifest_append_roundtrips_schema(spark, tmp_path):
 
 def test_lineage_metrics(spark, transcripts, tmp_path):
     runner = ResumableRunner(
-        spark, str(tmp_path / "out"), str(tmp_path / "man"), n_groups=2
+        spark, str(tmp_path / "out"), str(tmp_path / "man"), n_groups=2,
+        rule_ids=RULE_IDS,
     )
     runner.run(transcripts, _pipeline_fn)
     man = ManifestSidecar(spark, str(tmp_path / "man")).read().collect()
@@ -132,36 +144,51 @@ def test_lineage_metrics(spark, transcripts, tmp_path):
 
 
 def test_lineage_hits_via_observe_matches_readback(spark, transcripts, tmp_path):
-    """With a declared rule bank the per-rule hit histogram rides the
-    write action's observe counters (no read-back job per group) and must
-    match the read-back histogram exactly."""
-    from data_caterer_spark.functions.textcore import SCRUB_BANK
-    from data_caterer_spark.plans.pipeline import QualityFilterPipeline
-
-    rule_ids = [
-        r.rule_id for r in QualityFilterPipeline().heuristic_rules()
-    ] + [rid for rid, _pat, _rep in SCRUB_BANK]
-    r_obs = ResumableRunner(
-        spark, str(tmp_path / "out_o"), str(tmp_path / "man_o"),
-        n_groups=2, rule_ids=rule_ids,
+    """The per-rule hit histogram rides the write action's observe
+    counters (no read-back job per group) and must equal, group by group,
+    the hit counts exploded from the written output."""
+    runner = ResumableRunner(
+        spark, str(tmp_path / "out"), str(tmp_path / "man"),
+        n_groups=2, rule_ids=RULE_IDS,
     )
-    r_obs.run(transcripts, _pipeline_fn)
-    r_back = ResumableRunner(
-        spark, str(tmp_path / "out_b"), str(tmp_path / "man_b"), n_groups=2
+    runner.run(transcripts, _pipeline_fn)
+    want: dict[int, dict[str, int]] = {}
+    for r in (
+        runner.output()
+        .select("group", F.explode("rule_hits").alias("rid"))
+        .groupBy("group", "rid")
+        .count()
+        .collect()
+    ):
+        want.setdefault(r["group"], {})[r["rid"]] = r["count"]
+    man = runner.manifest.read().collect()
+    assert sorted(r["group_id"] for r in man) == [0, 1]
+    for r in man:
+        assert json.loads(r["rule_hits"]) == want.get(r["group_id"], {})
+    assert any(want.values())
+
+
+def test_lineage_missing_rule_id_raises_before_manifest(
+    spark, transcripts, tmp_path
+):
+    """A rule_ids list that leaves out an id the plan emits would
+    under-count silently; the ``sum(size(rule_hits))`` counter catches it
+    and the group gets no manifest row."""
+    counts = (
+        _pipeline_fn(transcripts)
+        .select(F.explode("rule_hits").alias("rid"))
+        .groupBy("rid")
+        .count()
+        .collect()
     )
-    r_back.run(transcripts, _pipeline_fn)
-
-    def hist(man_dir):
-        rows = ManifestSidecar(spark, man_dir).read().collect()
-        out = {}
-        for r in rows:
-            for k, v in json.loads(r["rule_hits"]).items():
-                out[k] = out.get(k, 0) + v
-        return out
-
-    h_obs = hist(str(tmp_path / "man_o"))
-    h_back = hist(str(tmp_path / "man_b"))
-    assert h_obs == h_back and h_obs
+    missing = max(counts, key=lambda r: r["count"])["rid"]
+    runner = ResumableRunner(
+        spark, str(tmp_path / "out"), str(tmp_path / "man"), n_groups=1,
+        rule_ids=[rid for rid in RULE_IDS if rid != missing],
+    )
+    with pytest.raises(ValueError, match="group 0: rule_hits holds"):
+        runner.run(transcripts, _pipeline_fn)
+    assert 0 not in runner.manifest.completed_groups()
 
 
 def test_jar_gated_formats_error_clearly(spark):
@@ -275,6 +302,7 @@ def test_injected_group_col_out_of_range_fails_fast(spark, tmp_path):
     r = ResumableRunner(
         spark, str(tmp_path / "o"), str(tmp_path / "m"), n_groups=8,
         conv_col="doc_id",
+        rule_ids=[],
         group_col=F.pmod(F.col("doc_id"), F.lit(16)).cast("int"),
     )
     with pytest.raises(ValueError, match="outside"):

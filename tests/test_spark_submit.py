@@ -4,6 +4,7 @@ production entry script completes with committed output + lineage."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import subprocess
@@ -43,15 +44,26 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
 
     import duckdb
 
-    rows = duckdb.sql(
-        f"SELECT count(*) FROM read_parquet('{out_dir}/**/*.parquet', "
-        "hive_partitioning=1)"
-    ).fetchall()[0][0]
+    out = f"read_parquet('{out_dir}/**/*.parquet', hive_partitioning=1)"
+    rows = duckdb.sql(f"SELECT count(*) FROM {out}").fetchall()[0][0]
     man = duckdb.sql(
-        f"SELECT group_id, rows_in, rows_kept FROM "
+        f"SELECT group_id, rows_in, rows_kept, rule_hits FROM "
         f"read_parquet('{man_dir}/*.parquet') ORDER BY group_id"
     ).fetchall()
     assert rows > 0
     assert [m[0] for m in man] == [0, 1]
     assert sum(m[1] for m in man) == rows
     assert all(0 < m[2] <= m[1] for m in man)
+    # the entry script declares the plan's rule ids, so the histogram
+    # rides the write; it must equal the hits exploded from the output
+    hits: dict[str, int] = {}
+    for m in man:
+        for rid, n in json.loads(m[3]).items():
+            hits[rid] = hits.get(rid, 0) + n
+    exploded = dict(
+        duckdb.sql(
+            f"SELECT rid, count(*) FROM (SELECT unnest(rule_hits) AS rid "
+            f"FROM {out}) GROUP BY rid"
+        ).fetchall()
+    )
+    assert hits == exploded and hits

@@ -8,8 +8,6 @@ from pyspark.sql import functions as F
 from data_caterer_spark.fixtures import generate_transcripts_df
 from data_caterer_spark.operators.windows import (
     salted_conversation_stats,
-    stable_order,
-    with_conversation_stats,
     with_turn_order_features,
 )
 
@@ -87,37 +85,6 @@ def test_window_survives_hot_conversation(hot):
     )
     assert tail["turn_rank"] == 100_000
     assert tail["prev_turn_idx"] == tail["turn_idx"] - 1
-
-
-def test_with_conversation_stats_join(hot):
-    out = with_conversation_stats(hot)
-    r = out.where(F.col("conv_id") == "CONVHOT00000001").limit(1).collect()[0]
-    assert r["conv_len"] == 100_000
-    assert out.count() == hot.count()
-
-
-def test_stable_order_contiguous_and_sorted(spark):
-    df = generate_transcripts_df(spark, n_convs=30, num_partitions=7)
-    out = stable_order(df)
-
-    def check(it):
-        seen_done = set()
-        last = None
-        ok = True
-        for row in it:
-            key = (row["conv_id"], row["turn_idx"])
-            if last is not None and row["conv_id"] != last[0]:
-                if row["conv_id"] in seen_done:
-                    ok = False  # conversation split across partition runs
-                seen_done.add(last[0])
-            if last is not None and row["conv_id"] == last[0]:
-                if row["turn_idx"] < last[1]:
-                    ok = False
-            last = key
-        yield ok
-
-    flags = out.rdd.mapPartitions(check).collect()
-    assert all(flags)
 
 
 def test_budget_prefix_keeps_ordered_prefix(spark):
