@@ -2,7 +2,7 @@
 
 Deployment shape per BASELINE north_star: "fastText language-ID via
 broadcast model in a pandas/Arrow UDF".  The model object is broadcast
-once and unpickled once per Python worker by
+once per session and unpickled once per Python worker by
 :func:`functions.scoring.model_stage` (init-once pattern — reference
 analog: faker objects shipped to executors,
 ``BatchDataProcessor.scala:83-99``).
@@ -31,7 +31,7 @@ def with_language(
         df,
         text_col,
         {"lang": "string", "lang_score": "double"},
-        model or default_langid(),
+        (model or default_langid(),),
         lambda m, texts: m.predict(texts),
     )
 
@@ -48,6 +48,6 @@ def with_language_margin(
         df,
         text_col,
         {"lang_pred": "string", "lang_margin": "double"},
-        model or default_langid(),
+        (model or default_langid(),),
         lambda m, texts: m.predict_margin(texts),
     )

@@ -1,8 +1,8 @@
 """Perplexity stage: hashed char-trigram LM through the shared model stage.
 
 KenLM-style deployment shape (BASELINE north_star): the log-prob table is a
-flat float64 numpy array inside a ``PerplexityModel``, broadcast once and
-unpickled once per Python worker by :func:`functions.scoring.model_stage`;
+flat float64 numpy array inside a ``PerplexityModel``, broadcast once per
+session and unpickled once per Python worker by :func:`functions.scoring.model_stage`;
 scoring is numpy table lookups over vectorized FNV-1a n-gram hashes — no
 per-row Python in Spark's eval loop, batches cross via Arrow.
 """
@@ -26,7 +26,7 @@ def with_perplexity(
         df,
         text_col,
         {"ppl": "double"},
-        model or default_ppl(),
+        (model or default_ppl(),),
         lambda m, texts: (m.score(texts),),
     )
 

@@ -1,10 +1,12 @@
 """The model stage: every text-model score crosses into Python here.
 
 :func:`model_stage` is the one broadcast-model iterator pandas UDF in the
-package.  It broadcasts the model OBJECT (a PySpark worker caches
+package.  It broadcasts each model OBJECT once per SparkContext and
+reuses that broadcast in every later plan (a PySpark worker caches
 ``Broadcast.value`` across the tasks it runs, so each model is unpickled
-once per Python worker), maps NULL texts to ``None``, runs a per-batch
-kernel, and unpacks the kernel's columns into named output columns.
+once per Python worker per session), maps NULL texts to ``None``, runs a
+per-batch kernel, and unpacks the kernel's columns into named output
+columns.
 ``with_language`` / ``with_language_margin`` (functions/langid.py),
 ``with_perplexity`` (functions/perplexity.py) and :func:`with_model_scores`
 are one call each into it; swapping in a real fastText / KenLM model means
@@ -21,10 +23,14 @@ models, same kernels, same batch shapes).
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
 from functools import cache
 from typing import Any, Callable, Iterator, Sequence
 
 import pandas as pd
+from pyspark import Broadcast, SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -42,25 +48,74 @@ def default_ppl() -> PerplexityModel:
     return PerplexityModel.train()
 
 
+# The live SparkContext and its broadcast of each model object passed to
+# model_stage, keyed by id(model); holding the model keeps that id unique.
+# PySpark runs one SparkContext per process, so a new one replaces the lot.
+_broadcasts: tuple[SparkContext | None, dict[int, tuple[Any, Broadcast]]] = (None, {})
+
+
+def _broadcast(sc: SparkContext, model: Any) -> Broadcast:
+    """The one broadcast of ``model`` on ``sc``.  A model object must not
+    be mutated after its first ``model_stage``: later plans reuse the
+    broadcast value."""
+    global _broadcasts
+    owner, held = _broadcasts
+    if owner is not sc:
+        _broadcasts = owner, held = sc, {}
+    if id(model) not in held:
+        held[id(model)] = (model, sc.broadcast(model))
+    return held[id(model)][1]
+
+
+def _stat_gated_zip_invalidation() -> None:
+    """Make ``importlib.invalidate_caches()`` cheap in this Python worker.
+
+    PySpark's ``worker_util.setup_spark_files`` calls it on every task.
+    Before CPython 3.13 every ``zipimporter`` in the path importer cache
+    then re-reads its archive's whole directory: about 0.25 s per task for
+    the importers on ``pyspark.zip`` and the Spark core jar.  The
+    replacement re-reads an archive only when its ``(st_mtime_ns,
+    st_size)`` differs from that importer's last read.  Installed once;
+    CPython 3.13+ re-reads lazily and is left alone."""
+    reread = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 13) or getattr(reread, "stat_gated", False):
+        return
+
+    def invalidate_caches(self: zipimport.zipimporter) -> None:
+        try:
+            st = os.stat(self.archive)
+            stamp: tuple[int, int] | None = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or self.__dict__.get("_read_stamp") != stamp:
+            reread(self)
+            self._read_stamp = stamp
+
+    invalidate_caches.stat_gated = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
 def model_stage(
     df: DataFrame,
     text_col: str,
     fields: dict[str, str],
-    model: Any,
-    kernel: Callable[[Any, list], Sequence[list]],
+    models: Sequence[Any],
+    kernel: Callable[..., Sequence[list]],
 ) -> DataFrame:
     """Add ``fields`` (output name -> Spark SQL type) computed over Arrow
-    batches of ``text_col``: ``kernel(model, texts)`` returns one list
+    batches of ``text_col``: ``kernel(*models, texts)`` returns one list
     per field, in field order, with NULL texts passed as ``None``."""
-    bc = df.sparkSession.sparkContext.broadcast(model)
+    sc = df.sparkSession.sparkContext
+    bcs = [_broadcast(sc, m) for m in models]
     names = list(fields)
 
     @pandas_udf(", ".join(f"{n} {t}" for n, t in fields.items()))
     def _stage(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        local = bc.value  # unpickled once per Python worker
+        _stat_gated_zip_invalidation()  # for this worker's next tasks
+        local = [bc.value for bc in bcs]  # unpickled once per Python worker
         for series in batches:
             texts = [None if pd.isna(t) else t for t in series]
-            yield pd.DataFrame(dict(zip(names, kernel(local, texts))))
+            yield pd.DataFrame(dict(zip(names, kernel(*local, texts))))
 
     tmp = "__model"
     df = df.withColumn(tmp, _stage(F.col(text_col)))
@@ -79,5 +134,5 @@ def with_model_scores(
         text_col,
         {"lang": "string", "lang_score": "double", "ppl": "double"},
         (langid_model or default_langid(), ppl_model or default_ppl()),
-        lambda m, texts: (*m[0].predict(texts), m[1].score(texts)),
+        lambda lm, pm, texts: (*lm.predict(texts), pm.score(texts)),
     )

@@ -29,6 +29,7 @@ import math
 import re
 import zlib
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 
@@ -276,41 +277,35 @@ class LangIdModel:
         best = int(np.argmax(scores))
         return self.langs[best], float(scores[best])
 
+    @cached_property
+    def _table(self) -> np.ndarray:
+        """``profiles`` as a contiguous ``[buckets, langs]`` copy.  A row
+        gather from it is laid out grams-outer, langs-inner, the same
+        layout ``profiles[:, idx]`` has in ``predict_one``, so the two
+        means add a row's grams in the same order."""
+        return np.ascontiguousarray(self.profiles.T)
+
+    def _batch_scores(self, texts: list[str | None]) -> tuple[np.ndarray, np.ndarray]:
+        """(rows with at least ``min_grams`` grams, their [rows, langs]
+        mean log-probs); NULL texts have no grams."""
+        cleaned = ["" if t is None else _langid_clean(t) for t in texts]
+        return _gram_means(cleaned, self._table, self.min_grams)
+
+    def _labels(self, n: int, rows: np.ndarray, best: np.ndarray) -> list[str]:
+        """``langs[best]`` at ``rows`` of ``n`` texts, 'und' elsewhere."""
+        lang_of = np.full(n, len(self.langs))
+        lang_of[rows] = best
+        return np.array([*self.langs, "und"], dtype=object)[lang_of].tolist()
+
     def predict(self, texts: list[str | None]) -> tuple[list[str], list[float]]:
-        """Batch scoring, BIT-IDENTICAL to ``predict_one`` per row.
-
-        Texts are grouped by gram count and each group scores as ONE
-        gather + ``mean`` over the last axis: numpy's pairwise reduction
-        along a contiguous last axis depends only on that row's sequence,
-        so ``profiles[:, idx_mat].mean(axis=2)`` equals the per-text
-        ``profiles[:, idx].mean(axis=1)`` bit-for-bit, while the per-text
-        numpy fixed costs (~90us/text in the loop formulation) collapse to
-        one call per group (~2x whole-kernel speedup on short turns).
-        ``argmax(axis=0)`` keeps the same first-maximum tie-break."""
-        n = len(texts)
-        langs: list[str] = ["und"] * n
-        scores: list[float] = [self.unseen_logp] * n
-        present = [(j, _langid_clean(t)) for j, t in enumerate(texts) if t is not None]
-        hashed = _hash_ngrams_batch(
-            [c for _j, c in present], buckets=LANGID_BUCKETS
-        )
-        groups: dict[int, list[tuple[int, np.ndarray]]] = {}
-        for (j, _c), idx in zip(present, hashed):
-            if idx.size < self.min_grams:
-                continue
-            groups.setdefault(idx.size, []).append((j, idx))
-        for g, items in groups.items():
-            mat = np.empty((len(items), g), dtype=np.int64)
-            for row, (_j, idx) in enumerate(items):
-                mat[row] = idx.astype(np.int64)
-            sc = self.profiles[:, mat].mean(axis=2)  # [n_langs, K]
-            best = sc.argmax(axis=0)
-            for col, (j, _idx) in enumerate(items):
-                b = int(best[col])
-                langs[j] = self.langs[b]
-                scores[j] = float(sc[b, col])
-        return langs, scores
-
+        """Batch scoring, BIT-IDENTICAL to ``predict_one`` per row (see
+        :func:`_gram_means`).  ``argmax(axis=1)`` keeps the same
+        first-maximum tie-break."""
+        rows, sc = self._batch_scores(texts)
+        best = sc.argmax(axis=1)
+        scores = np.full(len(texts), self.unseen_logp)
+        scores[rows] = sc[np.arange(len(rows)), best]
+        return self._labels(len(texts), rows, best), scores.tolist()
 
     def predict_margin_one(self, text: str | None) -> tuple[str, float]:
         """(lang, top1 - top2 margin) — the language-ID CONFIDENCE gate
@@ -330,37 +325,16 @@ class LangIdModel:
         self, texts: list[str | None]
     ) -> tuple[list[str], list[float]]:
         """Batch margins, bit-identical per row to ``predict_margin_one``
-        (same grouped gather as ``predict``; the margin is a difference
-        of two entries of the same per-row score vector, so grouping
-        cannot change it)."""
-        n = len(texts)
-        langs: list[str] = ["und"] * n
-        margins: list[float] = [0.0] * n
-        present = [
-            (j, _langid_clean(t)) for j, t in enumerate(texts) if t is not None
-        ]
-        hashed = _hash_ngrams_batch(
-            [c for _j, c in present], buckets=LANGID_BUCKETS
-        )
-        groups: dict[int, list[tuple[int, np.ndarray]]] = {}
-        for (j, _c), idx in zip(present, hashed):
-            if idx.size < self.min_grams:
-                continue
-            groups.setdefault(idx.size, []).append((j, idx))
-        for g, items in groups.items():
-            mat = np.empty((len(items), g), dtype=np.int64)
-            for row, (_j, idx) in enumerate(items):
-                mat[row] = idx.astype(np.int64)
-            sc = self.profiles[:, mat].mean(axis=2)  # [n_langs, K]
-            best = sc.argmax(axis=0)
-            masked = sc.copy()
-            masked[best, np.arange(sc.shape[1])] = -np.inf
-            second = masked.max(axis=0)
-            for col, (j, _idx) in enumerate(items):
-                b = int(best[col])
-                langs[j] = self.langs[b]
-                margins[j] = float(sc[b, col] - second[col])
-        return langs, margins
+        (same scores as ``predict``; the margin is a difference of two
+        entries of the same per-row score vector)."""
+        rows, sc = self._batch_scores(texts)
+        at = np.arange(len(rows))
+        best = sc.argmax(axis=1)
+        top = sc[at, best]
+        sc[at, best] = -np.inf
+        margins = np.zeros(len(texts))
+        margins[rows] = top - sc.max(axis=1)
+        return self._labels(len(texts), rows, best), margins.tolist()
 
 
 # --------------------------------------------------------------------------
@@ -377,38 +351,6 @@ _HASH_BASE = np.uint64(1099511628211)
 _HASH_SEED = np.uint64(14695981039346656037)
 
 
-def _hash_ngrams_batch(
-    texts: list[str], n: int = 3, buckets: int | None = None
-) -> list[np.ndarray]:
-    """Per-text FNV n-gram hashes from ONE concatenated buffer.
-
-    All texts hash in three numpy passes over a single byte array; each
-    text's grams are the slice of window positions fully inside it, so
-    every value equals ``_hash_ngrams`` on that text alone (windows that
-    straddle a boundary are simply never selected).  Collapses the
-    per-text numpy fixed costs that dominate short-turn batches."""
-    b = np.uint64(buckets if buckets is not None else PPL_BUCKETS)
-    payloads = [t.encode("utf-8") for t in texts]
-    big = np.frombuffer(b"".join(payloads), dtype=np.uint8)
-    if big.size < n:
-        return [np.empty(0, dtype=np.uint64) for _ in texts]
-    windows = np.lib.stride_tricks.sliding_window_view(big, n).astype(np.uint64)
-    h = np.full(windows.shape[0], _HASH_SEED, dtype=np.uint64)
-    for i in range(n):
-        h = (h ^ windows[:, i]) * _HASH_BASE
-    h %= b
-    out: list[np.ndarray] = []
-    off = 0
-    for p in payloads:
-        ln = len(p)
-        if ln < n:
-            out.append(np.empty(0, dtype=np.uint64))
-        else:
-            out.append(h[off : off + ln - n + 1])
-        off += ln
-    return out
-
-
 def _hash_ngrams(text: str, n: int = 3, buckets: int | None = None) -> np.ndarray:
     """FNV-1a over byte n-grams, vectorized; deterministic across platforms."""
     data = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
@@ -419,6 +361,53 @@ def _hash_ngrams(text: str, n: int = 3, buckets: int | None = None) -> np.ndarra
     for i in range(n):
         h = (h ^ windows[:, i]) * _HASH_BASE
     return h % np.uint64(buckets if buckets is not None else PPL_BUCKETS)
+
+
+def _gram_means(
+    texts: list[str], table: np.ndarray, min_grams: int = 1
+) -> tuple[np.ndarray, np.ndarray]:
+    """For every text with at least ``min_grams`` FNV trigrams (hashed as
+    ``_hash_ngrams(text, 3, len(table))``), the mean of ``table``'s rows at
+    its grams: returns (those texts' positions, their means).
+
+    All texts hash in one pass over their concatenated UTF-8 bytes, XOR-
+    multiplying shifted views; a text's grams are the windows that start
+    inside it and fit in it.  Texts are grouped by gram count with one
+    stable argsort, and each group of K texts with g grams is one [K, g]
+    index gather and one mean over the gram axis.  That mean adds each
+    text's grams in the order the per-row methods do: pairwise along a
+    contiguous [K, g] gram axis for a 1-D table
+    (``PerplexityModel.score_one``), and gram by gram for a ``[buckets,
+    langs]`` table (``LangIdModel.predict_one``), where a [g, K, langs]
+    gather sums each gram into all K * langs lanes at once.  So every
+    mean is bit-identical to the per-row one, and no numpy call runs per
+    text."""
+    n = 3
+    payloads = [t.encode("utf-8") for t in texts]
+    lens = np.fromiter(map(len, payloads), dtype=np.int64, count=len(payloads))
+    order = np.argsort(np.maximum(lens - (n - 1), 0), kind="stable")
+    ranked = np.maximum(lens[order] - (n - 1), 0)
+    lo = int(np.searchsorted(ranked, max(min_grams, 1)))
+    if lo == len(ranked):
+        return order[lo:], np.empty((0, *table.shape[1:]))
+    big = np.frombuffer(b"".join(payloads), dtype=np.uint8)
+    h = np.full(big.size - (n - 1), _HASH_SEED, dtype=np.uint64)
+    for i in range(n):
+        h ^= big[i : i + h.size]
+        h *= _HASH_BASE
+    h %= np.uint64(len(table))
+    grams = h.view(np.int64)  # every bucket is < 2**63
+    starts = np.cumsum(lens) - lens
+    cuts = [lo, *(lo + 1 + np.flatnonzero(np.diff(ranked[lo:]))).tolist(), len(ranked)]
+    means = []
+    for a, b in zip(cuts, cuts[1:]):
+        firsts, offsets = starts[order[a:b]], np.arange(ranked[a])
+        if table.ndim == 1:
+            means.append(np.take(table, grams[firsts[:, None] + offsets]).mean(axis=1))
+        else:
+            at = grams[offsets[:, None] + firsts]
+            means.append(np.take(table, at, axis=0).mean(axis=0))
+    return order[lo:], np.concatenate(means)
 
 
 @dataclass
@@ -449,27 +438,11 @@ class PerplexityModel:
         return float(math.exp(-mean_logp))
 
     def score(self, texts: list[str | None]) -> list[float]:
-        """Batch scoring, BIT-IDENTICAL to ``score_one`` per row (same
-        group-by-gram-count gather as ``LangIdModel.predict``; the final
-        ``math.exp`` stays the scalar libm call ``score_one`` makes)."""
-        n = len(texts)
-        out: list[float] = [self.empty_ppl] * n
-        present = [
-            (j, " ".join(t.lower().split()))
-            for j, t in enumerate(texts)
-            if t is not None
-        ]
-        hashed = _hash_ngrams_batch([norm for _j, norm in present])
-        groups: dict[int, list[tuple[int, np.ndarray]]] = {}
-        for (j, _norm), idx in zip(present, hashed):
-            if idx.size == 0:
-                continue
-            groups.setdefault(idx.size, []).append((j, idx))
-        for g, items in groups.items():
-            mat = np.empty((len(items), g), dtype=np.int64)
-            for row, (_j, idx) in enumerate(items):
-                mat[row] = idx.astype(np.int64)
-            means = self.logprob[mat].mean(axis=1)  # [K]
-            for col, (j, _idx) in enumerate(items):
-                out[j] = float(math.exp(-float(means[col])))
-        return out
+        """Batch scoring, BIT-IDENTICAL to ``score_one`` per row (see
+        :func:`_gram_means`); the final ``math.exp`` stays the scalar libm
+        call ``score_one`` makes."""
+        normalized = ["" if t is None else " ".join(t.lower().split()) for t in texts]
+        rows, means = _gram_means(normalized, self.logprob)
+        out = np.full(len(texts), self.empty_ppl)
+        out[rows] = [math.exp(-m) for m in means.tolist()]
+        return out.tolist()

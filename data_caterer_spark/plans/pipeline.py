@@ -158,22 +158,3 @@ class QualityFilterPipeline:
             "scrub_hits", TOXICITY_RULE_ID
         )
         return df.withColumn("keep", keep).drop("heur_hits")
-
-    # ------------------------------------------------------------------
-    def metrics(self, labeled: DataFrame) -> DataFrame:
-        """Rule-hit metrics sidecar rows (reference analog:
-        ``ValidationResult``/``SinkResult`` summaries, ResultModels.scala:
-        36-51).  One aggregate pass: totals + per-rule hit counts."""
-        totals = labeled.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.count_if(F.col("keep")).alias("kept"),
-        ).withColumn("rule_id", F.lit("__total__"))
-        per_rule = (
-            labeled.select(F.explode("rule_hits").alias("rule_id"))
-            .groupBy("rule_id")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("kept", F.lit(None).cast("long"))
-        )
-        return totals.select("rule_id", "rows", "kept").unionByName(
-            per_rule.select("rule_id", "rows", "kept")
-        )

@@ -1,20 +1,38 @@
-"""The shared model stage (functions/scoring.py) with non-default models.
+"""The shared model stage (functions/scoring.py) and the batch kernels
+behind it (functions/textcore.py).
 
 Every public model stage must score each row exactly as the model's
 per-row method does — with a custom model, not just the default one —
 map NULL and empty text the same way, and leave no temporary struct
-column behind."""
+column behind.  The batch kernels must equal the per-row methods bit
+for bit, and keep the bits they had before the grouped gather was
+rewritten (a pinned digest)."""
 
 from __future__ import annotations
 
-import pytest
+import hashlib
+import importlib
+import struct
+import sys
+import zipfile
+import zipimport
 
+import numpy as np
+import pytest
+from hypothesis import given, settings, strategies as st
+
+from data_caterer_spark.fixtures import generate_transcripts
+from data_caterer_spark.functions import scoring
 from data_caterer_spark.functions.langid import (
     with_language,
     with_language_margin,
 )
 from data_caterer_spark.functions.perplexity import with_perplexity
-from data_caterer_spark.functions.scoring import with_model_scores
+from data_caterer_spark.functions.scoring import (
+    default_langid,
+    default_ppl,
+    with_model_scores,
+)
 from data_caterer_spark.functions.textcore import LangIdModel, PerplexityModel
 
 LM = LangIdModel.train(
@@ -26,6 +44,20 @@ LM = LangIdModel.train(
 )
 PM = PerplexityModel.train("lorem ipsum dolor sit amet consectetur adipiscing " * 20)
 
+# texts whose case mapping, whitespace or UTF-8 length is unusual: a
+# batch kernel that cleaned or split the whole batch at once would differ
+# from the per-row methods on them
+EDGE_TEXTS = [
+    "a",
+    "ab",
+    "\x00",
+    "İ ẞ Σ Ÿ \u212a",
+    "ΣΑΣ the quick brown fox ΟΔΟΣ",
+    "lorem\x1cipsum\x1ddolor\x1esit\x1famet\x85consectetur\u3000adipiscing",
+    "\x00the quick brown\x00fox jumps",
+    ("the quick brown fox İẞ dolor sit Ÿ amet \u212a " * 260)[:10_500],
+]
+
 TEXTS = [
     None,
     "",
@@ -34,6 +66,7 @@ TEXTS = [
     "lorem ipsum dolor sit amet",
     "ok",
     "mixed: the lazy dog dolor sit amet",
+    *EDGE_TEXTS,
 ]
 
 # stage name -> (stage call, expected output columns for one text)
@@ -72,3 +105,119 @@ def test_model_stage_matches_per_row_kernel(spark, name):
     for i, t in enumerate(TEXTS):
         row = got[i]
         assert {f: row[f] for f in fields} == expected(t), (name, t)
+
+
+def test_model_stage_broadcasts_each_model_once_per_context(spark, monkeypatch):
+    sc = spark.sparkContext
+    calls = []
+    real = sc.broadcast
+    monkeypatch.setattr(sc, "broadcast", lambda v: calls.append(v) or real(v))
+    lm = LangIdModel.train({"aa": "the lazy dog " * 20, "bb": "dolor sit amet " * 20})
+    pm = PerplexityModel.train("dolor sit amet " * 20)
+    df = spark.createDataFrame([(0, "the lazy dog sat")], "id int, text string")
+    for _ in range(3):
+        with_model_scores(df, langid_model=lm, ppl_model=pm).collect()
+    with_language(df, model=lm).collect()
+    assert [id(v) for v in calls] == [id(lm), id(pm)]
+
+
+def bits(value):
+    """A kernel output as comparable bytes: floats by their IEEE-754 bits."""
+    if isinstance(value, (tuple, list)):
+        return tuple(bits(v) for v in value)
+    return struct.pack("<d", value) if isinstance(value, float) else value
+
+
+def batch_rows(texts, lm, pm):
+    """Per-row (lang, lang_score, lang_pred, margin, ppl) from the batch
+    kernels, and the same from the per-row methods."""
+    batch = list(zip(*lm.predict(texts), *lm.predict_margin(texts), pm.score(texts)))
+    one = [(*lm.predict_one(t), *lm.predict_margin_one(t), pm.score_one(t)) for t in texts]
+    return batch, one
+
+
+EDGE_ALPHABET = "abcdefghij tns\n\t.,éàçñüß" "İẞΣςŸ\u212a" "\x00\x1c\x1d\x1e\x1f\x85\u3000"
+
+# many rows of one gram count: equal-length texts over letters the
+# cleaning keeps one byte each
+SAME_GRAM_COUNT = st.integers(0, 40).flatmap(
+    lambda k: st.lists(
+        st.text(alphabet="abcdefghijklmnop", min_size=k, max_size=k),
+        min_size=2,
+        max_size=40,
+    )
+)
+
+BATCHES = st.one_of(
+    st.lists(
+        st.one_of(
+            st.none(),
+            st.text(alphabet=EDGE_ALPHABET, max_size=60),
+            st.sampled_from(["", *EDGE_TEXTS]),
+        ),
+        max_size=40,
+    ),
+    SAME_GRAM_COUNT,
+)
+
+
+@given(BATCHES)
+@settings(max_examples=300, deadline=None)
+def test_batch_kernels_equal_per_row_bits(texts):
+    for lm, pm in ((default_langid(), default_ppl()), (LM, PM)):
+        batch, one = batch_rows(texts, lm, pm)
+        assert bits(batch) == bits(one)
+
+
+# computed with the per-text grouped-gather kernels this package shipped
+# before the one-pass gram gather replaced them
+PINNED_DIGEST = "a5388a08f7c5883277505df1ff47664b714e06e8cb8efaec055061483603f7fc"
+
+
+def test_batch_kernels_keep_pinned_bits():
+    texts = [r["text"] for r in generate_transcripts(200, seed=7)]
+    assert len(texts) == 1463 and texts.count(None) == 3
+    lm, pm = default_langid(), default_ppl()
+    langs, scores = lm.predict(texts)
+    mlangs, margins = lm.predict_margin(texts)
+    digest = hashlib.sha256()
+    digest.update("\x00".join(langs).encode())
+    digest.update("\x00".join(mlangs).encode())
+    for xs in (scores, margins, pm.score(texts)):
+        digest.update(np.asarray(xs, dtype="<f8").tobytes())
+    assert digest.hexdigest() == PINNED_DIGEST
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="3.13+ zipimport is lazy")
+def test_zip_invalidation_rereads_only_changed_archives(tmp_path, monkeypatch):
+    archive = tmp_path / "mods.zip"
+
+    def write(body):
+        with zipfile.ZipFile(archive, "w") as zf:
+            zf.writestr("lazy_zip_probe.py", body)
+
+    write("VALUE = 1\n")
+    monkeypatch.syspath_prepend(str(archive))
+    monkeypatch.delitem(sys.modules, "lazy_zip_probe", raising=False)
+    assert importlib.import_module("lazy_zip_probe").VALUE == 1
+    # restored at teardown, so the replacement stays local to this test
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
+    )
+    scoring._stat_gated_zip_invalidation()
+    scoring._stat_gated_zip_invalidation()  # installing twice wraps once
+    importlib.invalidate_caches()  # stamps every importer
+    reads = []
+    real_read = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda path: reads.append(path) or real_read(path)
+    )
+    for _ in range(3):
+        importlib.invalidate_caches()
+    assert str(archive) not in reads
+
+    write("VALUE = 2  # rewritten in place, with a new size\n")
+    importlib.invalidate_caches()
+    assert reads.count(str(archive)) == 1
+    del sys.modules["lazy_zip_probe"]
+    assert importlib.import_module("lazy_zip_probe").VALUE == 2
