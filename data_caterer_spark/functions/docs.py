@@ -87,14 +87,14 @@ def heuristic_language(text: str | Column, min_votes: int = 1) -> Column:
 
 
 def quality_score(
-    text: str | Column,
+    text: str,
     ideal_len: tuple[int, int] = (80, 4000),
     stopwords: list[str] | None = None,
 ) -> Column:
     """Bounded [0,1] quality blend: length window, symbol ratio, repetition,
     stopword presence.  Weights are fixed and documented (0.3/0.25/0.25/0.2)
     so scores are comparable across runs."""
-    c = F.col(text) if isinstance(text, str) else text
+    c = F.col(text)
     sw = stopwords or STOPWORDS["en"]
     n = F.length(c)
     len_ok = F.when(
@@ -104,10 +104,10 @@ def quality_score(
         .otherwise(F.lit(float(ideal_len[1])) / n.cast("double"))
     )
     sym = F.lit(1.0) - F.least(
-        T.symbol_ratio(c) * 2, F.lit(1.0)
+        T.symbol_ratio(text) * 2, F.lit(1.0)
     )  # >0.5 symbols => 0
-    rep = F.lit(1.0) - T.word_repetition_ratio(c)
-    sw_presence = F.least(T.stopword_ratio(c, sw) * 5, F.lit(1.0))
+    rep = F.lit(1.0) - T.word_repetition_ratio(text)
+    sw_presence = F.least(T.stopword_ratio(text, sw) * 5, F.lit(1.0))
     score = (
         len_ok * 0.3 + sym * 0.25 + rep * 0.25 + sw_presence * 0.2
     )

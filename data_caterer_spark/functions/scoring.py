@@ -4,7 +4,8 @@
 package.  It broadcasts each model OBJECT once per SparkContext and
 reuses that broadcast in every later plan (a PySpark worker caches
 ``Broadcast.value`` across the tasks it runs, so each model is unpickled
-once per Python worker per session), maps NULL texts to ``None``, runs a
+once per Python worker per session), builds the UDF over them once too
+(a later plan only applies it), maps NULL texts to ``None``, runs a
 per-batch kernel, and unpacks the kernel's columns into named output
 columns.
 ``with_language`` / ``with_language_margin`` (functions/langid.py),
@@ -31,8 +32,7 @@ from typing import Any, Callable, Iterator, Sequence
 
 import pandas as pd
 from pyspark import Broadcast, SparkContext
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import pandas_udf
 
 from .textcore import LangIdModel, PerplexityModel
@@ -48,20 +48,25 @@ def default_ppl() -> PerplexityModel:
     return PerplexityModel.train()
 
 
-# The live SparkContext and its broadcast of each model object passed to
-# model_stage, keyed by id(model); holding the model keeps that id unique.
-# PySpark runs one SparkContext per process, so a new one replaces the lot.
-_broadcasts: tuple[SparkContext | None, dict[int, tuple[Any, Broadcast]]] = (None, {})
+# The live SparkContext and what model_stage built on it: the broadcast of
+# each model object, keyed by id(model) (holding the model keeps that id
+# unique), and the last (kernel, UDF) of each (model ids, fields).  PySpark
+# runs one SparkContext per process, so a new one replaces the lot.
+_built: tuple[SparkContext | None, dict[Any, Any]] = (None, {})
+
+
+def _held(sc: SparkContext) -> dict[Any, Any]:
+    global _built
+    if _built[0] is not sc:
+        _built = (sc, {})
+    return _built[1]
 
 
 def _broadcast(sc: SparkContext, model: Any) -> Broadcast:
     """The one broadcast of ``model`` on ``sc``.  A model object must not
     be mutated after its first ``model_stage``: later plans reuse the
     broadcast value."""
-    global _broadcasts
-    owner, held = _broadcasts
-    if owner is not sc:
-        _broadcasts = owner, held = sc, {}
+    held = _held(sc)
     if id(model) not in held:
         held[id(model)] = (model, sc.broadcast(model))
     return held[id(model)][1]
@@ -104,8 +109,24 @@ def model_stage(
 ) -> DataFrame:
     """Add ``fields`` (output name -> Spark SQL type) computed over Arrow
     batches of ``text_col``: ``kernel(*models, texts)`` returns one list
-    per field, in field order, with NULL texts passed as ``None``."""
+    per field, in field order, with NULL texts passed as ``None``.  A
+    later call with the same models, fields and ``kernel`` object reuses
+    the UDF instead of pickling a new one."""
     sc = df.sparkSession.sparkContext
+    held = _held(sc)
+    key = (tuple(map(id, models)), tuple(fields.items()))
+    if held.get(key, (None,))[0] is not kernel:
+        held[key] = (kernel, _stage_udf(sc, fields, models, kernel))
+    scores = held[key][1](text_col)
+    return df.withColumns({n: scores[n] for n in fields})
+
+
+def _stage_udf(
+    sc: SparkContext,
+    fields: dict[str, str],
+    models: Sequence[Any],
+    kernel: Callable[..., Sequence[list]],
+) -> Callable[[str], Column]:
     bcs = [_broadcast(sc, m) for m in models]
     names = list(fields)
 
@@ -117,9 +138,7 @@ def model_stage(
             texts = [None if pd.isna(t) else t for t in series]
             yield pd.DataFrame(dict(zip(names, kernel(*local, texts))))
 
-    tmp = "__model"
-    df = df.withColumn(tmp, _stage(F.col(text_col)))
-    return df.withColumns({n: F.col(f"{tmp}.{n}") for n in names}).drop(tmp)
+    return _stage
 
 
 def with_model_scores(
@@ -134,5 +153,9 @@ def with_model_scores(
         text_col,
         {"lang": "string", "lang_score": "double", "ppl": "double"},
         (langid_model or default_langid(), ppl_model or default_ppl()),
-        lambda lm, pm, texts: (*lm.predict(texts), pm.score(texts)),
+        _langid_and_ppl,
     )
+
+
+def _langid_and_ppl(lm: LangIdModel, pm: PerplexityModel, texts: list) -> tuple:
+    return (*lm.predict(texts), pm.score(texts))

@@ -1,10 +1,13 @@
 """PII/toxicity scrub stage: the one Spark implementation of the bank.
 
-:func:`scrub_columns` runs ``textcore.SCRUB_BANK`` (total order) as a
-staged chain of JVM ``regexp_replace`` calls — pure Catalyst, whole-stage
-codegen, zero Python.  The pure-Python ``textcore.scrub_text`` (used by
-the reference labeler) is the independent reference it is checked
-against.
+:func:`scrub_sql` writes ``textcore.SCRUB_BANK`` (total order) as one
+Spark SQL select-list: a per-row sketch, then one lateral column alias per
+bank step, ``CASE WHEN <gate> THEN regexp_replace(<prev>, ...) ELSE <prev>
+END``, then the scrubbed text and the hit flags.  The pipeline's label
+stage splices it in; :func:`scrub_columns` applies it alone.  Pure
+Catalyst, whole-stage codegen, zero Python.  The pure-Python
+``textcore.scrub_text`` (used by the reference labeler) is the independent
+reference it is checked against.
 
 Byte-equality with the reference labeler holds on the fixtures (pinned by
 tests/test_parity.py) because the patterns are written in the common
@@ -46,9 +49,9 @@ mapping of non-ASCII text depends on the JVM locale, while Java's
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
+from ..operators.rules import lit_sql, with_sql_columns
 from .textcore import SCRUB_BANK
 
 # rule id -> (needs "@", least ASCII digit count) of any text the rule's
@@ -64,30 +67,24 @@ SCRUB_GATES: dict[str, tuple[bool, int]] = {
 UNGATED = frozenset({"toxicity"})
 
 _DIGITS = "__scrub_digits"
+_STEPS = [f"__scrub_{i}" for i in range(len(SCRUB_BANK))]
+#: the lateral aliases of :func:`scrub_sql`, dropped by its caller
+TEMPORARIES = (_DIGITS, *_STEPS)
 
 
-def _gate(text: Column, digits: Column, needs_at: bool, min_digits: int) -> Column:
+def _gate_sql(text: str, needs_at: bool, min_digits: int) -> str:
     """A ``SCRUB_GATES`` entry as a condition on the raw text's sketch."""
-    if not needs_at:
-        return digits >= min_digits
-    has_at = F.instr(text, "@") > 0
-    return has_at if min_digits == 0 else has_at & (digits >= min_digits)
+    at = [f"instr({text}, '@') > 0"] if needs_at else []
+    digits = [f"{_DIGITS} >= {min_digits}"] if min_digits else []
+    return " AND ".join(at + digits)
 
 
-def _quote(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-def scrub_columns(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "scrubbed_text",
-    hits_col: str | None = "scrub_hits",
-) -> DataFrame:
-    """Staged scrub: each bank step is its own column referencing the
-    previous step, and runs its regex only on rows its sketch gate admits
-    (a gated-off step passes the previous step through unchanged).  A
-    gated step references the previous step twice (regex input and
+def scrub_sql(text_col: str = "text", out_col: str = "scrubbed_text") -> list[str]:
+    """The staged scrub as one select-list: the sketch, then one lateral
+    alias per bank step that references the previous step and runs its
+    regex only on rows its sketch gate admits (a gated-off step passes the
+    previous step through unchanged), then ``out_col`` and ``scrub_hits``.
+    A gated step references the previous step twice (regex input and
     pass-through) and its hit flag references it again, so Catalyst's
     CollapseProject keeps each intermediate a column of its own: every
     regex executes at most ONCE per row.
@@ -99,28 +96,26 @@ def scrub_columns(
     card step has replaced it; flagging against the raw text would
     diverge.)  A gated-off step leaves the text unchanged, so its flag is
     false."""
-    # Column objects are reused: each new one is a JVM round trip, and the
-    # chain is rebuilt on every pipeline run
-    text = F.col(text_col)
-    df = df.withColumn(_DIGITS, F.regexp_count(text, F.lit("[0-9]")))
-    digits = F.col(_DIGITS)
-    steps = []
-    prev_name, prev = text_col, text
-    for i, (rid, pattern, replacement) in enumerate(SCRUB_BANK):
-        cur = f"__scrub_{i}"
-        step = F.regexp_replace(prev, pattern, replacement)
+    exprs = [f"regexp_count({text_col}, '[0-9]') AS {_DIGITS}"]
+    flags = []
+    prev = text_col
+    for (rid, pattern, replacement), cur in zip(SCRUB_BANK, _STEPS):
+        step = f"regexp_replace({prev}, {lit_sql(pattern)}, {lit_sql(replacement)})"
         if rid in SCRUB_GATES:
-            gate = _gate(text, digits, *SCRUB_GATES[rid])
-            step = F.when(gate, step).otherwise(prev)
-        df = df.withColumn(cur, step)
-        steps.append((rid, prev_name, cur))
-        prev_name, prev = cur, F.col(cur)
-    out = {out_col: prev}
-    if hits_col:
-        # one SQL expression instead of ~20 Column round trips
-        flags = ", ".join(
-            f"CASE WHEN {_quote(cur)} != {_quote(prev)} THEN '{rid}' END"
-            for rid, prev, cur in steps
-        )
-        out[hits_col] = F.expr(f"array_compact(array({flags}))")
-    return df.withColumns(out).drop(_DIGITS, *[cur for _, _, cur in steps])
+            gate = _gate_sql(text_col, *SCRUB_GATES[rid])
+            step = f"CASE WHEN {gate} THEN {step} ELSE {prev} END"
+        exprs.append(f"{step} AS {cur}")
+        flags.append(f"CASE WHEN {cur} != {prev} THEN {lit_sql(rid)} END")
+        prev = cur
+    return exprs + [
+        f"{prev} AS {out_col}",
+        f"array_compact(array({', '.join(flags)})) AS scrub_hits",
+    ]
+
+
+def scrub_columns(
+    df: DataFrame, text_col: str = "text", out_col: str = "scrubbed_text"
+) -> DataFrame:
+    """Add ``out_col`` and ``scrub_hits`` (:func:`scrub_sql`) in one
+    projection.  Catalyst prunes the hit flags when nothing selects them."""
+    return with_sql_columns(df, scrub_sql(text_col, out_col), TEMPORARIES)

@@ -7,7 +7,10 @@ agree (see textcore module docstring).
 
 These are the fast path: no Python crosses the JVM boundary for any of
 them — the reference's own rule engine is likewise pure Spark SQL
-(``ValidationOperations.scala:13``).
+(``ValidationOperations.scala:13``).  The kernels the pipeline shares are
+written once, as SQL text over an operand (a column name or expression):
+the feature stage splices that text into its select-list, and the
+standalone Column functions parse it.
 """
 
 from __future__ import annotations
@@ -15,13 +18,19 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..operators.rules import lit_sql, with_sql_columns
+
 WS_PATTERN = "[ \\t\\n\\r\\f]+"
 WS_CHARS = " \t\n\r\f"
-NON_ALNUM_PATTERN = "[^A-Za-z0-9 \\t\\n\\r\\f]"
 
 
 def _col(c: str | Column) -> Column:
     return F.col(c) if isinstance(c, str) else c
+
+
+# tokens / tokens_lower stay Column builders (webfilters applies them to
+# the Python lambda variables of higher-order functions, which SQL text
+# cannot name); _split_sql is the same expression as SQL text.
 
 
 def tokens(text: str | Column) -> Column:
@@ -39,13 +48,18 @@ def tokens(text: str | Column) -> Column:
     )
 
 
+def _split_sql(t: str) -> str:
+    b = f"btrim({t}, {lit_sql(WS_CHARS)})"
+    return (
+        f"CASE WHEN {b} = '' THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE split({b}, {lit_sql(WS_PATTERN)}) END"
+    )
+
+
 def tokens_lower(text: str | Column) -> Column:
     """Lowercased tokens — lowering the whole string once instead of a
     per-token ``transform`` (same result, no interpreted lambda)."""
-    t = F.btrim(F.lower(_col(text)), F.lit(WS_CHARS))
-    return F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, WS_PATTERN)
-    )
+    return tokens(F.lower(_col(text)))
 
 
 def normalized(text: str | Column) -> Column:
@@ -55,29 +69,34 @@ def normalized(text: str | Column) -> Column:
     return F.lower(F.regexp_replace(t, WS_PATTERN, " "))
 
 
-def token_count(text: str | Column) -> Column:
+def _token_count_sql(t: str, toks: str) -> str:
     # explicit null guard: legacy (non-ANSI) mode has size(NULL) == -1,
     # which would silently flip null-text rule semantics
-    c = _col(text)
-    return F.when(c.isNull(), F.lit(None).cast("int")).otherwise(
-        F.size(tokens(c))
-    )
+    return f"CASE WHEN {t} IS NULL THEN CAST(NULL AS INT) ELSE size({toks}) END"
+
+
+def token_count(text: str) -> Column:
+    return F.expr(_token_count_sql(text, _split_sql(text)))
 
 
 REP_TOKEN_CAP = 200  # keep in sync with textcore.REP_TOKEN_CAP
 
 
-def word_repetition_ratio(text: str | Column) -> Column:
+def _rep_ratio_sql(t: str, toks: str) -> str:
+    capped = f"slice({toks}, 1, {REP_TOKEN_CAP})"
+    n = f"CAST(size({capped}) AS DOUBLE)"
+    ratio = (
+        f"CASE WHEN size({capped}) = 0 THEN 0.0D "
+        f"ELSE 1.0D - CAST(size(array_distinct({capped})) AS DOUBLE) / {n} END"
+    )
+    return f"CASE WHEN {t} IS NULL THEN CAST(NULL AS DOUBLE) ELSE {ratio} END"
+
+
+def word_repetition_ratio(text: str) -> Column:
     """1 - distinct/total over the first REP_TOKEN_CAP lowercased tokens
     (``textcore.word_repetition_ratio``).  The cap bounds the per-row
     distinct-set cost on pathological mega-documents."""
-    c = _col(text)
-    toks = F.slice(tokens_lower(c), 1, REP_TOKEN_CAP)
-    n = F.size(toks)
-    ratio = F.when(n == 0, F.lit(0.0)).otherwise(
-        F.lit(1.0) - F.size(F.array_distinct(toks)).cast("double") / n.cast("double")
-    )
-    return F.when(c.isNull(), F.lit(None).cast("double")).otherwise(ratio)
+    return F.expr(_rep_ratio_sql(text, _split_sql(f"lower({text})")))
 
 
 ALNUM_WS_CHARS = (
@@ -85,7 +104,15 @@ ALNUM_WS_CHARS = (
 )
 
 
-def symbol_ratio(text: str | Column) -> Column:
+def _symbol_ratio_sql(t: str) -> str:
+    symbols = f"length(translate({t}, {lit_sql(ALNUM_WS_CHARS)}, ''))"
+    return (
+        f"CASE WHEN length({t}) = 0 THEN 0.0D "
+        f"ELSE CAST({symbols} AS DOUBLE) / CAST(length({t}) AS DOUBLE) END"
+    )
+
+
+def symbol_ratio(text: str) -> Column:
     """Non-alphanumeric character fraction (``textcore.symbol_ratio``).
 
     ``translate`` deletes the keep-set char-by-char with a plain lookup
@@ -93,17 +120,17 @@ def symbol_ratio(text: str | Column) -> Column:
     (Java regex negated classes were the single slowest kernel in the
     pipeline) and byte-identical in result.
     """
-    c = _col(text)
-    n = F.length(c)
-    symbols = F.length(F.translate(c, ALNUM_WS_CHARS, ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        symbols.cast("double") / n.cast("double")
-    )
+    return F.expr(_symbol_ratio_sql(text))
 
 
-def char_run_flag(text: str | Column, run: int = 10) -> Column:
+def _char_run_sql(t: str, run: int) -> str:
+    pattern = "(.)\\1{%d,}" % (run - 1)
+    return f"{t} RLIKE {lit_sql(pattern)}"
+
+
+def char_run_flag(text: str, run: int = 10) -> Column:
     """True when any single character repeats >= ``run`` times in a row."""
-    return _col(text).rlike(f"(.)\\1{{{run - 1},}}")
+    return F.expr(_char_run_sql(text, run))
 
 
 def fingerprint(text: str | Column) -> Column:
@@ -124,40 +151,34 @@ def stopword_ratio(text: str | Column, stopwords: list[str]) -> Column:
     )
 
 
-def with_text_features(df, text_col: str = "text", char_run: int = 10):
-    """Add the heuristic-rule feature block in a token-shared staged plan.
+#: the lowered token array, a lateral alias of the feature stage
+TOKS = "__toks"
 
-    The lowered token array is materialized once (``__toks``) and reused by
-    ``n_tokens`` and ``rep_ratio`` — multiply-referenced, so CollapseProject
-    keeps it a real column instead of re-splitting the text per consumer.
-    Each output column equals its standalone kernel (pinned by
-    tests/test_parity.py): lowering does not change the token count.
+
+def text_features_sql(char_run: int = 10) -> list[str]:
+    """The heuristic-rule feature stage as one select-list.
+
+    The lowered token array is the lateral alias ``__toks``, reused by
+    ``n_tokens`` and ``rep_ratio`` — multiply-referenced, so
+    CollapseProject keeps it a real column instead of re-splitting the
+    text per consumer.  The caller drops ``__toks``.  Each output column
+    equals its standalone kernel (pinned by tests/test_parity.py):
+    lowering does not change the token count.
     """
-    from pyspark.sql import functions as _F
+    t = "text"
+    return [
+        f"{_split_sql(f'lower({t})')} AS {TOKS}",
+        f"length({t}) AS n_chars",
+        f"{_token_count_sql(t, TOKS)} AS n_tokens",
+        f"{_rep_ratio_sql(t, TOKS)} AS rep_ratio",
+        f"{_symbol_ratio_sql(t)} AS symbol_ratio",
+        f"{_char_run_sql(t, char_run)} AS has_char_run",
+    ]
 
-    c = _col(text_col)
-    toks_col = "__toks"
-    df = df.withColumn(toks_col, tokens_lower(c))
-    toks = _F.col(toks_col)
-    n = _F.size(toks)
-    n_tokens = _F.when(c.isNull(), _F.lit(None).cast("int")).otherwise(n)
-    toks_capped = _F.slice(toks, 1, REP_TOKEN_CAP)
-    nc = _F.size(toks_capped)
-    rep = _F.when(nc == 0, _F.lit(0.0)).otherwise(
-        _F.lit(1.0)
-        - _F.size(_F.array_distinct(toks_capped)).cast("double") / nc.cast("double")
-    )
-    rep = _F.when(c.isNull(), _F.lit(None).cast("double")).otherwise(rep)
-    df = df.withColumns(
-        {
-            "n_chars": _F.length(c),
-            "n_tokens": n_tokens,
-            "rep_ratio": rep,
-            "symbol_ratio": symbol_ratio(c),
-            "has_char_run": char_run_flag(c, char_run),
-        }
-    )
-    return df.drop(toks_col)
+
+def with_text_features(df, char_run: int = 10):
+    """Add the feature block of :func:`text_features_sql` in one projection."""
+    return with_sql_columns(df, text_features_sql(char_run), [TOKS])
 
 
 PRINTABLE_ASCII = "".join(chr(i) for i in range(0x20, 0x7F))

@@ -119,15 +119,13 @@ def pii_provenance(
     mention"."""
     from ..functions.scrub import scrub_columns
 
-    flagged = scrub_columns(
-        df, text_col=text_col, out_col="__sc", hits_col="__hits"
-    )
+    flagged = scrub_columns(df, text_col=text_col, out_col="__sc")
     g = flagged.select(
         F.col(conv_col),
         F.col(idx_col),
         F.col(role_col),
         F.explode(
-            F.array_intersect("__hits", F.lit(list(kinds)))
+            F.array_intersect("scrub_hits", F.lit(list(kinds)))
         ).alias("kind"),
     )
     first = F.min(F.struct(F.col(idx_col), F.col(role_col)))

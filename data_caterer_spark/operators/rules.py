@@ -50,6 +50,18 @@ def lit_sql(value: Any) -> str:
     return repr(value)
 
 
+def with_sql_columns(
+    df: DataFrame, exprs: Sequence[str], temporaries: Sequence[str] = ()
+) -> DataFrame:
+    """Add the ``<sql> AS <name>`` select-list ``exprs`` in one projection
+    (a name may be a lateral alias of the ones before it), replacing input
+    columns of the same names as ``withColumns`` does, then drop
+    ``temporaries``."""
+    names = {e.rpartition(" AS ")[2] for e in exprs}
+    clash = [c for c in df.columns if c in names]
+    return df.drop(*clash).selectExpr("*", *exprs).drop(*temporaries)
+
+
 @dataclass(frozen=True)
 class Rule:
     """One keep predicate.  ``expr`` is boolean Spark SQL; True ⇒ row passes.
@@ -277,25 +289,35 @@ class RuleSet:
     def __len__(self) -> int:
         return len(self.rules)
 
-    def hits_column(self) -> Column:
+    def hits_sql(self) -> str:
+        """``rule_hits`` as Spark SQL."""
         if not self.rules:
-            return F.array().cast("array<string>")
-        # one SQL expression: each Column operation is a py4j round trip,
-        # and the pipeline rebuilds this column on every run
+            return "CAST(array() AS ARRAY<STRING>)"
         hits = ", ".join(
             f"CASE WHEN ({r.expr}) = false THEN {lit_sql(r.rule_id)} END"
             for r in self.rules
         )
-        return F.expr(f"array_compact(array({hits}))")
+        return f"array_compact(array({hits}))"
+
+    def keep_sql(self, hits: str | None = None) -> str:
+        """``keep`` as Spark SQL over ``hits`` (default: :meth:`hits_sql`)."""
+        if not self._drop_ids():
+            return "true"
+        hits = hits or self.hits_sql()
+        return f"size(array_intersect({hits}, {self._drop_ids()})) = 0"
+
+    def _drop_ids(self) -> str:
+        ids = [lit_sql(r.rule_id) for r in self.rules if r.severity == SEVERITY_DROP]
+        return f"array({', '.join(ids)})" if ids else ""
+
+    def hits_column(self) -> Column:
+        return F.expr(self.hits_sql())
 
     def keep_column(self, hits_col: Column | None = None) -> Column:
-        drop_ids = [r.rule_id for r in self.rules if r.severity == SEVERITY_DROP]
-        if not drop_ids:
-            return F.lit(True)
-        if hits_col is None:
-            hits_col = self.hits_column()
-        drop_arr = F.array(*[F.lit(i) for i in drop_ids])
-        return F.size(F.array_intersect(hits_col, drop_arr)) == 0
+        # a Column cannot be spliced into SQL text
+        if hits_col is None or not self._drop_ids():
+            return F.expr(self.keep_sql())
+        return F.size(F.array_intersect(hits_col, F.expr(self._drop_ids()))) == 0
 
     def apply(
         self,

@@ -20,30 +20,27 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .rules import with_sql_columns
+
 DEFAULT_SALT_BUCKETS = 16
 
 
-def with_turn_order_features(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    role_col: str = "role",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming-frame window features: prev role, turn contiguity, ts order.
+_BY_TURN = "OVER (PARTITION BY conv_id ORDER BY turn_idx)"
+#: Streaming-frame window features as one select-list: prev role, turn
+#: contiguity, ts order.  One shuffle on conv_id (all four share one
+#: window spec); lag and row_number evaluate streamingly after the sort,
+#: so hot conversations cost sort time, not memory.
+TURN_ORDER_SQL = (
+    f"lag(role) {_BY_TURN} AS prev_role",
+    f"lag(turn_idx) {_BY_TURN} AS prev_turn_idx",
+    f"lag(ts) {_BY_TURN} AS prev_ts",
+    f"row_number() {_BY_TURN} AS turn_rank",
+)
 
-    One shuffle on ``conv_col``; lag/row_number evaluate streamingly after
-    the sort, so hot conversations cost sort time, not memory.
-    """
-    w = Window.partitionBy(conv_col).orderBy(idx_col)
-    return df.withColumns(
-        {
-            "prev_role": F.lag(role_col).over(w),
-            "prev_turn_idx": F.lag(idx_col).over(w),
-            "prev_ts": F.lag(ts_col).over(w),
-            "turn_rank": F.row_number().over(w),
-        }
-    )
+
+def with_turn_order_features(df: DataFrame) -> DataFrame:
+    """Add the window features of ``TURN_ORDER_SQL`` in one projection."""
+    return with_sql_columns(df, TURN_ORDER_SQL)
 
 
 def salted_conversation_stats(

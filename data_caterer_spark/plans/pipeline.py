@@ -1,18 +1,22 @@
-"""The quality-filter pipeline: one staged DataFrame plan per BASELINE
-north_star —
+"""The quality-filter pipeline: one ordered plan written as Spark SQL text,
+applied like the reference applies its validations, with ``selectExpr``
+(``ValidationOperations.scala:13``) —
 
-    scan → conversation window features → JVM text features
-         → langid + perplexity (one pandas UDF, broadcast models)
-         → heuristic RuleSet (pure Catalyst)
-         → regex scrub (JVM regexp_replace chain)
-         → keep / rule_hits / scrubbed_text
+    text features (T.text_features_sql)  → conv_id window (TURN_ORDER_SQL)
+    → langid + perplexity (one pandas UDF, broadcast models)
+    → labels (with_labels: rule bank, gated scrub chain, rule_hits, keep)
+    → one drop of the stage temporaries
 
-Stage boundaries are chosen so Arrow crosses the JVM↔Python fence exactly
-ONCE (the fused langid+perplexity stage, ``functions/scoring.py``);
-everything else stays inside whole-stage codegen.  Rule ids, thresholds, and evaluation order are the single source
-of truth shared with the pure-Python reference labeler
-(``data_caterer_spark.labeler``), which replays the same rules row-by-row —
-the byte-equality / F1 criterion compares the two.
+Each stage is one select-list whose intermediates (``__toks``,
+``heur_hits``, ``__scrub_digits``, ``__scrub_i``) are lateral column
+aliases, so a build is a few DataFrame calls, not a py4j round trip per
+Column operation.  The public stage functions project the same text.
+Arrow crosses the JVM↔Python fence exactly ONCE (``functions/scoring.py``);
+everything else stays inside whole-stage codegen.  Rule ids, thresholds,
+and evaluation order are the single source of truth shared with the
+pure-Python reference labeler (``data_caterer_spark.labeler``), which
+replays the same rules row-by-row — the byte-equality / F1 criterion
+compares the two.
 
 Reference lineage: each heuristic rule is a data-caterer validation-DSL
 predicate (cited per rule below, ``ValidationBuilder.scala``); the
@@ -24,14 +28,13 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from ..functions import scrub
 from ..functions import text as T
 from ..functions.scoring import with_model_scores
-from ..functions.scrub import scrub_columns
 from ..functions.textcore import SCRUB_BANK, LangIdModel, PerplexityModel
-from ..operators.rules import RuleSet, expr_rule
-from ..operators.windows import with_turn_order_features
+from ..operators.rules import RuleSet, expr_rule, lit_sql, with_sql_columns
+from ..operators.windows import TURN_ORDER_SQL
 
 TOXICITY_RULE_ID = "toxicity"
 #: the flag-only rules that read the previous turn (``prev_*`` window
@@ -66,13 +69,17 @@ class QualityFilterPipeline:
         self.ppl_model = ppl_model
 
     # ------------------------------------------------------------------
+    def _features(self, df: DataFrame) -> DataFrame:
+        # keeps __toks: run drops every temporary once, at the end
+        df = with_sql_columns(df, T.text_features_sql(self.config.char_run))
+        return with_sql_columns(df, TURN_ORDER_SQL)
+
     def with_features(self, df: DataFrame) -> DataFrame:
-        """JVM text features (token-shared staged projection), then window
-        features.  Text features come FIRST so the conv_id exchange
-        materializes them — nothing downstream re-tokenizes, and the
-        shuffle rows carry compact numerics instead of recomputed HOFs."""
-        df = T.with_text_features(df, char_run=self.config.char_run)
-        return with_turn_order_features(df)
+        """Text features, then window features.  Text features come FIRST
+        so the conv_id exchange materializes them — nothing downstream
+        re-tokenizes, and the shuffle rows carry compact numerics instead
+        of recomputed token arrays."""
+        return self._features(df).drop(T.TOKS)
 
     # ------------------------------------------------------------------
     def heuristic_rules(self) -> RuleSet:
@@ -135,26 +142,29 @@ class QualityFilterPipeline:
 
     # ------------------------------------------------------------------
     def run(self, df: DataFrame) -> DataFrame:
-        """Full pipeline.  Adds: prev_* window cols, feature cols, lang,
-        lang_score, ppl, rule_hits, keep, scrubbed_text, scrub_hits."""
-        df = self.with_features(df)
+        """Full pipeline.  Adds: feature cols, prev_* window cols, lang,
+        lang_score, ppl, scrubbed_text, scrub_hits, rule_hits, keep."""
         # both models in ONE Arrow crossing (functions/scoring.py) —
         # outputs byte-identical to the two single-model stages
         df = with_model_scores(
-            df, langid_model=self.langid_model, ppl_model=self.ppl_model
+            self._features(df),
+            langid_model=self.langid_model,
+            ppl_model=self.ppl_model,
         )
         return self.with_labels(df, self.heuristic_rules())
 
     # ------------------------------------------------------------------
     def with_labels(self, df: DataFrame, rules: RuleSet) -> DataFrame:
-        """The label tail shared by batch and stream: heuristic hits, the
-        scrub, ``rule_hits`` (heuristic bank order, then scrub bank
-        order) and ``keep`` (no drop-rule hit and no toxicity hit).  Needs
-        the feature and model columns."""
-        df = df.withColumn("heur_hits", rules.hits_column())
-        df = scrub_columns(df)
-        df = df.withColumn("rule_hits", F.concat("heur_hits", "scrub_hits"))
-        keep = rules.keep_column(F.col("heur_hits")) & ~F.array_contains(
-            "scrub_hits", TOXICITY_RULE_ID
-        )
-        return df.withColumn("keep", keep).drop("heur_hits")
+        """The label stage shared by batch and stream — heuristic hits, the
+        scrub, ``rule_hits`` (heuristic bank order, then scrub bank order)
+        and ``keep`` (no drop-rule hit and no toxicity hit) — then one drop
+        of every stage temporary.  Needs the feature and model columns."""
+        toxic = f"array_contains(scrub_hits, {lit_sql(TOXICITY_RULE_ID)})"
+        labels = [
+            f"{rules.hits_sql()} AS heur_hits",
+            *scrub.scrub_sql(),
+            "concat(heur_hits, scrub_hits) AS rule_hits",
+            f"{rules.keep_sql('heur_hits')} AND NOT {toxic} AS keep",
+        ]
+        temporaries = (T.TOKS, "heur_hits", *scrub.TEMPORARIES)
+        return with_sql_columns(df, labels, temporaries)

@@ -844,7 +844,7 @@ def scrub_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential regex scrub chain — byte-equality against the oracle is
     the BASELINE scrub criterion applied to the documents table."""
     df = _fan_out(_read(spark, sf_dir, "documents")).where(F.col("text").isNotNull())
-    return scrub_columns(df, hits_col=None).select("doc_id", "scrubbed_text")
+    return scrub_columns(df).select("doc_id", "scrubbed_text")
 
 
 @_q(
@@ -1770,7 +1770,7 @@ def doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = F.lit(True)
     for r in rules:
         keep = keep & F.coalesce(r.column, F.lit(False))
-    df = scrub_columns(df, hits_col=None)
+    df = scrub_columns(df)
     return df.select("doc_id", keep.alias("keep"), "scrubbed_text")
 
 

@@ -35,7 +35,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions import text as T
 from ..functions.scoring import with_model_scores
-from ..operators.rules import RuleSet
+from ..operators.rules import RuleSet, with_sql_columns
 from ..plans.pipeline import (
     CROSS_TURN_RULE_IDS,
     QualityFilterConfig,
@@ -61,7 +61,7 @@ def streaming_quality_filter(
     need ordering state (see :func:`stateful_turn_order`).
     """
     pipe = QualityFilterPipeline(config)
-    df = T.with_text_features(stream, char_run=pipe.config.char_run)
+    df = with_sql_columns(stream, T.text_features_sql(pipe.config.char_run))
     df = with_model_scores(
         df, langid_model=pipe.langid_model, ppl_model=pipe.ppl_model
     )

@@ -7,9 +7,11 @@ under stable (conv_id, turn_idx) ordering.
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
-from data_caterer_spark.fixtures import generate_transcripts, transcripts_df
+from data_caterer_spark.fixtures import TOOLS, generate_transcripts, transcripts_df
 from data_caterer_spark.labeler import ReferenceLabeler
 from data_caterer_spark.plans.pipeline import QualityFilterPipeline
 
@@ -60,9 +62,40 @@ def _assert_parity(rows, golden):
     assert mismatch_text == 0, f"{mismatch_text} scrubbed_text byte mismatches"
 
 
+def _off_fixture_rows() -> list[dict]:
+    """Rows the generator never produces: ~15% NULL ``role``, ~15% NULL
+    ``ts`` and ~10% of non-tool turns carrying a ``tool``."""
+    rng = random.Random(5)
+    rows = [dict(r) for r in generate_transcripts(n_convs=60, seed=5)]
+    for r in rows:
+        if rng.random() < 0.15:
+            r["role"] = None
+        if rng.random() < 0.15:
+            r["ts"] = None
+        if r["role"] != "tool" and rng.random() < 0.10:
+            r["tool"] = rng.choice(TOOLS)
+    return rows
+
+
 def test_pipeline_matches_reference_labels(spark, fixture_rows, golden):
     rows = _run_pipeline(spark, fixture_rows)
     _assert_parity(rows, golden)
+    off = _off_fixture_rows()
+    assert any(r["role"] is None for r in off) and any(r["ts"] is None for r in off)
+    off_golden = {
+        (t.conv_id, t.turn_idx): t for t in ReferenceLabeler().label_rows(off)
+    }
+    _assert_parity(_run_pipeline(spark, off), off_golden)
+
+
+def test_pipeline_rerun_replaces_its_own_columns(spark, fixture_rows):
+    # every stage replaces an input column of the same name, as withColumn
+    # does, so labelling a labelled frame again changes nothing
+    pipe = QualityFilterPipeline()
+    once = pipe.run(transcripts_df(spark, fixture_rows[:200]))
+    twice = pipe.run(once)
+    assert sorted(twice.columns) == sorted(once.columns)
+    assert twice.exceptAll(once.select(*twice.columns)).count() == 0
 
 
 def test_duplicate_keys_do_not_collide(fixture_rows):

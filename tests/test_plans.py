@@ -83,6 +83,35 @@ def test_pipeline_exchange_and_arrow_budget(spark):
     assert "BatchEvalPython" not in plan
 
 
+def test_pipeline_runs_each_scrub_regex_once(spark):
+    """``scrub_sql`` promises every bank regex runs at most once per row:
+    each step must stay a column of its own, never be inlined into the
+    steps and flags that read it.  The plan is rendered unelided (the
+    default field limit hides the last scrub step)."""
+    from data_caterer_spark.fixtures import generate_transcripts_df
+    from data_caterer_spark.functions.textcore import SCRUB_BANK
+    from data_caterer_spark.plans.pipeline import QualityFilterPipeline
+
+    out = QualityFilterPipeline().run(generate_transcripts_df(spark, n_convs=5))
+    key = "spark.sql.debug.maxToStringFields"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "10000")
+    try:
+        plan = _plan(out)
+    finally:
+        spark.conf.unset(key) if old is None else spark.conf.set(key, old)
+    assert "more fields" not in plan
+    for rid, pattern, _ in SCRUB_BANK:
+        assert plan.count(pattern) == 1, (rid, plan)
+
+
+def test_scrub_documents_prunes_hit_flags(spark, sf_dir):
+    # scrub_columns always defines scrub_hits; nothing selects it here
+    plan = _plan(QUERIES["scrub_documents"](spark, sf_dir))
+    assert "regexp_replace(" in plan
+    assert "knownnotcontainsnull" not in plan and "pii_email" not in plan, plan
+
+
 def test_upstream_join_broadcasts(spark, sf_dir):
     plan = _plan(QUERIES["upstream_join_validation"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan

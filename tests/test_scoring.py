@@ -112,6 +112,11 @@ def test_model_stage_broadcasts_each_model_once_per_context(spark, monkeypatch):
     calls = []
     real = sc.broadcast
     monkeypatch.setattr(sc, "broadcast", lambda v: calls.append(v) or real(v))
+    built = []
+    real_udf = scoring._stage_udf
+    monkeypatch.setattr(
+        scoring, "_stage_udf", lambda *a: built.append(a[1]) or real_udf(*a)
+    )
     lm = LangIdModel.train({"aa": "the lazy dog " * 20, "bb": "dolor sit amet " * 20})
     pm = PerplexityModel.train("dolor sit amet " * 20)
     df = spark.createDataFrame([(0, "the lazy dog sat")], "id int, text string")
@@ -119,6 +124,8 @@ def test_model_stage_broadcasts_each_model_once_per_context(spark, monkeypatch):
         with_model_scores(df, langid_model=lm, ppl_model=pm).collect()
     with_language(df, model=lm).collect()
     assert [id(v) for v in calls] == [id(lm), id(pm)]
+    # and one stage UDF per (models, fields), reused while the kernel is the same
+    assert [list(f) for f in built] == [["lang", "lang_score", "ppl"], ["lang", "lang_score"]]
 
 
 def bits(value):
