@@ -9,9 +9,10 @@ once per Python worker per session), builds the UDF over them once too
 per-batch kernel, and unpacks the kernel's columns into named output
 columns.
 ``with_language`` / ``with_language_margin`` (functions/langid.py),
-``with_perplexity`` (functions/perplexity.py) and :func:`with_model_scores`
-are one call each into it; swapping in a real fastText / KenLM model means
-passing a different model object and kernel, the Spark plumbing is shared.
+``with_perplexity`` (functions/perplexity.py), :func:`with_model_scores`
+and :func:`with_turn_scores` are one call each into it; swapping in a real
+fastText / KenLM model means passing a different model object and kernel,
+the Spark plumbing is shared.
 
 :func:`with_model_scores` fuses langid + perplexity into ONE Arrow
 crossing.  On short transcript turns the per-row kernel work is small
@@ -19,7 +20,10 @@ crossing.  On short transcript turns the per-row kernel work is small
 cost — fusing halves the Arrow serialization, the pandas Series
 construction, and the Python-worker scheduling.  Outputs are
 byte-identical to running the single-model stages separately (same
-models, same kernels, same batch shapes).
+models, same kernels, same batch shapes).  :func:`with_turn_scores`, the
+quality-filter pipeline's stage, adds the four heuristic text features to
+the same crossing: they are computed from the text the stage receives
+anyway, from the lowered bytes the model payloads are built from.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ from __future__ import annotations
 import os
 import sys
 import zipimport
-from functools import cache
+from functools import cache, partial
 from typing import Any, Callable, Iterator, Sequence
 
 import pandas as pd
@@ -35,7 +39,7 @@ from pyspark import Broadcast, SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import pandas_udf
 
-from .textcore import LangIdModel, PerplexityModel
+from .textcore import LangIdModel, PerplexityModel, turn_scores
 
 
 @cache
@@ -159,3 +163,41 @@ def with_model_scores(
 
 def _langid_and_ppl(lm: LangIdModel, pm: PerplexityModel, texts: list) -> tuple:
     return (*lm.predict(texts), pm.score(texts))
+
+
+#: the fused stage's outputs: the heuristic text features, then the scores
+TURN_SCORE_FIELDS = {
+    "n_tokens": "int",
+    "rep_ratio": "double",
+    "symbol_ratio": "double",
+    "has_char_run": "boolean",
+    "lang": "string",
+    "lang_score": "double",
+    "ppl": "double",
+}
+
+
+def with_turn_scores(
+    df: DataFrame,
+    char_run: int = 10,
+    langid_model: LangIdModel | None = None,
+    ppl_model: PerplexityModel | None = None,
+) -> DataFrame:
+    """Add the four heuristic text features of ``text`` (``char_run`` is
+    the run length ``has_char_run`` tests for) and ``lang``,
+    ``lang_score``, ``ppl``, all in one Arrow round trip:
+    ``textcore.turn_scores`` lowers and encodes each text once for all
+    seven."""
+    return model_stage(
+        df,
+        "text",
+        TURN_SCORE_FIELDS,
+        (langid_model or default_langid(), ppl_model or default_ppl()),
+        _turn_kernel(char_run),
+    )
+
+
+@cache
+def _turn_kernel(run: int) -> Callable[..., Sequence[list]]:
+    """One kernel object per run length, so a rebuilt plan reuses its UDF."""
+    return partial(turn_scores, run=run)

@@ -17,6 +17,19 @@ and not the other.  The scrub bank order is TOTAL and documented —
 scrubbing is sequential, so order is part of the spec (SURVEY.md §7 "hard
 parts").
 
+The batch kernels behind the model stage (``turn_scores`` for the
+pipeline, ``LangIdModel.predict`` / ``PerplexityModel.score``) lower and
+UTF-8-encode each text once (:class:`LoweredBatch`) and derive every
+payload from those bytes: tokens by ``bytes.split``, ASCII symbols by
+``bytes.translate``, runs by one vectorized scan over the batch's ASCII
+texts, and the langid / perplexity payloads of ASCII texts by one
+256-byte ``translate`` table and one numpy pass over the whole batch
+(:func:`_framed_words`), hashed by :func:`_gram_means` without encoding
+again.  Each output equals its per-row kernel bit for bit (the per-row
+kernels are what the labeler calls); the texts a byte rule cannot cover
+(non-ASCII ones, about 4% of the benchmark's turns, for the symbol, run
+and model payloads) take the per-row path.
+
 The langid model is an n-gram-profile classifier standing in for fastText
 (the fasttext lib is not in this image).  It keeps fastText's deployment
 shape — a broadcast binary model, batch predict — so a real
@@ -28,8 +41,9 @@ from __future__ import annotations
 import math
 import re
 import zlib
+from collections.abc import Callable
 from dataclasses import dataclass
-from functools import cached_property
+from functools import cache, cached_property
 
 import numpy as np
 
@@ -75,11 +89,136 @@ def symbol_ratio(text: str) -> float:
     return (n - kept) / n
 
 
+@cache
+def _run_re(run: int) -> re.Pattern:
+    return re.compile(r"(.)\1{%d,}" % (run - 1))
+
+
+def has_char_run(text: str, run: int) -> bool:
+    """True when one character other than ``\\n`` repeats ``run`` or more
+    times in a row.  Python's ``.`` excludes only ``\\n``; the Spark side
+    (``functions/text.py``) runs the same pattern in Java's UNIX_LINES
+    mode, whose ``.`` excludes only ``\\n`` too."""
+    return _run_re(run).search(text) is not None
+
+
 def fingerprint(text: str) -> int:
     """Deterministic 32-bit document fingerprint (rolling CRC over the
     whitespace-normalized lowercase text).  Used for exact-dup detection."""
     normalized = " ".join(tokens_of(text)).lower()
     return zlib.crc32(normalized.encode("utf-8"))
+
+
+# --------------------------------------------------------------------------
+# batch kernels over one lowered byte buffer per text
+# --------------------------------------------------------------------------
+
+# bytes.split() splits on ASCII space, \t, \n, \v, \f and \r.  The token
+# whitespace has no \v, so \v first becomes \xff, a byte valid UTF-8 never
+# holds.  Every byte of a multi-byte UTF-8 sequence is >= 0x80, so a byte
+# split never cuts a character.  Lowering never makes or removes ASCII
+# whitespace, and the one context rule of str.lower (final sigma) never
+# looks past a whitespace character, so the lowered text has the same
+# tokens, each lowered as word_repetition_ratio lowers it.
+_VT, _NOT_UTF8 = b"\x0b", b"\xff"
+# The langid / perplexity payload tables for ASCII text (see
+# _framed_words): each maps the bytes a payload splits on to a space and
+# keeps _SEP, which no ASCII text holds.  For perplexity these are the
+# ASCII characters str.split() splits on; for langid every byte but a-z,
+# as _LETTERS_RE.sub(" ", ...) does once runs of spaces are collapsed.
+_SEP = 0x80
+_PPL_ASCII = bytes.maketrans(b"\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f", b" " * 9)
+_LANGID_ASCII = bytes(
+    b if 0x61 <= b <= 0x7A or b == _SEP else 0x20 for b in range(256)
+)
+# deleting these from an ASCII text leaves its symbols
+_ALNUM_WS = b"abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 \t\n\r\f"
+_NEWLINE = ord("\n")
+
+
+class LoweredBatch:
+    """A batch of texts, each lowered and UTF-8-encoded once: every batch
+    kernel below derives its payload from ``lowered`` / ``data``.  A NULL
+    text lowers to ``""``."""
+
+    def __init__(self, texts: list[str | None]):
+        self.texts = texts
+        self.lowered = ["" if t is None else t.lower() for t in texts]
+        self.data = [s.encode("utf-8") for s in self.lowered]
+        # the byte-table payloads below hold for ASCII text only
+        self.ascii = [s.isascii() for s in self.lowered]
+
+
+def _runs_from(equal: np.ndarray, k: int) -> np.ndarray:
+    """``m[i] = equal[i : i + k].all()`` for every full window, by ANDing
+    shifted copies: each step doubles the width a flag covers, and a
+    last step ANDs two overlapping windows of at least half the width."""
+    if k == 0:
+        return np.ones(equal.size + 1, dtype=bool)
+    m, width = equal, 1
+    while 2 * width <= k:
+        m = m[:-width] & m[width:]
+        width *= 2
+    if width < k:
+        m = m[: m.size - (k - width)] & m[k - width :]
+    return m
+
+
+def _char_runs(texts: list[str], run: int) -> list[bool]:
+    """``has_char_run(t, run)`` of every ASCII text, in one pass over the
+    texts joined by ``\\n``: no run may consist of ``\\n``, so none crosses
+    from one text into the next.  A run is a window of ``run - 1`` equal
+    neighbours starting on a byte other than ``\\n``."""
+    buf = np.frombuffer("\n".join(texts).encode("ascii"), dtype=np.uint8)
+    flags = np.zeros(len(texts), dtype=bool)
+    if buf.size >= run:
+        begins = np.flatnonzero(_runs_from(buf[1:] == buf[:-1], run - 1))
+        begins = begins[buf[begins] != _NEWLINE]
+        lens = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
+        starts = np.cumsum(lens + 1) - (lens + 1)
+        flags[np.searchsorted(starts, begins, side="right") - 1] = True
+    return flags.tolist()
+
+
+def turn_features(
+    texts: list[str | None] | LoweredBatch, run: int
+) -> tuple[list, list, list, list]:
+    """``(n_tokens, rep_ratio, symbol_ratio, has_char_run)`` of every text,
+    each equal to the per-row ``token_count``, ``word_repetition_ratio``,
+    ``symbol_ratio`` and ``has_char_run``; NULL for a NULL text.
+
+    Tokens come from one byte split of the lowered text.  An ASCII text's
+    symbols are what one ``bytes.translate`` leaves of it, and its run
+    flag comes from :func:`_char_runs`; other texts (about 4% of the
+    benchmark's turns) take the per-row kernels for these two."""
+    batch = texts if isinstance(texts, LoweredBatch) else LoweredBatch(texts)
+    counts: list[int | None] = []
+    ratios: list[float | None] = []
+    symbols: list[float | None] = []
+    runs: list[bool | None] = []
+    ascii_at: list[int] = []
+    for i, (t, d) in enumerate(zip(batch.texts, batch.data)):
+        if t is None:
+            counts.append(None)
+            ratios.append(None)
+            symbols.append(None)
+            runs.append(None)
+            continue
+        toks = d.replace(_VT, _NOT_UTF8).split()
+        head = toks[:REP_TOKEN_CAP]
+        counts.append(len(toks))
+        ratios.append(1.0 - len(set(head)) / len(head) if head else 0.0)
+        if t.isascii():
+            n = len(d)
+            symbols.append(len(d.translate(None, _ALNUM_WS)) / n if n else 0.0)
+            runs.append(False)
+            ascii_at.append(i)
+        else:
+            symbols.append(symbol_ratio(t))
+            runs.append(has_char_run(t, run))
+    for i, r in zip(ascii_at, _char_runs([batch.texts[i] for i in ascii_at], run)):
+        runs[i] = r
+    return counts, ratios, symbols, runs
 
 
 # --------------------------------------------------------------------------
@@ -225,9 +364,64 @@ LANGID_ALPHA = 0.05
 
 
 def _langid_clean(text: str) -> str:
-    cleaned = _LETTERS_RE.sub(" ", text.lower())
+    return _langid_clean_lowered(text.lower())
+
+
+def _langid_clean_lowered(lowered: str) -> str:
+    cleaned = _LETTERS_RE.sub(" ", lowered)
     cleaned = " ".join(cleaned.split())
     return f" {cleaned} "
+
+
+def _framed_words(data: list[bytes], table: bytes) -> list[bytes]:
+    """``b" " + b" ".join(d.translate(table).split()) + b" "`` of every
+    ASCII ``d``, except that a ``d`` with no word gives ``b" "``.
+
+    One translate and one numpy pass serve the whole batch: the texts are
+    joined as ``_SEP d1 _SEP d2 ... _SEP``, each framed by a space on either
+    side, and every space that follows a space is dropped.  What remains
+    between two ``_SEP`` bytes is a text's words, one space apart, inside
+    one frame space on either side."""
+    if not data:
+        return []
+    sep = bytes([_SEP])
+    joined = (sep + b" " + (b" " + sep + b" ").join(data) + b" " + sep).translate(table)
+    buf = np.frombuffer(joined, dtype=np.uint8)
+    space = buf == 0x20
+    keep = np.ones(buf.size, dtype=bool)
+    keep[1:] = ~(space[1:] & space[:-1])
+    return buf[keep].tobytes().split(sep)[1:-1]
+
+
+def _payloads(
+    batch: LoweredBatch, table: bytes, one: Callable[[str], bytes], strip: int
+) -> list[bytes]:
+    """Every text's payload: ``_framed_words`` of the ASCII texts, with
+    ``strip`` bytes cut from either end, and ``one(lowered)`` of the
+    others."""
+    framed = iter(_framed_words([d for d, a in zip(batch.data, batch.ascii) if a], table))
+    end = -strip or None
+    return [
+        next(framed)[strip:end] if a else one(s)
+        for s, a in zip(batch.lowered, batch.ascii)
+    ]
+
+
+def _langid_payloads(batch: LoweredBatch) -> list[bytes]:
+    """``_langid_clean`` of every text as UTF-8, except that an ASCII text
+    with no letters gives ``b" "`` for ``b"  "``: neither has a gram, nor
+    has a NULL text."""
+    return _payloads(
+        batch, _LANGID_ASCII, lambda s: _langid_clean_lowered(s).encode("utf-8"), 0
+    )
+
+
+def _ppl_payloads(batch: LoweredBatch) -> list[bytes]:
+    """``" ".join(text.lower().split())`` of every text as UTF-8 (what
+    ``PerplexityModel.score_one`` hashes); a NULL text has no grams."""
+    return _payloads(
+        batch, _PPL_ASCII, lambda s: " ".join(s.split()).encode("utf-8"), 1
+    )
 
 
 @dataclass
@@ -285,11 +479,10 @@ class LangIdModel:
         means add a row's grams in the same order."""
         return np.ascontiguousarray(self.profiles.T)
 
-    def _batch_scores(self, texts: list[str | None]) -> tuple[np.ndarray, np.ndarray]:
+    def _batch_scores(self, batch: LoweredBatch) -> tuple[np.ndarray, np.ndarray]:
         """(rows with at least ``min_grams`` grams, their [rows, langs]
         mean log-probs); NULL texts have no grams."""
-        cleaned = ["" if t is None else _langid_clean(t) for t in texts]
-        return _gram_means(cleaned, self._table, self.min_grams)
+        return _gram_means(_langid_payloads(batch), self._table, self.min_grams)
 
     def _labels(self, n: int, rows: np.ndarray, best: np.ndarray) -> list[str]:
         """``langs[best]`` at ``rows`` of ``n`` texts, 'und' elsewhere."""
@@ -297,15 +490,19 @@ class LangIdModel:
         lang_of[rows] = best
         return np.array([*self.langs, "und"], dtype=object)[lang_of].tolist()
 
-    def predict(self, texts: list[str | None]) -> tuple[list[str], list[float]]:
+    def predict(
+        self, texts: list[str | None] | LoweredBatch
+    ) -> tuple[list[str], list[float]]:
         """Batch scoring, BIT-IDENTICAL to ``predict_one`` per row (see
         :func:`_gram_means`).  ``argmax(axis=1)`` keeps the same
         first-maximum tie-break."""
-        rows, sc = self._batch_scores(texts)
+        batch = texts if isinstance(texts, LoweredBatch) else LoweredBatch(texts)
+        n = len(batch.texts)
+        rows, sc = self._batch_scores(batch)
         best = sc.argmax(axis=1)
-        scores = np.full(len(texts), self.unseen_logp)
+        scores = np.full(n, self.unseen_logp)
         scores[rows] = sc[np.arange(len(rows)), best]
-        return self._labels(len(texts), rows, best), scores.tolist()
+        return self._labels(n, rows, best), scores.tolist()
 
     def predict_margin_one(self, text: str | None) -> tuple[str, float]:
         """(lang, top1 - top2 margin) — the language-ID CONFIDENCE gate
@@ -327,7 +524,7 @@ class LangIdModel:
         """Batch margins, bit-identical per row to ``predict_margin_one``
         (same scores as ``predict``; the margin is a difference of two
         entries of the same per-row score vector)."""
-        rows, sc = self._batch_scores(texts)
+        rows, sc = self._batch_scores(LoweredBatch(texts))
         at = np.arange(len(rows))
         best = sc.argmax(axis=1)
         top = sc[at, best]
@@ -364,13 +561,14 @@ def _hash_ngrams(text: str, n: int = 3, buckets: int | None = None) -> np.ndarra
 
 
 def _gram_means(
-    texts: list[str], table: np.ndarray, min_grams: int = 1
+    payloads: list[bytes], table: np.ndarray, min_grams: int = 1
 ) -> tuple[np.ndarray, np.ndarray]:
-    """For every text with at least ``min_grams`` FNV trigrams (hashed as
-    ``_hash_ngrams(text, 3, len(table))``), the mean of ``table``'s rows at
-    its grams: returns (those texts' positions, their means).
+    """For every UTF-8 payload with at least ``min_grams`` FNV trigrams
+    (hashed as ``_hash_ngrams(text, 3, len(table))`` hashes the text the
+    payload encodes), the mean of ``table``'s rows at its grams: returns
+    (those payloads' positions, their means).
 
-    All texts hash in one pass over their concatenated UTF-8 bytes, XOR-
+    All payloads hash in one pass over their concatenated bytes, XOR-
     multiplying shifted views; a text's grams are the windows that start
     inside it and fit in it.  Texts are grouped by gram count with one
     stable argsort, and each group of K texts with g grams is one [K, g]
@@ -383,7 +581,6 @@ def _gram_means(
     mean is bit-identical to the per-row one, and no numpy call runs per
     text."""
     n = 3
-    payloads = [t.encode("utf-8") for t in texts]
     lens = np.fromiter(map(len, payloads), dtype=np.int64, count=len(payloads))
     order = np.argsort(np.maximum(lens - (n - 1), 0), kind="stable")
     ranked = np.maximum(lens[order] - (n - 1), 0)
@@ -391,11 +588,15 @@ def _gram_means(
     if lo == len(ranked):
         return order[lo:], np.empty((0, *table.shape[1:]))
     big = np.frombuffer(b"".join(payloads), dtype=np.uint8)
-    h = np.full(big.size - (n - 1), _HASH_SEED, dtype=np.uint64)
-    for i in range(n):
+    h = np.bitwise_xor(big[: big.size - (n - 1)], _HASH_SEED, dtype=np.uint64)
+    h *= _HASH_BASE
+    for i in range(1, n):
         h ^= big[i : i + h.size]
         h *= _HASH_BASE
-    h %= np.uint64(len(table))
+    if len(table) & (len(table) - 1):
+        h %= np.uint64(len(table))
+    else:  # the same remainder, without a division
+        h &= np.uint64(len(table) - 1)
     grams = h.view(np.int64)  # every bucket is < 2**63
     starts = np.cumsum(lens) - lens
     cuts = [lo, *(lo + 1 + np.flatnonzero(np.diff(ranked[lo:]))).tolist(), len(ranked)]
@@ -437,12 +638,28 @@ class PerplexityModel:
         mean_logp = float(np.mean(self.logprob[idx.astype(np.int64)]))
         return float(math.exp(-mean_logp))
 
-    def score(self, texts: list[str | None]) -> list[float]:
+    def score(self, texts: list[str | None] | LoweredBatch) -> list[float]:
         """Batch scoring, BIT-IDENTICAL to ``score_one`` per row (see
         :func:`_gram_means`); the final ``math.exp`` stays the scalar libm
         call ``score_one`` makes."""
-        normalized = ["" if t is None else " ".join(t.lower().split()) for t in texts]
-        rows, means = _gram_means(normalized, self.logprob)
-        out = np.full(len(texts), self.empty_ppl)
+        batch = texts if isinstance(texts, LoweredBatch) else LoweredBatch(texts)
+        rows, means = _gram_means(_ppl_payloads(batch), self.logprob)
+        out = np.full(len(batch.texts), self.empty_ppl)
         out[rows] = [math.exp(-m) for m in means.tolist()]
         return out.tolist()
+
+
+# --------------------------------------------------------------------------
+# the pipeline's fused per-batch kernel
+# --------------------------------------------------------------------------
+
+
+def turn_scores(
+    lm: LangIdModel, pm: PerplexityModel, texts: list[str | None], run: int
+) -> tuple[list, ...]:
+    """``(n_tokens, rep_ratio, symbol_ratio, has_char_run, lang,
+    lang_score, ppl)`` of every text, each bit-identical to its per-row
+    kernel (:func:`turn_features`, ``predict_one``, ``score_one``).  Each
+    text is lowered and encoded once, for all seven."""
+    batch = LoweredBatch(texts)
+    return (*turn_features(batch, run), *lm.predict(batch), pm.score(batch))

@@ -16,7 +16,6 @@ construction.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 from typing import Any, Iterable, Optional
 
@@ -71,9 +70,6 @@ class ReferenceLabeler:
         self.config = config or QualityFilterConfig()
         self.langid = langid_model or tc.LangIdModel.train()
         self.ppl = ppl_model or tc.PerplexityModel.train()
-        self._run_re = re.compile(
-            r"(.)\1{" + str(self.config.char_run - 1) + r",}"
-        )
 
     # ------------------------------------------------------------------
     def _heuristic_rules(self, row: dict, prev: dict | None) -> list[tuple[str, Tri, bool]]:
@@ -95,7 +91,7 @@ class ReferenceLabeler:
             n_tokens = tc.token_count(text)
             rep = tc.word_repetition_ratio(text)
             sym = tc.symbol_ratio(text)
-            has_run = self._run_re.search(text) is not None
+            has_run = tc.has_char_run(text, c.char_run)
         lang, _score = self.langid.predict_one(text)
         ppl = self.ppl.score_one(text)
 

@@ -2,20 +2,25 @@
 applied like the reference applies its validations, with ``selectExpr``
 (``ValidationOperations.scala:13``) —
 
-    text features (T.text_features_sql)  → conv_id window (TURN_ORDER_SQL)
-    → langid + perplexity (one pandas UDF, broadcast models)
+    n_chars (N_CHARS_SQL)  → conv_id window (TURN_ORDER_SQL)
+    → text features + langid + perplexity (one pandas UDF, broadcast
+      models: functions/scoring.py::with_turn_scores)
     → labels (with_labels: rule bank, gated scrub chain, rule_hits, keep)
     → one drop of the stage temporaries
 
-Each stage is one select-list whose intermediates (``__toks``,
-``heur_hits``, ``__scrub_digits``, ``__scrub_i``) are lateral column
-aliases, so a build is a few DataFrame calls, not a py4j round trip per
-Column operation.  The public stage functions project the same text.
-Arrow crosses the JVM↔Python fence exactly ONCE (``functions/scoring.py``);
-everything else stays inside whole-stage codegen.  Rule ids, thresholds,
-and evaluation order are the single source of truth shared with the
-pure-Python reference labeler (``data_caterer_spark.labeler``), which
-replays the same rules row-by-row — the byte-equality / F1 criterion
+The map side of the one exchange is the scan and ``length(text)``.  The
+token, repetition, symbol and run features are computed in the Arrow
+stage, in the same per-batch kernel as the model scores
+(``textcore.turn_scores``), which lowers and encodes each turn once for
+all of them; in the JVM they were the costliest layer of a pass.  The
+label stage is one select-list whose intermediates (``heur_hits``,
+``__scrub_digits``, ``__scrub_i``) are lateral column aliases, so a build
+is a few DataFrame calls, not a py4j round trip per Column operation.
+Arrow crosses the JVM↔Python fence exactly ONCE; everything else stays
+inside whole-stage codegen.  Rule ids, thresholds, and evaluation order
+are the single source of truth shared with the pure-Python reference
+labeler (``data_caterer_spark.labeler``), which replays the same rules
+row-by-row with the same kernels — the byte-equality / F1 criterion
 compares the two.
 
 Reference lineage: each heuristic rule is a data-caterer validation-DSL
@@ -30,8 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from ..functions import scrub
-from ..functions import text as T
-from ..functions.scoring import with_model_scores
+from ..functions.scoring import with_turn_scores
 from ..functions.textcore import SCRUB_BANK, LangIdModel, PerplexityModel
 from ..operators.rules import RuleSet, expr_rule, lit_sql, with_sql_columns
 from ..operators.windows import TURN_ORDER_SQL
@@ -40,6 +44,9 @@ TOXICITY_RULE_ID = "toxicity"
 #: the flag-only rules that read the previous turn (``prev_*`` window
 #: columns); the stateless streaming filter runs the bank without them
 CROSS_TURN_RULE_IDS = ("role_alternation", "turn_contiguous", "ts_monotone")
+#: the one feature the JVM computes: the map side of the exchange holds
+#: only the scan and this length
+N_CHARS_SQL = "length(text) AS n_chars"
 
 
 @dataclass(frozen=True)
@@ -69,17 +76,27 @@ class QualityFilterPipeline:
         self.ppl_model = ppl_model
 
     # ------------------------------------------------------------------
-    def _features(self, df: DataFrame) -> DataFrame:
-        # keeps __toks: run drops every temporary once, at the end
-        df = with_sql_columns(df, T.text_features_sql(self.config.char_run))
-        return with_sql_columns(df, TURN_ORDER_SQL)
-
     def with_features(self, df: DataFrame) -> DataFrame:
-        """Text features, then window features.  Text features come FIRST
-        so the conv_id exchange materializes them — nothing downstream
-        re-tokenizes, and the shuffle rows carry compact numerics instead
-        of recomputed token arrays."""
-        return self._features(df).drop(T.TOKS)
+        """Every column the rule bank reads.  Around the one exchange, the
+        JVM adds ``n_chars`` before it and the ``conv_id`` window features
+        after it; then one Arrow stage adds the other text features and
+        the model scores (:meth:`with_scores`).  The shuffle rows carry
+        the input and one length, and no token array is built in the
+        JVM."""
+        # one projection: the analyzer computes n_chars below the Window
+        df = with_sql_columns(df, [N_CHARS_SQL, *TURN_ORDER_SQL])
+        return self.with_scores(df)
+
+    def with_scores(self, df: DataFrame) -> DataFrame:
+        """``n_tokens``, ``rep_ratio``, ``symbol_ratio``, ``has_char_run``,
+        ``lang``, ``lang_score`` and ``ppl`` in one Arrow crossing
+        (``functions/scoring.py::with_turn_scores``)."""
+        return with_turn_scores(
+            df,
+            self.config.char_run,
+            langid_model=self.langid_model,
+            ppl_model=self.ppl_model,
+        )
 
     # ------------------------------------------------------------------
     def heuristic_rules(self) -> RuleSet:
@@ -144,14 +161,7 @@ class QualityFilterPipeline:
     def run(self, df: DataFrame) -> DataFrame:
         """Full pipeline.  Adds: feature cols, prev_* window cols, lang,
         lang_score, ppl, scrubbed_text, scrub_hits, rule_hits, keep."""
-        # both models in ONE Arrow crossing (functions/scoring.py) —
-        # outputs byte-identical to the two single-model stages
-        df = with_model_scores(
-            self._features(df),
-            langid_model=self.langid_model,
-            ppl_model=self.ppl_model,
-        )
-        return self.with_labels(df, self.heuristic_rules())
+        return self.with_labels(self.with_features(df), self.heuristic_rules())
 
     # ------------------------------------------------------------------
     def with_labels(self, df: DataFrame, rules: RuleSet) -> DataFrame:
@@ -166,5 +176,5 @@ class QualityFilterPipeline:
             "concat(heur_hits, scrub_hits) AS rule_hits",
             f"{rules.keep_sql('heur_hits')} AND NOT {toxic} AS keep",
         ]
-        temporaries = (T.TOKS, "heur_hits", *scrub.TEMPORARIES)
+        temporaries = ("heur_hits", *scrub.TEMPORARIES)
         return with_sql_columns(df, labels, temporaries)

@@ -33,11 +33,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions import text as T
-from ..functions.scoring import with_model_scores
 from ..operators.rules import RuleSet, with_sql_columns
 from ..plans.pipeline import (
     CROSS_TURN_RULE_IDS,
+    N_CHARS_SQL,
     QualityFilterConfig,
     QualityFilterPipeline,
 )
@@ -61,10 +60,7 @@ def streaming_quality_filter(
     need ordering state (see :func:`stateful_turn_order`).
     """
     pipe = QualityFilterPipeline(config)
-    df = with_sql_columns(stream, T.text_features_sql(pipe.config.char_run))
-    df = with_model_scores(
-        df, langid_model=pipe.langid_model, ppl_model=pipe.ppl_model
-    )
+    df = pipe.with_scores(with_sql_columns(stream, [N_CHARS_SQL]))
     return pipe.with_labels(df, _stateless_rules(pipe))
 
 

@@ -1,9 +1,12 @@
-"""Time the batch text-model kernels without Spark.
+"""Time the batch text kernels without Spark.
 
-Prints µs/row for ``LangIdModel.predict``, ``LangIdModel.predict_margin``
-and ``PerplexityModel.score`` on a fixed transcript sample (the best of
-five runs each), after asserting that every batch output is bit-identical
-to the per-row ``predict_one`` / ``predict_margin_one`` / ``score_one``.
+Prints µs/row for ``LangIdModel.predict``, ``LangIdModel.predict_margin``,
+``PerplexityModel.score``, ``turn_features`` and the pipeline's fused
+``turn_scores`` on a fixed transcript sample (the best of five runs each),
+after asserting that every batch output is bit-identical to the per-row
+kernels: ``predict_one`` / ``predict_margin_one`` / ``score_one``, and
+``token_count`` / ``word_repetition_ratio`` / ``symbol_ratio`` /
+``has_char_run`` for the text features.
 
 Run: ``python scripts/kernel_bench.py``
 """
@@ -18,12 +21,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_caterer_spark.fixtures import generate_transcripts  # noqa: E402
+from data_caterer_spark.functions import textcore as tc  # noqa: E402
 from data_caterer_spark.functions.textcore import (  # noqa: E402
     LangIdModel,
     PerplexityModel,
 )
 
 N_CONVS, SEED, REPEATS = 2000, 901, 5
+RUN = 10  # QualityFilterConfig.char_run's default
 
 
 def bits(value):
@@ -31,6 +36,18 @@ def bits(value):
     if isinstance(value, tuple):
         return tuple(bits(v) for v in value)
     return struct.pack("<d", value) if isinstance(value, float) else value
+
+
+def features_one(text):
+    """The per-row text features of one turn; NULL for NULL."""
+    if text is None:
+        return (None,) * 4
+    return (
+        tc.token_count(text),
+        tc.word_repetition_ratio(text),
+        tc.symbol_ratio(text),
+        tc.has_char_run(text, RUN),
+    )
 
 
 def main() -> None:
@@ -43,6 +60,14 @@ def main() -> None:
             lm.predict_margin_one,
         ),
         "score": (lambda: pm.score(texts), pm.score_one),
+        "turn_features": (
+            lambda: list(zip(*tc.turn_features(texts, RUN))),
+            features_one,
+        ),
+        "turn_scores": (
+            lambda: list(zip(*tc.turn_scores(lm, pm, texts, RUN))),
+            lambda t: (*features_one(t), *lm.predict_one(t), pm.score_one(t)),
+        ),
     }
     print(f"{len(texts)} rows, n_convs={N_CONVS}, seed={SEED}")
     for name, (batch, one) in kernels.items():

@@ -7,6 +7,7 @@ under stable (conv_id, turn_idx) ordering.
 
 from __future__ import annotations
 
+import datetime
 import random
 
 import pytest
@@ -77,10 +78,50 @@ def _off_fixture_rows() -> list[dict]:
     return rows
 
 
+#: texts whose whitespace, case mapping or character runs differ between
+#: the engines or between text and bytes: NULL, a vertical tab (no token
+#: separator, yet bytes.split splits on it), an information separator
+#: (str.split splits on it), U+3000, Greek final sigma, a dotted capital
+#: I (lowers to two characters), the Kelvin sign (lowers to ASCII k),
+#: and runs of \r, \n, é and an emoji
+EDGE_TEXTS = [
+    None,
+    "",
+    "\x0b",
+    "\x1c",
+    "\u3000",
+    "a\x0bb c\x1cd e\u3000f",
+    "ΟΔΟΣ οδοσ ΟΔΟΣ ΣΑΣ",
+    "İ İstanbul iSTANBUL",
+    "\u212a\u212a kelvin",
+    "a" + "\r" * 12,
+    "a" + "\n" * 12 + "b",
+    "caf" + "é" * 12,
+    "ok " + "\U0001F600" * 12,
+    "Aaaaaaaaaa",
+    "aaaaaaaaaa",
+]
+
+
+def _edge_rows() -> list[dict]:
+    """One conversation whose turns are :data:`EDGE_TEXTS`."""
+    return [
+        {
+            "conv_id": "CONVEDGE0001",
+            "turn_idx": i,
+            "role": ("user", "assistant")[i % 2],
+            "text": t,
+            "tool": None,
+            "ts": datetime.datetime(2025, 1, 1, 0, 0, i),
+        }
+        for i, t in enumerate(EDGE_TEXTS)
+    ]
+
+
 def test_pipeline_matches_reference_labels(spark, fixture_rows, golden):
     rows = _run_pipeline(spark, fixture_rows)
     _assert_parity(rows, golden)
-    off = _off_fixture_rows()
+    off = _off_fixture_rows() + _edge_rows()
     assert any(r["role"] is None for r in off) and any(r["ts"] is None for r in off)
     off_golden = {
         (t.conv_id, t.turn_idx): t for t in ReferenceLabeler().label_rows(off)
@@ -106,34 +147,37 @@ def test_duplicate_keys_do_not_collide(fixture_rows):
 
 
 def test_kernel_feature_parity_sql_vs_python(spark, fixture_rows):
-    """JVM feature columns == pure-Python kernels on every fixture text."""
-    from pyspark.sql import functions as F
-
+    """JVM feature columns == pure-Python kernels == the fused batch
+    kernel on every fixture text and every edge text."""
     from data_caterer_spark.functions import text as T
     from data_caterer_spark.functions import textcore as tc
 
-    texts = sorted({r["text"] for r in fixture_rows if r["text"] is not None})
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    fixture_texts = sorted({r["text"] for r in fixture_rows if r["text"] is not None})
+    texts = [*fixture_texts, *EDGE_TEXTS]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
     got = (
         df.select(
-            "text",
+            "i",
             T.token_count("text").alias("n_tokens"),
             T.word_repetition_ratio("text").alias("rep"),
             T.symbol_ratio("text").alias("sym"),
             T.char_run_flag("text").alias("run"),
             T.fingerprint("text").alias("fp"),
         )
+        .orderBy("i")
         .collect()
     )
-    import re
-
-    run_re = re.compile(r"(.)\1{9,}")
-    for row in got:
-        t = row.text
+    batch = list(zip(*tc.turn_features(texts, 10)))
+    for row, t, b in zip(got, texts, batch):
+        jvm = (row.n_tokens, row.rep, row.sym, row.run)
+        assert jvm == b, t
+        if t is None:
+            assert jvm == (None,) * 4 and row.fp is None
+            continue
         assert row.n_tokens == tc.token_count(t), t
         assert row.rep == tc.word_repetition_ratio(t), t
         assert row.sym == tc.symbol_ratio(t), t
-        assert row.run == (run_re.search(t) is not None), t
+        assert row.run == tc.has_char_run(t, 10), t
         assert row.fp == tc.fingerprint(t), t
 
 

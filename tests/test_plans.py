@@ -7,7 +7,9 @@ pin the plan properties the engine is designed around:
 * small dimension joins broadcast (no shuffle of the fact side);
 * the flagship filter is shuffle-free (pure projection);
 * the full pipeline has exactly ONE exchange (the conv_id window sort)
-  and exactly ONE Arrow (pandas-UDF) stage (fused langid+perplexity).
+  and exactly ONE Arrow (pandas-UDF) stage (text features, langid and
+  perplexity), and the map side of that exchange computes no text
+  feature but the length.
 """
 
 from __future__ import annotations
@@ -78,9 +80,17 @@ def test_pipeline_exchange_and_arrow_budget(spark):
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, f"pipeline must shuffle exactly once (conv_id window), got {n_exchanges}\n{plan}"
     n_arrow = plan.count("ArrowEvalPython")
-    assert n_arrow == 1, f"exactly one Arrow stage (fused langid+ppl), got {n_arrow}"
+    assert n_arrow == 1, (
+        f"exactly one Arrow stage (text features + langid + ppl), got {n_arrow}"
+    )
     # no row-at-a-time Python anywhere
     assert "BatchEvalPython" not in plan
+    # the map side of the exchange is the scan and one length: the token,
+    # run and symbol features are computed in the Arrow stage
+    map_side = plan.split("Exchange hashpartitioning", 1)[1]
+    assert "length(text" in map_side, plan
+    for token in ("split(", "array_distinct", "RLIKE", "translate("):
+        assert token not in map_side, (token, plan)
 
 
 def test_pipeline_runs_each_scrub_regex_once(spark):

@@ -28,10 +28,12 @@ from data_caterer_spark.functions.langid import (
     with_language_margin,
 )
 from data_caterer_spark.functions.perplexity import with_perplexity
+from data_caterer_spark.functions import textcore as tc
 from data_caterer_spark.functions.scoring import (
     default_langid,
     default_ppl,
     with_model_scores,
+    with_turn_scores,
 )
 from data_caterer_spark.functions.textcore import LangIdModel, PerplexityModel
 
@@ -55,6 +57,11 @@ EDGE_TEXTS = [
     "ΣΑΣ the quick brown fox ΟΔΟΣ",
     "lorem\x1cipsum\x1ddolor\x1esit\x1famet\x85consectetur\u3000adipiscing",
     "\x00the quick brown\x00fox jumps",
+    "a\x0bb c\x0cd\x1ce\u3000f",
+    "\u212a\u212a kelvin",
+    "a" + "\r" * 12,
+    "caf" + "é" * 12,
+    "ok " + "\U0001F600" * 12,
     ("the quick brown fox İẞ dolor sit Ÿ amet \u212a " * 260)[:10_500],
 ]
 
@@ -70,6 +77,23 @@ TEXTS = [
 ]
 
 # stage name -> (stage call, expected output columns for one text)
+def features_one(t, run):
+    """The per-row (n_tokens, rep_ratio, symbol_ratio, has_char_run)."""
+    if t is None:
+        return (None,) * 4
+    return (
+        tc.token_count(t),
+        tc.word_repetition_ratio(t),
+        tc.symbol_ratio(t),
+        tc.has_char_run(t, run),
+    )
+
+
+def scores_one(t, lm, pm):
+    """The per-row (lang, lang_score, ppl)."""
+    return (*lm.predict_one(t), pm.score_one(t))
+
+
 STAGES = {
     "with_language": (
         lambda df: with_language(df, model=LM),
@@ -89,6 +113,12 @@ STAGES = {
             **dict(zip(("lang", "lang_score"), LM.predict_one(t))),
             "ppl": PM.score_one(t),
         },
+    ),
+    "with_turn_scores": (
+        lambda df: with_turn_scores(df, 4, langid_model=LM, ppl_model=PM),
+        lambda t: dict(
+            zip(scoring.TURN_SCORE_FIELDS, features_one(t, 4) + scores_one(t, LM, PM))
+        ),
     ),
 }
 
@@ -126,6 +156,12 @@ def test_model_stage_broadcasts_each_model_once_per_context(spark, monkeypatch):
     assert [id(v) for v in calls] == [id(lm), id(pm)]
     # and one stage UDF per (models, fields), reused while the kernel is the same
     assert [list(f) for f in built] == [["lang", "lang_score", "ppl"], ["lang", "lang_score"]]
+    # the fused stage: a rebuilt plan with the same run length reuses the
+    # UDF, another run length builds one
+    for run in (10, 10, 7):
+        with_turn_scores(df, run, langid_model=lm, ppl_model=pm).collect()
+    assert [list(f) for f in built[2:]] == [list(scoring.TURN_SCORE_FIELDS)] * 2
+    assert [id(v) for v in calls] == [id(lm), id(pm)]
 
 
 def bits(value):
@@ -135,15 +171,40 @@ def bits(value):
     return struct.pack("<d", value) if isinstance(value, float) else value
 
 
-def batch_rows(texts, lm, pm):
-    """Per-row (lang, lang_score, lang_pred, margin, ppl) from the batch
-    kernels, and the same from the per-row methods."""
-    batch = list(zip(*lm.predict(texts), *lm.predict_margin(texts), pm.score(texts)))
-    one = [(*lm.predict_one(t), *lm.predict_margin_one(t), pm.score_one(t)) for t in texts]
+def batch_rows(texts, lm, pm, run):
+    """Per-row (lang, lang_score, lang_pred, margin, ppl, then the fused
+    kernel's seven outputs) from the batch kernels, and the same from the
+    per-row methods."""
+    batch = list(
+        zip(
+            *lm.predict(texts),
+            *lm.predict_margin(texts),
+            pm.score(texts),
+            *tc.turn_scores(lm, pm, texts, run),
+        )
+    )
+    one = [
+        (
+            *lm.predict_one(t),
+            *lm.predict_margin_one(t),
+            pm.score_one(t),
+            *features_one(t, run),
+            *scores_one(t, lm, pm),
+        )
+        for t in texts
+    ]
     return batch, one
 
 
-EDGE_ALPHABET = "abcdefghij tns\n\t.,éàçñüß" "İẞΣςŸ\u212a" "\x00\x1c\x1d\x1e\x1f\x85\u3000"
+EDGE_ALPHABET = (
+    "abcdefghij tns\n\t.,éàçñüß" "İẞΣςŸ\u212a" "\x00\x0b\x0c\r\x1c\x1d\x1e\x1f\x85\u3000"
+    "AB\U0001F600"
+)
+
+# texts made of runs, so that every run length near the limit occurs
+RUNS = st.lists(
+    st.tuples(st.sampled_from(EDGE_ALPHABET), st.integers(1, 12)), max_size=6
+).map(lambda parts: "".join(c * k for c, k in parts))
 
 # many rows of one gram count: equal-length texts over letters the
 # cleaning keeps one byte each
@@ -160,6 +221,7 @@ BATCHES = st.one_of(
         st.one_of(
             st.none(),
             st.text(alphabet=EDGE_ALPHABET, max_size=60),
+            RUNS,
             st.sampled_from(["", *EDGE_TEXTS]),
         ),
         max_size=40,
@@ -168,11 +230,11 @@ BATCHES = st.one_of(
 )
 
 
-@given(BATCHES)
+@given(BATCHES, st.integers(1, 11))
 @settings(max_examples=300, deadline=None)
-def test_batch_kernels_equal_per_row_bits(texts):
+def test_batch_kernels_equal_per_row_bits(texts, run):
     for lm, pm in ((default_langid(), default_ppl()), (LM, PM)):
-        batch, one = batch_rows(texts, lm, pm)
+        batch, one = batch_rows(texts, lm, pm, run)
         assert bits(batch) == bits(one)
 
 
