@@ -5,18 +5,13 @@ Each factory here is the Spark SQL mirror of a pure-Python kernel in
 corpus.  Patterns use explicit ASCII classes so Java regex and Python ``re``
 agree (see textcore module docstring).
 
-They keep a plan that has no Python stage free of one: the query
-operators (``queries.py``, ``functions/docs.py``, ``operators/sampling.py``)
-use them, as the reference's own rule engine is pure Spark SQL
-(``ValidationOperations.scala:13``).  They are not the fast path where an
-Arrow stage runs anyway: the quality-filter pipeline computes its token,
-repetition, symbol and run features in its model stage
-(``textcore.turn_features``) from the text that stage already receives.
-On the benchmark's 75k-turn input at ``local[4]`` on 4 vCPUs, this JVM
-feature block cost 0.90 s of a 2.48 s pass (about 48 µs of core time per
-turn, most of it ``split`` / ``array_distinct``, the run ``RLIKE`` and
-``translate``), against about 4–6 µs per turn for the batch kernel.  The kernels are written once, as
-SQL text over an operand (a column name or expression): the feature
+They serve plans that have no Python stage: the query operators
+(``queries.py``, ``functions/docs.py``, ``operators/sampling.py``) use
+them, as the reference's own rule engine is pure Spark SQL
+(``ValidationOperations.scala:13``).  The quality-filter pipeline does not:
+its token, repetition, symbol and run features come from its Arrow model
+stage (``textcore.turn_scores``).  The kernels are written once, as SQL
+text over an operand (a column name or expression): the feature
 select-list splices that text in, and the standalone Column functions
 parse it.
 """

@@ -20,15 +20,15 @@ parts").
 The batch kernels behind the model stage (``turn_scores`` for the
 pipeline, ``LangIdModel.predict`` / ``PerplexityModel.score``) lower and
 UTF-8-encode each text once (:class:`LoweredBatch`) and derive every
-payload from those bytes: tokens by ``bytes.split``, ASCII symbols by
-``bytes.translate``, runs by one vectorized scan over the batch's ASCII
-texts, and the langid / perplexity payloads of ASCII texts by one
-256-byte ``translate`` table and one numpy pass over the whole batch
-(:func:`_framed_words`), hashed by :func:`_gram_means` without encoding
-again.  Each output equals its per-row kernel bit for bit (the per-row
-kernels are what the labeler calls); the texts a byte rule cannot cover
-(non-ASCII ones, about 4% of the benchmark's turns, for the symbol, run
-and model payloads) take the per-row path.
+payload from those bytes: tokens by ``bytes.split``, runs by one
+vectorized scan over the batch's ASCII texts, and the langid /
+perplexity payloads of ASCII texts by one 256-byte ``translate`` table
+and one numpy pass over the whole batch (:func:`_framed_words`), hashed
+by :func:`_gram_means` without encoding again.  Each output equals its
+per-row kernel bit for bit (the per-row kernels are what the labeler
+calls); the non-ASCII texts, which a byte rule cannot cover, take the
+per-row path for runs and model payloads, and every text takes it for
+the symbol ratio.
 
 The langid model is an n-gram-profile classifier standing in for fastText
 (the fasttext lib is not in this image).  It keeps fastText's deployment
@@ -131,8 +131,6 @@ _PPL_ASCII = bytes.maketrans(b"\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f", b" " * 9)
 _LANGID_ASCII = bytes(
     b if 0x61 <= b <= 0x7A or b == _SEP else 0x20 for b in range(256)
 )
-# deleting these from an ASCII text leaves its symbols
-_ALNUM_WS = b"abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 \t\n\r\f"
 _NEWLINE = ord("\n")
 
 
@@ -187,10 +185,9 @@ def turn_features(
     each equal to the per-row ``token_count``, ``word_repetition_ratio``,
     ``symbol_ratio`` and ``has_char_run``; NULL for a NULL text.
 
-    Tokens come from one byte split of the lowered text.  An ASCII text's
-    symbols are what one ``bytes.translate`` leaves of it, and its run
-    flag comes from :func:`_char_runs`; other texts (about 4% of the
-    benchmark's turns) take the per-row kernels for these two."""
+    Tokens come from one byte split of the lowered text, and the run
+    flags of the ASCII texts from :func:`_char_runs`; the other texts'
+    run flags and every symbol ratio come from the per-row kernels."""
     batch = texts if isinstance(texts, LoweredBatch) else LoweredBatch(texts)
     counts: list[int | None] = []
     ratios: list[float | None] = []
@@ -208,13 +205,11 @@ def turn_features(
         head = toks[:REP_TOKEN_CAP]
         counts.append(len(toks))
         ratios.append(1.0 - len(set(head)) / len(head) if head else 0.0)
+        symbols.append(symbol_ratio(t))
         if t.isascii():
-            n = len(d)
-            symbols.append(len(d.translate(None, _ALNUM_WS)) / n if n else 0.0)
             runs.append(False)
             ascii_at.append(i)
         else:
-            symbols.append(symbol_ratio(t))
             runs.append(has_char_run(t, run))
     for i, r in zip(ascii_at, _char_runs([batch.texts[i] for i in ascii_at], run)):
         runs[i] = r
@@ -593,10 +588,7 @@ def _gram_means(
     for i in range(1, n):
         h ^= big[i : i + h.size]
         h *= _HASH_BASE
-    if len(table) & (len(table) - 1):
-        h %= np.uint64(len(table))
-    else:  # the same remainder, without a division
-        h &= np.uint64(len(table) - 1)
+    h %= np.uint64(len(table))
     grams = h.view(np.int64)  # every bucket is < 2**63
     starts = np.cumsum(lens) - lens
     cuts = [lo, *(lo + 1 + np.flatnonzero(np.diff(ranked[lo:]))).tolist(), len(ranked)]

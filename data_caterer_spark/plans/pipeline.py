@@ -12,16 +12,15 @@ The map side of the one exchange is the scan and ``length(text)``.  The
 token, repetition, symbol and run features are computed in the Arrow
 stage, in the same per-batch kernel as the model scores
 (``textcore.turn_scores``), which lowers and encodes each turn once for
-all of them; in the JVM they were the costliest layer of a pass.  The
-label stage is one select-list whose intermediates (``heur_hits``,
-``__scrub_digits``, ``__scrub_i``) are lateral column aliases, so a build
-is a few DataFrame calls, not a py4j round trip per Column operation.
-Arrow crosses the JVM↔Python fence exactly ONCE; everything else stays
-inside whole-stage codegen.  Rule ids, thresholds, and evaluation order
-are the single source of truth shared with the pure-Python reference
-labeler (``data_caterer_spark.labeler``), which replays the same rules
-row-by-row with the same kernels — the byte-equality / F1 criterion
-compares the two.
+all of them.  The label stage is one select-list whose intermediates
+(``heur_hits``, ``__scrub_digits``, ``__scrub_i``) are lateral column
+aliases, so a build is a few DataFrame calls, not a py4j round trip per
+Column operation.  Arrow crosses the JVM↔Python fence exactly ONCE;
+everything else stays inside whole-stage codegen.  Rule ids, thresholds,
+and evaluation order are the single source of truth shared with the
+pure-Python reference labeler (``data_caterer_spark.labeler``), which
+replays the same rules row-by-row with the same kernels — the
+byte-equality / F1 criterion compares the two.
 
 Reference lineage: each heuristic rule is a data-caterer validation-DSL
 predicate (cited per rule below, ``ValidationBuilder.scala``); the
