@@ -19,8 +19,9 @@ new-build requirement of the training-data brief, built Spark-first:
   counts) or sparse (nonzero ``(bucket, sum)`` pairs + ONE combinable
   ``groupBy`` so nothing n_features-dense crosses to the driver — the
   fastText-scale shape, used above ``SPARSE_FEATURES_THRESHOLD``);
-* **infer** — broadcast weights, one Arrow crossing, pure per-row
-  scoring.
+* **infer** — the trained model as the model of the shared
+  broadcast-model stage (``functions/scoring.py``): one Arrow crossing
+  of the text only, pure per-row scoring.
 
 EXACTNESS DISCIPLINE (the package's fixed-point pattern, shared with
 DSIR): float addition order varies across partitions, so per-document
@@ -60,6 +61,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.selection import FIXED_SCALE, bucket_of, ngram_strings
+from .scoring import model_stage
 
 # ---------------------------------------------------------------------------
 # shared pure kernels — the Spark UDFs and the golden replay call THESE
@@ -452,34 +454,25 @@ def score_keyed(
     key_cols: list[str],
     text_col: str,
 ) -> DataFrame:
-    """(*key_cols, score_fixed, keep): broadcast weights, one Arrow pass
-    of ``score_doc`` over ``text_col``, key columns passed through with
-    their ``src`` types — the batch (:func:`infer`) and the streaming
-    (``streaming_classifier_scores``) scorers share this loop."""
-    bc = src.sparkSession.sparkContext.broadcast(
-        (model.weights.tobytes(), model.bias, model.n_features,
-         model.include_bigrams)
-    )
-    schema = StructType(
-        [StructField(k, src.schema[k].dataType) for k in key_cols]
-        + _SCORE_SCHEMA.fields[1:]
+    """(*key_cols, score_fixed, keep): ``score_doc`` over Arrow batches of
+    ``text_col`` in the shared model stage (``functions/scoring.py``),
+    which broadcasts the model once; only the text crosses into Python,
+    the key columns stay in the JVM with their ``src`` types.  The batch
+    (:func:`infer`) and the streaming (``streaming_classifier_scores``)
+    scorers share this stage."""
+    fields = {"score_fixed": "bigint", "keep": "boolean"}
+    return model_stage(src, text_col, fields, (model,), _score_texts).select(
+        *key_cols, *fields
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        wv, bv, nf, bg = bc.value
-        wloc = np.frombuffer(wv, dtype=np.float64)
-        for pdf in batches:
-            texts = pdf[text_col].where(pdf[text_col].notna(), None)
-            scored = [score_doc(t, wloc, bv, nf, bg) for t in texts]
-            yield pd.DataFrame(
-                {
-                    **{k: pdf[k] for k in key_cols},
-                    "score_fixed": [s[0] for s in scored],
-                    "keep": [s[1] for s in scored],
-                }
-            )
 
-    return src.select(*key_cols, text_col).mapInPandas(gen, schema)
+def _score_texts(model: QualityClassifier, texts: list) -> tuple[list, list]:
+    scored = [
+        score_doc(t, model.weights, model.bias, model.n_features,
+                  model.include_bigrams)
+        for t in texts
+    ]
+    return [s[0] for s in scored], [s[1] for s in scored]
 
 
 def infer(
@@ -488,7 +481,7 @@ def infer(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """(doc_id, score_fixed, keep): broadcast weights, one Arrow pass."""
+    """(doc_id, score_fixed, keep): one Arrow pass (:func:`score_keyed`)."""
     src = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).alias("__text"),

@@ -1,18 +1,31 @@
-"""The model stage: every text-model score crosses into Python here.
+"""The model stage: every broadcast-model score crosses into Python here.
 
 :func:`model_stage` is the one broadcast-model iterator pandas UDF in the
 package.  It broadcasts each model OBJECT once per SparkContext and
 reuses that broadcast in every later plan (a PySpark worker caches
 ``Broadcast.value`` across the tasks it runs, so each model is unpickled
 once per Python worker per session), builds the UDF over them once too
-(a later plan only applies it), maps NULL texts to ``None``, runs a
+(a later plan only applies it), maps NULL inputs to ``None``, runs a
 per-batch kernel, and unpacks the kernel's columns into named output
-columns.
-``with_language`` / ``with_language_margin`` (functions/langid.py),
-``with_perplexity`` (functions/perplexity.py), :func:`with_model_scores`
-and :func:`with_turn_scores` are one call each into it; swapping in a real
-fastText / KenLM model means passing a different model object and kernel,
-the Spark plumbing is shared.
+columns.  It holds no model: when a model dies, its broadcast and UDFs
+are dropped, so a per-call model is not pinned for the session.
+
+Its callers, one call each, pass a model object and a kernel; the Spark
+plumbing is shared:
+
+* text models — ``with_language`` / ``with_language_margin``
+  (functions/langid.py), ``with_perplexity`` (functions/perplexity.py),
+  :func:`with_model_scores` and :func:`with_turn_scores`;
+* the quality classifier — ``score_keyed`` (functions/classifier.py),
+  behind ``infer`` and the streaming classifier scores;
+* vector models, over ``array<double>`` (a NULL vector scores as all
+  zeros) — ``with_lsh_buckets`` (hyperplanes), ``with_ivf_list``
+  (centroids), ``with_pq_codes`` (codebooks), ``pq_adc_topk`` (the
+  query's lookup table; operators/similarity.py) and
+  ``with_cluster_dist`` (centroids; operators/selection.py).
+
+Swapping in a real fastText / KenLM model means passing a different
+model object and kernel.
 
 :func:`with_model_scores` fuses langid + perplexity into ONE Arrow
 crossing.  On short transcript turns the per-row kernel work is small
@@ -30,6 +43,7 @@ from __future__ import annotations
 
 import os
 import sys
+import weakref
 import zipimport
 from functools import cache, partial
 from typing import Any, Callable, Iterator, Sequence
@@ -53,9 +67,12 @@ def default_ppl() -> PerplexityModel:
 
 
 # The live SparkContext and what model_stage built on it: the broadcast of
-# each model object, keyed by id(model) (holding the model keeps that id
-# unique), and the last (kernel, UDF) of each (model ids, fields).  PySpark
-# runs one SparkContext per process, so a new one replaces the lot.
+# each model object, keyed by id(model), and the last (kernel, UDF) of each
+# (model ids, fields).  Nothing here holds a model: a finalizer drops a
+# model's entries when it dies, so a per-call model (centroids, a lookup
+# table, a trained classifier) is not pinned for the life of the context
+# and a later object with the same id never finds them.  PySpark runs one
+# SparkContext per process, so a new one replaces the lot.
 _built: tuple[SparkContext | None, dict[Any, Any]] = (None, {})
 
 
@@ -66,14 +83,22 @@ def _held(sc: SparkContext) -> dict[Any, Any]:
     return _built[1]
 
 
+def _forget(model_id: int) -> None:
+    held = _built[1]
+    for key in list(held):
+        if key == model_id or (isinstance(key, tuple) and model_id in key[0]):
+            held.pop(key, None)
+
+
 def _broadcast(sc: SparkContext, model: Any) -> Broadcast:
     """The one broadcast of ``model`` on ``sc``.  A model object must not
     be mutated after its first ``model_stage``: later plans reuse the
     broadcast value."""
     held = _held(sc)
     if id(model) not in held:
-        held[id(model)] = (model, sc.broadcast(model))
-    return held[id(model)][1]
+        weakref.finalize(model, _forget, id(model))
+        held[id(model)] = sc.broadcast(model)
+    return held[id(model)]
 
 
 def _stat_gated_zip_invalidation() -> None:
@@ -106,22 +131,23 @@ def _stat_gated_zip_invalidation() -> None:
 
 def model_stage(
     df: DataFrame,
-    text_col: str,
+    col: str | Column,
     fields: dict[str, str],
     models: Sequence[Any],
-    kernel: Callable[..., Sequence[list]],
+    kernel: Callable[..., Sequence[Any]],
 ) -> DataFrame:
     """Add ``fields`` (output name -> Spark SQL type) computed over Arrow
-    batches of ``text_col``: ``kernel(*models, texts)`` returns one list
-    per field, in field order, with NULL texts passed as ``None``.  A
-    later call with the same models, fields and ``kernel`` object reuses
-    the UDF instead of pickling a new one."""
+    batches of ``col`` (a column name or a ``Column``): ``kernel(*models,
+    values)`` returns one sequence per field, in field order, with NULL
+    values passed as ``None``.  Each model must accept a weak reference.
+    A later call with the same models, fields and ``kernel`` object
+    reuses the UDF instead of pickling a new one."""
     sc = df.sparkSession.sparkContext
     held = _held(sc)
     key = (tuple(map(id, models)), tuple(fields.items()))
     if held.get(key, (None,))[0] is not kernel:
         held[key] = (kernel, _stage_udf(sc, fields, models, kernel))
-    scores = held[key][1](text_col)
+    scores = held[key][1](col)
     return df.withColumns({n: scores[n] for n in fields})
 
 
@@ -129,8 +155,8 @@ def _stage_udf(
     sc: SparkContext,
     fields: dict[str, str],
     models: Sequence[Any],
-    kernel: Callable[..., Sequence[list]],
-) -> Callable[[str], Column]:
+    kernel: Callable[..., Sequence[Any]],
+) -> Callable[[str | Column], Column]:
     bcs = [_broadcast(sc, m) for m in models]
     names = list(fields)
 
@@ -139,8 +165,8 @@ def _stage_udf(
         _stat_gated_zip_invalidation()  # for this worker's next tasks
         local = [bc.value for bc in bcs]  # unpickled once per Python worker
         for series in batches:
-            texts = [None if pd.isna(t) else t for t in series]
-            yield pd.DataFrame(dict(zip(names, kernel(*local, texts))))
+            values = series.where(series.notna(), None).tolist()
+            yield pd.DataFrame(dict(zip(names, kernel(*local, values))))
 
     return _stage
 

@@ -61,15 +61,10 @@ class LabeledTurn:
 
 
 class ReferenceLabeler:
-    def __init__(
-        self,
-        config: QualityFilterConfig | None = None,
-        langid_model: tc.LangIdModel | None = None,
-        ppl_model: tc.PerplexityModel | None = None,
-    ):
+    def __init__(self, config: QualityFilterConfig | None = None):
         self.config = config or QualityFilterConfig()
-        self.langid = langid_model or tc.LangIdModel.train()
-        self.ppl = ppl_model or tc.PerplexityModel.train()
+        self.langid = tc.LangIdModel.train()
+        self.ppl = tc.PerplexityModel.train()
 
     # ------------------------------------------------------------------
     def _heuristic_rules(self, row: dict, prev: dict | None) -> list[tuple[str, Tri, bool]]:

@@ -37,11 +37,21 @@ from __future__ import annotations
 import hashlib
 import math
 
-import pandas as pd
 from typing import Iterable
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.scoring import model_stage
+from .similarity import (
+    TRAIN_ROWS_PER_LIST,
+    batch_matrix,
+    derive_n_lists,
+    sq_dists,
+    train_ivf_centroids,
+    vectors,
+)
 
 #: fixed-point scale for log-ratio arithmetic (1e9 keeps ~nano-nat
 #: resolution; a 1e6-token doc times a max-|ratio| ~20 nats stays far
@@ -237,7 +247,7 @@ def dsir_log_weights(
     fixed = f"{weight_col}_fixed"
     scored = (
         exploded_buckets(df, id_col, text_col, n_buckets, include_bigrams)
-        .join(F.broadcast(ratio_df), "bucket", "left")
+        .join(ratio_df.hint("broadcast"), "bucket", "left")
         .groupBy("id")
         .agg(F.sum(F.coalesce(F.col("ratio"), F.lit(0))).alias(fixed))
     )
@@ -332,40 +342,26 @@ def with_cluster_dist(
     vec_col: str = "embedding",
     out_col: str = "__cd",
 ) -> DataFrame:
-    """Nearest k-means cluster + squared distance to it, one broadcast
-    matmul per Arrow batch (the IVF assignment shape, plus the distance
-    the selection sorts on).  Shares ``sq_dists``/stable-argsort with the
-    trainer and the golden replay so ordering decisions replay
-    bit-identically."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    """Add ``{out_col}_cluster`` (int), the nearest k-means cluster, and
+    ``{out_col}_d2`` (double), the squared distance to it: the IVF
+    assignment plus the distance the selection sorts on, one matmul per
+    Arrow batch in the shared model stage (``functions/scoring.py``).
+    Shares ``sq_dists``/stable-argsort with the trainer and the golden
+    replay so ordering decisions replay bit-identically; a NULL vector
+    scores as all zeros."""
+    return model_stage(
+        df,
+        vectors(vec_col),
+        {f"{out_col}_cluster": "int", f"{out_col}_d2": "double"},
+        (np.ascontiguousarray(centroids, dtype=np.float64),),
+        _nearest_cluster,
+    )
 
-    from .similarity import sq_dists
 
-    bc = df.sparkSession.sparkContext.broadcast(centroids.tobytes())
-    n_lists, dim = centroids.shape
-
-    # struct-returning pandas UDFs require the series->DataFrame form
-    # (the Iterator variant is scalar-only)
-    @pandas_udf("struct<cluster:int, d2:double>")
-    def _assign(series: pd.Series) -> pd.DataFrame:
-        cent = np.frombuffer(bc.value, dtype=np.float64).reshape(
-            n_lists, dim
-        )
-        mat = np.array(
-            [v if v is not None else np.zeros(dim) for v in series],
-            dtype=np.float64,
-        )
-        d2 = sq_dists(mat, cent)
-        idx = np.argsort(d2, axis=1, kind="stable")[:, 0]
-        return pd.DataFrame(
-            {
-                "cluster": idx.astype("int32"),
-                "d2": d2[np.arange(len(idx)), idx],
-            }
-        )
-
-    return df.withColumn(out_col, _assign(F.col(vec_col).cast("array<double>")))
+def _nearest_cluster(cent: np.ndarray, vecs: list) -> tuple[np.ndarray, np.ndarray]:
+    d2 = sq_dists(batch_matrix(vecs, cent.shape[1]), cent)
+    idx = np.argsort(d2, axis=1, kind="stable")[:, 0]
+    return idx.astype("int32"), d2[np.arange(len(idx)), idx]
 
 
 def diversity_cluster_sample(
@@ -386,20 +382,15 @@ def diversity_cluster_sample(
     alone collapses onto one dominant mode.
 
     Plan: bounded driver-side training (sample ~40 rows/centroid), one
-    broadcast-matmul assignment pass, then the EXACT salted two-phase
-    per-cluster top-k (``operators/topk.py``) — per-task state is k rows
-    per (cluster, salt) subgroup regardless of how skewed k-means left
-    the clusters (``derive_n_lists`` keeps them near ``rows_per_list``
-    on well-spread data, but a degenerate embedding mass can put nearly
-    everything in one cluster, and a collect_list there would buffer
-    the corpus).  Null embeddings are excluded up front — a null vector
+    broadcast-matmul assignment pass (:func:`with_cluster_dist`), then
+    the EXACT salted two-phase per-cluster top-k (``operators/topk.py``)
+    — per-task state is k rows per (cluster, salt) subgroup regardless
+    of how skewed k-means left the clusters (``derive_n_lists`` keeps
+    them near ``rows_per_list`` on well-spread data, but a degenerate
+    embedding mass can put nearly everything in one cluster, and a
+    collect_list there would buffer the corpus).  Null embeddings are excluded up front — a null vector
     would otherwise score as exactly central.
     """
-    from .similarity import (
-        TRAIN_ROWS_PER_LIST,
-        derive_n_lists,
-        train_ivf_centroids,
-    )
     from .topk import grouped_topk
 
     df = df.where(F.col(vec_col).isNotNull())
@@ -420,8 +411,8 @@ def diversity_cluster_sample(
         n_rows=n_rows,
     )
     assigned = with_cluster_dist(df, centroids, vec_col=vec_col).select(
-        F.col("__cd.cluster").alias("cluster"),
-        F.col("__cd.d2").alias("__d2"),
+        F.col("__cd_cluster").alias("cluster"),
+        F.col("__cd_d2").alias("__d2"),
         F.col(id_col),
     )
     # the operator is already eager (driver-side k-means, df.count());
@@ -440,7 +431,7 @@ def diversity_cluster_sample(
         tiebreak_cols=[id_col],
         descending=False,  # most-central = SMALLEST distance
     )
-    return top.join(F.broadcast(sizes), "cluster").select(
+    return top.join(sizes.hint("broadcast"), "cluster").select(
         "cluster",
         F.col(id_col),
         F.round(F.col("__d2"), 6).alias("dist_sq"),

@@ -17,13 +17,14 @@ Embedding cosine **near-duplicate detection** composes from these:
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from ..functions.scoring import model_stage
 
 # --------------------------------------------------------------------------
 # vector kernels (pure Catalyst)
@@ -146,6 +147,20 @@ def brute_force_knn_join(
 # --------------------------------------------------------------------------
 
 
+def vectors(vec_col: str) -> Column:
+    """The vector column as the model stage reads it."""
+    return F.col(vec_col).cast("array<double>")
+
+
+def batch_matrix(vecs: list, dim: int) -> np.ndarray:
+    """One Arrow batch of vectors as a (rows, dim) float64 matrix; a NULL
+    vector is all zeros."""
+    zero = np.zeros(dim, dtype=np.float64)
+    return np.array(
+        [zero if v is None else v for v in vecs], dtype=np.float64
+    ).reshape(len(vecs), dim)
+
+
 def _hyperplanes(dim: int, num_planes: int, seed: int) -> list[list[float]]:
     """Deterministic pseudo-gaussian hyperplanes from a splitmix64 walk —
     identical on every executor/platform, no RNG object shipped."""
@@ -188,8 +203,10 @@ def with_lsh_buckets(
     matmul: (batch x dim) @ (dim x tables*planes) -> signed margins ->
     packed bucket ids (+ probe flips).  The Catalyst fold formulation
     evaluated tables*planes*dim interpreted lambdas per row (~3 ms/row
-    measured); this is BLAS time — the same "batched model in a
-    pandas/Arrow UDF" shape the engine uses for langid/perplexity.
+    measured); this is BLAS time.  The hyperplane matrix is the model of
+    the shared broadcast-model stage (``functions/scoring.py``), as the
+    langid and perplexity models are.  A NULL vector buckets as all
+    zeros.
     """
     if probes >= num_planes:
         raise ValueError("probes must be < num_planes")
@@ -197,56 +214,40 @@ def with_lsh_buckets(
         np.array(_hyperplanes(dim, num_planes, seed + 1000 * t), dtype=np.float64).T
         for t in range(num_tables)
     ]
-    all_planes = np.concatenate(mats, axis=1)  # (dim, tables*planes)
-    bc = df.sparkSession.sparkContext.broadcast(all_planes.tobytes())
-    n_tables, n_planes, d, n_probes = num_tables, num_planes, dim, probes
+    # C order: the layout the batch matmul has always run on
+    planes = np.ascontiguousarray(np.concatenate(mats, axis=1))  # (dim, T*P)
+    out_type = "array<bigint>" if probes == 0 else "array<array<bigint>>"
+    return model_stage(
+        df,
+        vectors(vec_col),
+        {out_col: out_type},
+        (planes,),
+        partial(_lsh_buckets, n_tables=num_tables, n_probes=probes),
+    )
+
+
+def _lsh_buckets(
+    planes: np.ndarray, vecs: list, n_tables: int, n_probes: int
+) -> tuple[list]:
+    """The bucket id per table of each vector and, with ``n_probes``, the
+    ids one flip of each of its ``n_probes`` lowest-|margin| bits away."""
+    n_planes = planes.shape[1] // n_tables
     pow2 = np.array([1 << i for i in range(n_planes)], dtype=np.int64)
-
-    def _compute(series: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-        planes = np.frombuffer(bc.value, dtype=np.float64).reshape(
-            d, n_tables * n_planes
-        )
-        mat = np.array(
-            [v if v is not None else np.zeros(d, dtype=np.float64) for v in series],
-            dtype=np.float64,
-        )
-        margins = (mat @ planes).reshape(len(series), n_tables, n_planes)
-        bits = margins >= 0
-        ids = (bits * pow2).sum(axis=2).astype(np.int64)  # (batch, tables)
-        return ids, margins
-
+    margins = (batch_matrix(vecs, planes.shape[0]) @ planes).reshape(
+        len(vecs), n_tables, n_planes
+    )
+    ids = ((margins >= 0) * pow2).sum(axis=2).astype(np.int64)  # (batch, tables)
     if n_probes == 0:
-
-        @pandas_udf("array<bigint>")
-        def _buckets(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            for series in batches:
-                ids, _ = _compute(series)
-                yield pd.Series(list(ids))
-
-        return df.withColumn(
-            out_col, _buckets(F.col(vec_col).cast("array<double>"))
-        )
-
-    @pandas_udf("array<array<bigint>>")
-    def _probe_buckets(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in batches:
-            ids, margins = _compute(series)
-            # flip the n_probes lowest-|margin| bits per (row, table)
-            order = np.argsort(np.abs(margins), axis=2)[:, :, :n_probes]
-            out = []
-            for r in range(ids.shape[0]):
-                per_table = []
-                for t in range(n_tables):
-                    main = ids[r, t]
-                    row = [main]
-                    for j in range(n_probes):
-                        row.append(int(main ^ (1 << int(order[r, t, j]))))
-                    per_table.append(row)
-                out.append(per_table)
-            yield pd.Series(out)
-
-    return df.withColumn(
-        out_col, _probe_buckets(F.col(vec_col).cast("array<double>"))
+        return (list(ids),)
+    order = np.argsort(np.abs(margins), axis=2)[:, :, :n_probes]
+    return (
+        [
+            [
+                [main, *(int(main ^ (1 << int(b))) for b in flips)]
+                for main, flips in zip(row_ids, row_order)
+            ]
+            for row_ids, row_order in zip(ids, order)
+        ],
     )
 
 
@@ -539,24 +540,21 @@ def with_ivf_list(
     probes: int = 1,
 ) -> DataFrame:
     """Assign each row its ``probes`` nearest inverted lists (array<int>,
-    nearest first) — one broadcast matmul per Arrow batch, same
-    deployment shape as the LSH bucketer and the langid model."""
-    bc = df.sparkSession.sparkContext.broadcast(centroids.tobytes())
-    n_lists, dim = centroids.shape
-    n_probes = min(probes, n_lists)
+    nearest first) — one matmul per Arrow batch in the shared
+    broadcast-model stage (``functions/scoring.py``), the centroids being
+    the model.  A NULL vector is assigned as all zeros."""
+    return model_stage(
+        df,
+        vectors(vec_col),
+        {out_col: "array<int>"},
+        (np.ascontiguousarray(centroids, dtype=np.float64),),
+        partial(_ivf_lists, n_probes=min(probes, len(centroids))),
+    )
 
-    @pandas_udf("array<int>")
-    def _assign(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        cent = np.frombuffer(bc.value, dtype=np.float64).reshape(n_lists, dim)
-        for series in batches:
-            mat = np.array(
-                [v if v is not None else np.zeros(dim) for v in series],
-                dtype=np.float64,
-            )
-            order = nearest_lists(mat, cent, n_probes).astype(np.int32)
-            yield pd.Series(list(order))
 
-    return df.withColumn(out_col, _assign(F.col(vec_col).cast("array<double>")))
+def _ivf_lists(cent: np.ndarray, vecs: list, n_probes: int) -> tuple[list]:
+    order = nearest_lists(batch_matrix(vecs, cent.shape[1]), cent, n_probes)
+    return (list(order.astype(np.int32)),)
 
 
 def ivf_knn_join(
@@ -825,27 +823,27 @@ def with_pq_codes(
     out_col: str = "pq_code",
 ) -> DataFrame:
     """Encode every row to its M subspace codes (array<int>; uint8-range
-    when k_codes <= 256) — one broadcast-codebook Arrow batch kernel, the
-    same deployment shape as the IVF assigner.  At rest/shuffle this is
+    when k_codes <= 256) — one Arrow batch kernel in the shared
+    broadcast-model stage (``functions/scoring.py``), the codebooks being
+    the model; a NULL vector encodes as all zeros.  At rest/shuffle this is
     the dim*4 -> M bytes compression that makes 10^9-vector candidate
     joins move kilobytes per row group instead of megabytes."""
-    bc = df.sparkSession.sparkContext.broadcast(books.tobytes())
-    m_sub, k_codes, d_sub = books.shape
-    dim = m_sub * d_sub
+    return model_stage(
+        df,
+        vectors(vec_col),
+        {out_col: "array<int>"},
+        (np.ascontiguousarray(books, dtype=np.float64),),
+        _pq_codes,
+    )
 
-    @pandas_udf("array<int>")
-    def _encode(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        bk = np.frombuffer(bc.value, dtype=np.float64).reshape(
-            m_sub, k_codes, d_sub
-        )
-        for series in batches:
-            mat = np.array(
-                [v if v is not None else np.zeros(dim) for v in series],
-                dtype=np.float64,
-            )
-            yield pd.Series(list(pq_encode(mat, bk)))
 
-    return df.withColumn(out_col, _encode(F.col(vec_col).cast("array<double>")))
+def _pq_codes(books: np.ndarray, vecs: list) -> tuple[list]:
+    m_sub, _, d_sub = books.shape
+    return (list(pq_encode(batch_matrix(vecs, m_sub * d_sub), books)),)
+
+
+def _adc_scores(lut: np.ndarray, codes: list) -> tuple[np.ndarray]:
+    return (pq_adc_scores(np.array(codes, dtype=np.int64), lut),)
 
 
 def pq_adc_topk(
@@ -859,10 +857,10 @@ def pq_adc_topk(
 ) -> DataFrame:
     """PQ asymmetric-distance top-k, optionally exact-reranked.
 
-    Scan -> encode (broadcast codebooks) -> ADC score (broadcast M x K
-    LUT, M lookups/row) -> TakeOrderedAndProject — no shuffle except the
-    bounded top-k.  With ``rerank=c`` the top-c ADC candidates (c << n)
-    join back to their full vectors (broadcast side = c rows) for exact
+    Scan -> encode (:func:`with_pq_codes`) -> ADC score (the query's M x K
+    LUT as the model of the shared broadcast-model stage, M lookups/row)
+    -> TakeOrderedAndProject — no shuffle except the bounded top-k.
+    With ``rerank=c`` the top-c ADC candidates (c << n) join back to their full vectors (broadcast side = c rows) for exact
     fold-order cosine, the standard IVF-PQ + re-rank recipe: ADC prunes
     10^9 rows to c using only the 96-byte codes, exact math touches c
     vectors.  Ordering uses the ROUNDED score on both engine and oracle
@@ -870,22 +868,12 @@ def pq_adc_topk(
     q = np.asarray([float(v) for v in query_vec], dtype=np.float64)
     lut = pq_adc_lut(q, books)
     coded = with_pq_codes(df, books, vec_col=vec_col)
-    bc = df.sparkSession.sparkContext.broadcast(lut.tobytes())
-    m_sub, k_codes = lut.shape
-
-    @pandas_udf("double")
-    def _score(batches: "Iterator[pd.Series]") -> "Iterator[pd.Series]":
-        table = np.frombuffer(bc.value, dtype=np.float64).reshape(
-            m_sub, k_codes
-        )
-        for series in batches:
-            codes = np.array(list(series), dtype=np.int64)
-            yield pd.Series(pq_adc_scores(codes, table))
-
-    scored = coded.select(
+    scored = model_stage(
+        coded, "pq_code", {"__adc": "double"}, (lut,), _adc_scores
+    ).select(
         F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-        F.round(_score(F.col("pq_code")), 6).alias("adc_dist"),
+        vectors(vec_col).alias("__v"),
+        F.round(F.col("__adc"), 6).alias("adc_dist"),
     )
     if rerank <= 0:
         return (
@@ -1007,7 +995,7 @@ def semantic_dedup_pairs(
         n_sub,
     )
     slim = (
-        slim.join(F.broadcast(sizes), "cluster")
+        slim.join(sizes.hint("broadcast"), "cluster")
         .withColumn(
             "cluster",
             F.concat_ws(

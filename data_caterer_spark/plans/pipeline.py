@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 
 from ..functions import scrub
 from ..functions.scoring import with_turn_scores
-from ..functions.textcore import SCRUB_BANK, LangIdModel, PerplexityModel
+from ..functions.textcore import SCRUB_BANK
 from ..operators.rules import RuleSet, expr_rule, lit_sql, with_sql_columns
 from ..operators.windows import TURN_ORDER_SQL
 
@@ -64,15 +64,8 @@ class QualityFilterConfig:
 
 
 class QualityFilterPipeline:
-    def __init__(
-        self,
-        config: QualityFilterConfig | None = None,
-        langid_model: LangIdModel | None = None,
-        ppl_model: PerplexityModel | None = None,
-    ):
+    def __init__(self, config: QualityFilterConfig | None = None):
         self.config = config or QualityFilterConfig()
-        self.langid_model = langid_model
-        self.ppl_model = ppl_model
 
     # ------------------------------------------------------------------
     def with_features(self, df: DataFrame) -> DataFrame:
@@ -90,12 +83,7 @@ class QualityFilterPipeline:
         """``n_tokens``, ``rep_ratio``, ``symbol_ratio``, ``has_char_run``,
         ``lang``, ``lang_score`` and ``ppl`` in one Arrow crossing
         (``functions/scoring.py::with_turn_scores``)."""
-        return with_turn_scores(
-            df,
-            self.config.char_run,
-            langid_model=self.langid_model,
-            ppl_model=self.ppl_model,
-        )
+        return with_turn_scores(df, self.config.char_run)
 
     # ------------------------------------------------------------------
     def heuristic_rules(self) -> RuleSet:

@@ -141,9 +141,9 @@ def _order_fn(
                     "ts_monotone": monotone,
                 }
             )
-            last_idx, last_role = row.turn_idx, row.role
-            if ts_val is not None:
-                last_ts = ts_val
+            # the previous turn's ts, NULL included: the batch rule
+            # compares against lag(ts), not the last non-NULL ts
+            last_idx, last_role, last_ts = row.turn_idx, row.role, ts_val
     state.update((last_idx, last_role, last_ts))
     yield pd.DataFrame(out, columns=[
         "conv_id", "turn_idx", "role",
@@ -213,8 +213,8 @@ def streaming_exact_dedup(
 def streaming_classifier_scores(stream: DataFrame, model) -> DataFrame:
     """Serve a batch-trained quality classifier on a live stream — the
     train-offline / score-online deployment every quality gate runs in
-    production.  Broadcast weights, one Arrow crossing per micro-batch,
-    per-turn keys preserved; the scoring loop is the batch ``infer``'s
+    production.  One Arrow crossing of the text per micro-batch, per-turn
+    keys preserved; the scoring stage is the batch ``infer``'s
     (``classifier.score_keyed``), so streamed scores are bit-identical
     to batch and to the sequential replay."""
     from ..functions.classifier import score_keyed

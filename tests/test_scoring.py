@@ -4,12 +4,15 @@ behind it (functions/textcore.py).
 Every public model stage must score each row exactly as the model's
 per-row method does — with a custom model, not just the default one —
 map NULL and empty text the same way, and leave no temporary struct
-column behind.  The batch kernels must equal the per-row methods bit
-for bit, and keep the bits they had before the grouped gather was
+column behind.  The stage must hold no model after it dies, and every
+vector and classifier scorer built on it must map a NULL input as its
+documented rule says.  The batch kernels must equal the per-row methods
+bit for bit, and keep the bits they had before the grouped gather was
 rewritten (a pinned digest)."""
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import importlib
 import struct
@@ -23,6 +26,11 @@ from hypothesis import given, settings, strategies as st
 
 from data_caterer_spark.fixtures import generate_transcripts
 from data_caterer_spark.functions import scoring
+from data_caterer_spark.functions.classifier import (
+    QualityClassifier,
+    score_doc,
+    score_keyed,
+)
 from data_caterer_spark.functions.langid import (
     with_language,
     with_language_margin,
@@ -36,6 +44,7 @@ from data_caterer_spark.functions.scoring import (
     with_turn_scores,
 )
 from data_caterer_spark.functions.textcore import LangIdModel, PerplexityModel
+from data_caterer_spark.operators import selection, similarity
 
 LM = LangIdModel.train(
     {
@@ -162,6 +171,87 @@ def test_model_stage_broadcasts_each_model_once_per_context(spark, monkeypatch):
         with_turn_scores(df, run, langid_model=lm, ppl_model=pm).collect()
     assert [list(f) for f in built[2:]] == [list(scoring.TURN_SCORE_FIELDS)] * 2
     assert [id(v) for v in calls] == [id(lm), id(pm)]
+
+
+def test_model_stage_forgets_a_dead_model(spark):
+    df = spark.createDataFrame([(0, "the lazy dog sat")], "id int, text string")
+    pm = PerplexityModel.train("dolor sit amet " * 20)
+    with_perplexity(df, model=pm).collect()
+    dead = id(pm)
+    del pm
+    gc.collect()
+    held = scoring._built[1]
+    assert [k for k in held if k == dead or (isinstance(k, tuple) and dead in k[0])] == []
+    # a model staged afterwards (it may reuse the id) scores with its own values
+    other = PerplexityModel.train("the quick brown fox " * 20)
+    got = with_perplexity(df, model=other).first()["ppl"]
+    assert got == other.score_one("the lazy dog sat")
+
+
+VEC_DIM = 8
+_rng = np.random.default_rng(7)
+CENTROIDS = _rng.normal(size=(4, VEC_DIM))
+BOOKS = similarity.pq_fit_codebooks(_rng.normal(size=(32, VEC_DIM)), 2, 4)
+CLASSIFIER = QualityClassifier(_rng.normal(size=64), 0.3, 64)
+
+
+def _null_vector_vs_zeros(stage):
+    """The stage's outputs for a NULL vector and for an all-zeros one."""
+
+    def run(spark):
+        df = spark.createDataFrame(
+            [(0, None), (1, [0.0] * VEC_DIM), (2, [float(i) - 3 for i in range(VEC_DIM)])],
+            "id int, v array<float>",
+        )
+        rows = {r["id"]: r.asDict() for r in stage(df).drop("v").collect()}
+        assert len(rows) == 3
+        del rows[0]["id"], rows[1]["id"]
+        return rows[0], rows[1]
+
+    return run
+
+
+def _null_text_vs_score_doc(spark):
+    df = spark.createDataFrame([(0, None), (1, "the lazy dog")], "id int, text string")
+    rows = {r["id"]: r for r in score_keyed(df, CLASSIFIER, ["id"], "text").collect()}
+    m = CLASSIFIER
+    return (
+        (rows[0]["score_fixed"], rows[0]["keep"]),
+        score_doc(None, m.weights, m.bias, m.n_features, m.include_bigrams),
+    )
+
+
+NULL_CASES = {
+    "with_lsh_buckets": _null_vector_vs_zeros(
+        lambda df: similarity.with_lsh_buckets(df, VEC_DIM, 3, 6, vec_col="v")
+    ),
+    "with_lsh_buckets_multiprobe": _null_vector_vs_zeros(
+        lambda df: similarity.with_lsh_buckets(df, VEC_DIM, 3, 6, vec_col="v", probes=2)
+    ),
+    "with_ivf_list": _null_vector_vs_zeros(
+        lambda df: similarity.with_ivf_list(df, CENTROIDS, vec_col="v", probes=2)
+    ),
+    "with_pq_codes": _null_vector_vs_zeros(
+        lambda df: similarity.with_pq_codes(df, BOOKS, vec_col="v")
+    ),
+    "pq_adc_topk": _null_vector_vs_zeros(
+        lambda df: similarity.pq_adc_topk(
+            df, BOOKS, [1.0] * VEC_DIM, k=10, id_col="id", vec_col="v"
+        )
+    ),
+    "with_cluster_dist": _null_vector_vs_zeros(
+        lambda df: selection.with_cluster_dist(df, CENTROIDS, vec_col="v")
+    ),
+    "score_keyed": _null_text_vs_score_doc,
+}
+
+
+@pytest.mark.parametrize("name", sorted(NULL_CASES))
+def test_null_input_scores_by_the_stage_rule(spark, name):
+    """A NULL vector scores as an all-zeros vector; a NULL text as
+    ``score_doc(None, ...)``."""
+    got, expected = NULL_CASES[name](spark)
+    assert got == expected
 
 
 def bits(value):

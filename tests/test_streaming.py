@@ -8,6 +8,8 @@ state."""
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -146,6 +148,29 @@ def test_stateful_turn_order(spark, fixture_path, tmp_path):
         != (r["role_alternation_ok"], r["turn_contiguous"], r["ts_monotone"])
     ]
     assert not mismatches, mismatches[:5]
+
+
+def test_stateful_turn_order_compares_with_a_null_previous_ts(spark, tmp_path):
+    """ts 10:00, NULL, 09:00, 08:00: like the batch rule (``lag(ts)``) and
+    the labeler, the state compares each turn with the previous turn's
+    ts, NULL included, so only the last turn goes back in time."""
+    path = str(tmp_path / "null_ts")
+    spark.createDataFrame(
+        [
+            ("c", 0, "user", datetime(2024, 1, 1, 10)),
+            ("c", 1, "assistant", None),
+            ("c", 2, "user", datetime(2024, 1, 1, 9)),
+            ("c", 3, "assistant", datetime(2024, 1, 1, 8)),
+        ],
+        "conv_id string, turn_idx int, role string, ts timestamp",
+    ).write.parquet(path)
+    stream = spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+    got = _run_stream(
+        spark, stateful_turn_order(stream), "qf_null_ts", str(tmp_path / "cp")
+    )
+    assert sorted((r["turn_idx"], r["ts_monotone"]) for r in got.collect()) == [
+        (0, True), (1, True), (2, True), (3, False)
+    ]
 
 
 def test_streaming_exact_dedup_matches_batch_distinct(spark, fixture_path, tmp_path):
