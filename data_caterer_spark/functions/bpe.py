@@ -16,9 +16,9 @@ Distributed shape (the standard production decomposition):
   round counts weighted adjacent-symbol pairs over the vocab and merges
   the most frequent (deterministic tie-break: lexicographically smallest
   pair), nothing distributed to re-shuffle;
-* **tokenization** — merge ranks broadcast to executors, applied in an
-  Arrow-batched pandas UDF (the same broadcast-model deployment shape as
-  langid/perplexity); greedy lowest-rank-first merging per word, the
+* **tokenization** — the merge ranks are the model of the shared
+  broadcast-model Arrow stage (``functions/scoring.py::model_stage``, as
+  for langid/perplexity); greedy lowest-rank-first merging per word, the
   standard BPE apply.
 
 The Spark path and the golden oracle share these kernels, so the
@@ -29,12 +29,12 @@ bit-identical by construction.
 from __future__ import annotations
 
 import re
-from typing import Iterator, Sequence
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from .scoring import model_stage
 
 #: end-of-word marker (Sennrich's convention) — lets merges distinguish
 #: word-final symbols ("est</w>" vs "est")
@@ -50,7 +50,7 @@ _WS = re.compile(r"\s+", re.ASCII)
 
 def split_words(text: "str | None") -> list[str]:
     """The pure-Python twin of :func:`words_column`: lowercase,
-    ASCII-whitespace split, empties dropped.  Used by the tokenize UDF
+    ASCII-whitespace split, empties dropped.  Used by the tokenize stage
     kernel and the golden replays so train and apply normalize
     identically."""
     if text is None:
@@ -113,7 +113,7 @@ def cap_word_counts(
 
 
 # ---------------------------------------------------------------------------
-# shared pure-Python kernels (Spark UDF + golden replay both call these)
+# shared pure-Python kernels (Spark stage + golden replay both call these)
 # ---------------------------------------------------------------------------
 
 
@@ -199,6 +199,15 @@ def tokenize_text(
 # ---------------------------------------------------------------------------
 
 
+class MergeRanks(dict):
+    """Merge pair -> rank, the tokenizer's model (a ``dict`` subclass, so
+    the model stage can hold it by weak reference)."""
+
+
+def _tokenize_batch(ranks: MergeRanks, texts: list) -> tuple[list]:
+    return ([tokenize_text(t, ranks) for t in texts],)
+
+
 def with_bpe_tokens(
     df: DataFrame,
     merges: Sequence[tuple[str, str]],
@@ -206,26 +215,14 @@ def with_bpe_tokens(
     count_col: str = "n_bpe_tokens",
     tokens_col: str | None = None,
 ) -> DataFrame:
-    """Add the BPE token count (and optionally the tokens) per row: merge
-    ranks broadcast once, applied per Arrow batch — init-once-per-worker,
-    no per-row Python overhead beyond the batch loop."""
-    bc = df.sparkSession.sparkContext.broadcast(
-        [(a, b) for a, b in merges]
-    )
-
-    @pandas_udf("array<string>")
-    def _tok(batches: "Iterator[pd.Series]") -> "Iterator[pd.Series]":
-        ranks = {tuple(p): i for i, p in enumerate(bc.value)}
-        for series in batches:
-            yield pd.Series(
-                [tokenize_text(t, ranks) for t in series]
-            )
-
-    toks = _tok(F.col(text_col))
-    if tokens_col is not None:
-        df = df.withColumn(tokens_col, toks)
-        return df.withColumn(count_col, F.size(F.col(tokens_col)))
-    return df.withColumn(count_col, F.size(toks))
+    """Add the BPE token count (and optionally the tokens) per row: the
+    merge ranks are the model of one ``model_stage`` — broadcast once,
+    unpickled once per Python worker, applied per Arrow batch."""
+    ranks = MergeRanks({(a, b): i for i, (a, b) in enumerate(merges)})
+    toks = tokens_col or "__bpe_tokens"
+    df = model_stage(df, text_col, {toks: "array<string>"}, (ranks,), _tokenize_batch)
+    df = df.withColumn(count_col, F.size(toks))
+    return df if tokens_col else df.drop(toks)
 
 
 def train_bpe_on_corpus(

@@ -8,7 +8,8 @@ labels and applied to every document.  The reference has no trainer —
 its closest surface is per-field rule validation — so this is a
 new-build requirement of the training-data brief, built Spark-first:
 
-* **featurize** — one pass, Arrow-batched: hashed uni+bigram bucket
+* **featurize** — one crossing of the text in the shared broadcast-model
+  Arrow stage (``functions/scoring.py``): hashed uni+bigram bucket
   counts per document (same md5 bucket kernel as the DSIR path, so the
   feature space is shared with importance weighting);
 * **train** — batch gradient descent.  Each iteration broadcasts the
@@ -45,7 +46,8 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-from typing import Iterator
+from functools import cache
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -54,7 +56,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
-    IntegerType,
     LongType,
     StructField,
     StructType,
@@ -181,15 +182,15 @@ def _train_sums(
 # Spark side
 # ---------------------------------------------------------------------------
 
-_FEAT_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("y", IntegerType()),
-        StructField("buckets", ArrayType(IntegerType())),
-        StructField("counts", ArrayType(IntegerType())),
-        StructField("total", LongType()),
-    ]
-)
+@cache
+def _featurize_kernel(n_features: int, include_bigrams: bool) -> Callable:
+    """One kernel object per feature space, so a rebuilt plan reuses its UDF."""
+
+    def kernel(texts: list) -> tuple[list, list, list]:
+        feats = [featurize_doc(t, n_features, include_bigrams) for t in texts]
+        return [f[0] for f in feats], [f[1] for f in feats], [f[2] for f in feats]
+
+    return kernel
 
 
 def featurize(
@@ -200,31 +201,21 @@ def featurize(
     text_col: str = "text",
     include_bigrams: bool = True,
 ) -> DataFrame:
-    """One Arrow-batched pass: (doc_id, y, buckets, counts, total)."""
+    """(doc_id, y, buckets, counts, total): only the text crosses into
+    Python, in the shared Arrow stage; the id and the label (NULL -> 0)
+    stay in the JVM."""
     src = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
-        label.cast("int").alias("y"),
+        F.coalesce(label.cast("int"), F.lit(0)).alias("y"),
         F.col(text_col).alias("__text"),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = pdf["__text"].where(pdf["__text"].notna(), None)
-            feats = [
-                featurize_doc(t, n_features, include_bigrams)
-                for t in texts
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "y": pdf["y"].fillna(0).astype("int32"),
-                    "buckets": [f[0] for f in feats],
-                    "counts": [f[1] for f in feats],
-                    "total": [f[2] for f in feats],
-                }
-            )
-
-    return src.mapInPandas(gen, _FEAT_SCHEMA)
+    return model_stage(
+        src,
+        "__text",
+        {"buckets": "array<int>", "counts": "array<int>", "total": "long"},
+        (),
+        _featurize_kernel(n_features, include_bigrams),
+    ).drop("__text")
 
 
 _PARTIAL_SCHEMA = StructType(

@@ -1,24 +1,29 @@
 """Document-level text analysis over a ``documents(doc_id, text, ...)`` table.
 
-Everything here is a Catalyst projection (no Python) built from the shared
-kernels in ``functions/text.py`` — the same discipline as the reference's
-expression-string generators (``ValidationOperations.scala:13`` keeps all
-rule evaluation JVM-side).  Components:
+Everything here but the DEFLATE length is a Catalyst projection (no
+Python) built from the shared kernels in ``functions/text.py`` — the same
+discipline as the reference's expression-string generators
+(``ValidationOperations.scala:13`` keeps all rule evaluation JVM-side).
+Components:
 
 * token counting — whitespace tokens + a BPE-ish subword estimate;
 * quality scoring — bounded [0,1] blend of length/punct/stopword signals;
 * language-ID heuristic — stopword-profile argmax (JVM path; the pandas-UDF
   n-gram model in ``functions/langid.py`` is the higher-quality path);
-* fingerprinting — crc32 of normalized text (exact-dup key).
+* fingerprinting — crc32 of normalized text (exact-dup key);
+* compression ratio — the one Python step: the DEFLATE length crosses
+  into Python in the shared Arrow stage (``functions/scoring.py``).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import zlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import text as T
+from .scoring import model_stage
 
 # Small public stopword lists (common function words) per language — enough
 # signal for a coarse JVM-side language vote.
@@ -135,35 +140,25 @@ def document_features(
     )
 
 
-def compression_len_udf():
-    """DEFLATE length per document — the compression-ratio quality signal
-    (Gopher/RedPajama use it as a repetition proxy: boilerplate and
-    looped text compress far below prose).  Arrow-batched pandas UDF
-    (zlib is C-side; the Python loop is per-document, not per-byte);
-    level fixed at 6 so the byte count is deterministic for a given
-    zlib, which makes the sequential replay exact."""
-    import zlib
+def compressed_len(text: str | None) -> int | None:
+    """DEFLATE length of the UTF-8 text — the compression-ratio quality
+    signal (Gopher/RedPajama use it as a repetition proxy: boilerplate
+    and looped text compress far below prose).  zlib is C-side, so the
+    Python loop is per document, not per byte; level fixed at 6 so the
+    byte count is deterministic for a given zlib, which makes the
+    sequential replay exact."""
+    return None if text is None else len(zlib.compress(text.encode("utf-8"), 6))
 
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("int")
-    def _comp_len(series: pd.Series) -> pd.Series:
-        return series.map(
-            lambda t: None
-            if t is None
-            else len(zlib.compress(t.encode("utf-8"), 6))
-        )
-
-    return _comp_len
+def _compressed_lens(texts: list) -> tuple[list]:
+    return ([compressed_len(t) for t in texts],)
 
 
 def py_compression_ratio(text: str) -> "tuple[int, int, float]":
     """Sequential twin: (raw_bytes, comp_bytes, ratio) for the replay."""
-    import zlib
-
-    raw = text.encode("utf-8")
-    comp = len(zlib.compress(raw, 6))
-    return len(raw), comp, comp / len(raw)
+    raw = len(text.encode("utf-8"))
+    comp = compressed_len(text)
+    return raw, comp, comp / raw
 
 
 def with_compression_ratio(
@@ -174,11 +169,15 @@ def with_compression_ratio(
     """Adds raw_bytes / comp_bytes / comp_ratio / flag_repetitive.  Only
     ``comp_bytes`` crosses the Arrow boundary; byte length and the ratio
     stay JVM-side (octet_length, not length — multi-byte UTF-8)."""
-    c = F.col(text_col)
-    out = df.withColumn("raw_bytes", F.octet_length(c)).withColumn(
-        "comp_bytes", compression_len_udf()(c)
+    out = model_stage(
+        df.withColumn("raw_bytes", F.octet_length(text_col)),
+        text_col,
+        {"comp_bytes": "int"},
+        (),
+        _compressed_lens,
     )
-    ratio = F.col("comp_bytes").cast("double") / F.col("raw_bytes")
+    # NULL for an empty text, which has no byte to compress
+    ratio = F.try_divide(F.col("comp_bytes").cast("double"), F.col("raw_bytes"))
     return out.withColumn("comp_ratio", F.round(ratio, 6)).withColumn(
         "flag_repetitive", ratio < F.lit(repetitive_below)
     )

@@ -1,4 +1,4 @@
-"""The model stage: every broadcast-model score crosses into Python here.
+"""The model stage: every row-wise Python kernel crosses into Python here.
 
 :func:`model_stage` is the one broadcast-model iterator pandas UDF in the
 package.  It broadcasts each model OBJECT once per SparkContext and
@@ -10,8 +10,8 @@ per-batch kernel, and unpacks the kernel's columns into named output
 columns.  It holds no model: when a model dies, its broadcast and UDFs
 are dropped, so a per-call model is not pinned for the session.
 
-Its callers, one call each, pass a model object and a kernel; the Spark
-plumbing is shared:
+Its callers, one call each, pass their model objects (none for a
+model-free kernel) and a kernel; the Spark plumbing is shared:
 
 * text models — ``with_language`` / ``with_language_margin``
   (functions/langid.py), ``with_perplexity`` (functions/perplexity.py),
@@ -22,7 +22,13 @@ plumbing is shared:
   zeros) — ``with_lsh_buckets`` (hyperplanes), ``with_ivf_list``
   (centroids), ``with_pq_codes`` (codebooks), ``pq_adc_topk`` (the
   query's lookup table; operators/similarity.py) and
-  ``with_cluster_dist`` (centroids; operators/selection.py).
+  ``with_cluster_dist`` (centroids; operators/selection.py);
+* the BPE tokenizer — ``with_bpe_tokens`` (the merge ranks;
+  functions/bpe.py);
+* model-free text kernels — ``with_minhash_signature`` and
+  ``with_simhash`` (operators/dedup.py), ``with_compression_ratio``'s
+  DEFLATE length (functions/docs.py) and the classifier's ``featurize``
+  (functions/classifier.py).
 
 Swapping in a real fastText / KenLM model means passing a different
 model object and kernel.

@@ -17,6 +17,7 @@ bytes, and the oracle SQL stays small enough to ship as a literal.
 from __future__ import annotations
 
 import hashlib
+import math
 import os
 from functools import lru_cache
 
@@ -29,6 +30,24 @@ DEFAULT_ORACLE_SF = "/root/testdata/sf0.01"
 
 def _oracle_sf_dir() -> str:
     return os.environ.get(ORACLE_SF_ENV, DEFAULT_ORACLE_SF)
+
+
+def _fold_dot(a: list[float], b: list[float]) -> float:
+    """Dot product summed left to right, one float add per element: the
+    order of the Spark side's ``aggregate`` fold
+    (``operators/similarity.py``), so the cosines match bit for bit."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def _fold_norm(a: list[float]) -> float:
+    """Euclidean norm, the squares summed left to right."""
+    acc = 0.0
+    for x in a:
+        acc += x * x
+    return math.sqrt(acc)
 
 
 def _spark_round(x: float, scale: int) -> float:
@@ -137,20 +156,13 @@ def minhash_golden_sql(
     documents parquet: signatures via the shared kernel, but banding,
     candidate bucketing, dedup, and the agreement estimate re-implemented
     with plain dicts — verifies the distributed band-join plumbing."""
-    import numpy as np
+    from .operators.dedup import _perm_params, minhash_signature
 
-    from .operators.dedup import _MERSENNE, _perm_params, _py_shingle_hashes
-
-    docs = _documents(sf_dir or _oracle_sf_dir())
-    params = np.array(_perm_params(num_hashes, seed), dtype=np.int64)
-    a_vec, b_vec = params[:, 0][:, None], params[:, 1][:, None]
-    sigs: dict[int, np.ndarray] = {}
-    for doc_id, text in docs:
-        h = _py_shingle_hashes(text, k)
-        if h.size == 0:
-            sigs[doc_id] = np.full(num_hashes, _MERSENNE, dtype=np.int64)
-        else:
-            sigs[doc_id] = ((a_vec * h[None, :] + b_vec) % _MERSENNE).min(axis=1)
+    params = _perm_params(num_hashes, seed)
+    sigs = {
+        doc_id: minhash_signature(text, k, params)
+        for doc_id, text in _documents(sf_dir or _oracle_sf_dir())
+    }
     r = num_hashes // bands
     buckets: dict[tuple[int, tuple[int, ...]], list[int]] = {}
     for doc_id, sig in sigs.items():
@@ -179,24 +191,13 @@ def simhash_golden_sql(
 ) -> str:
     """Independent replay of SimHash chunk blocking (shared fingerprint
     kernel; blocking/dedup/hamming re-implemented with dicts)."""
-    import numpy as np
+    from .operators.dedup import _CHUNKS, simhash_fingerprint
 
-    from .operators.dedup import SIMHASH_BITS, _CHUNKS, _py_shingle_hashes64
-
-    docs = _documents(sf_dir or _oracle_sf_dir())
-    bit_idx = np.arange(SIMHASH_BITS, dtype=np.uint64)
-    fps: dict[int, int] = {}
-    for doc_id, text in docs:
-        h = _py_shingle_hashes64(text, k)
-        if h.size == 0:
-            fps[doc_id] = 0
-            continue
-        bits = ((h[:, None] >> bit_idx[None, :]) & 1).astype(np.int64)
-        votes = (2 * bits - 1).sum(axis=0)
-        fp = np.bitwise_or.reduce(
-            np.where(votes > 0, np.uint64(1) << bit_idx, np.uint64(0))
-        )
-        fps[doc_id] = int(np.uint64(fp))
+    # unsigned, so the chunk shifts and the XOR popcount see 64 bits
+    fps = {
+        doc_id: simhash_fingerprint(text, k) % (1 << 64)
+        for doc_id, text in _documents(sf_dir or _oracle_sf_dir())
+    }
     buckets: dict[tuple[int, int], list[int]] = {}
     for doc_id, fp in fps.items():
         for c in range(_CHUNKS):
@@ -264,26 +265,12 @@ def lsh_knn_golden_sql(
             for ib in members[i + 1 :]:
                 cand.add((ia, ib))
 
-    def fold_dot(a: list[float], b: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    def fold_norm(a: list[float]) -> float:
-        import math
-
-        acc = 0.0
-        for x in a:
-            acc += x * x
-        return math.sqrt(acc)
-
     scored: dict[int, list[tuple[float, int]]] = {}
     for ia, ib in cand:
-        na, nb = fold_norm(vecs[ia]), fold_norm(vecs[ib])
+        na, nb = _fold_norm(vecs[ia]), _fold_norm(vecs[ib])
         if not (na > 0 and nb > 0):
             continue
-        cos = _spark_round(fold_dot(vecs[ia], vecs[ib]) / (na * nb), 6)
+        cos = _spark_round(_fold_dot(vecs[ia], vecs[ib]) / (na * nb), 6)
         scored.setdefault(ia, []).append((cos, ib))
         scored.setdefault(ib, []).append((cos, ia))
     rows = []
@@ -361,26 +348,12 @@ def ivf_knn_golden_sql(
                 if vid < other:
                     cand.add((vid, other))
 
-    def fold_dot(a, b):
-        acc = 0.0
-        for p, q in zip(a, b):
-            acc += p * q
-        return acc
-
-    def fold_norm(a):
-        import math
-
-        acc = 0.0
-        for p in a:
-            acc += p * p
-        return math.sqrt(acc)
-
     scored: dict[int, list[tuple[float, int]]] = {}
     for ia, ib in cand:
-        na, nb = fold_norm(vecs[ia]), fold_norm(vecs[ib])
+        na, nb = _fold_norm(vecs[ia]), _fold_norm(vecs[ib])
         if not (na > 0 and nb > 0):
             continue
-        cos = _spark_round(fold_dot(vecs[ia], vecs[ib]) / (na * nb), 6)
+        cos = _spark_round(_fold_dot(vecs[ia], vecs[ib]) / (na * nb), 6)
         scored.setdefault(ia, []).append((cos, ib))
         scored.setdefault(ib, []).append((cos, ia))
     rows = []
@@ -410,7 +383,6 @@ def pq_adc_golden_sql(
     bit-identical to the Spark UDF path by construction), fold-order-exact
     cosine on the re-rank candidates, ordering on ROUNDED scores."""
     import hashlib
-    import math
 
     import duckdb
     import numpy as np
@@ -448,25 +420,13 @@ def pq_adc_golden_sql(
         key=lambda t: (t[0], t[1]),
     )[:rerank]
 
-    def fold_dot(a, b):
-        acc = 0.0
-        for p, v in zip(a, b):
-            acc += p * v
-        return acc
-
-    def fold_norm(a):
-        acc = 0.0
-        for p in a:
-            acc += p * p
-        return math.sqrt(acc)
-
-    qn = fold_norm(vecs[0])
+    qn = _fold_norm(vecs[0])
     finals = []
     for adc_r, vid in scored:
-        nv = fold_norm(vecs[vid])
+        nv = _fold_norm(vecs[vid])
         if not (nv > 0 and qn > 0):
             continue
-        cos = _spark_round(fold_dot(vecs[vid], vecs[0]) / (nv * qn), 6)
+        cos = _spark_round(_fold_dot(vecs[vid], vecs[0]) / (nv * qn), 6)
         finals.append((cos, vid, adc_r))
     finals.sort(key=lambda t: (-t[0], t[1]))
     rows = [
@@ -1008,20 +968,6 @@ def semantic_dedup_golden_sql(
             )
             clusters.setdefault((cid, sub), []).append(vid)
 
-    import math
-
-    def fold_dot(a, b):
-        acc = 0.0
-        for p, q in zip(a, b):
-            acc += p * q
-        return acc
-
-    def fold_norm(a):
-        acc = 0.0
-        for p in a:
-            acc += p * p
-        return math.sqrt(acc)
-
     thr = 1.0 - eps
     parent: dict[int, int] = {}
 
@@ -1041,12 +987,12 @@ def semantic_dedup_golden_sql(
     for members in clusters.values():
         members = sorted(members)
         for i, ia in enumerate(members):
-            na = fold_norm(vecs[ia])
+            na = _fold_norm(vecs[ia])
             for ib in members[i + 1 :]:
-                nb = fold_norm(vecs[ib])
+                nb = _fold_norm(vecs[ib])
                 if not (na > 0 and nb > 0):
                     continue
-                cos = _spark_round(fold_dot(vecs[ia], vecs[ib]) / (na * nb), 6)
+                cos = _spark_round(_fold_dot(vecs[ia], vecs[ib]) / (na * nb), 6)
                 if cos >= thr:
                     union(ia, ib)
     drops = sorted(u for u in parent if find(u) != u)
@@ -1302,32 +1248,26 @@ def streaming_neardup_golden_sql(
     mh_seed: int = 42,
 ) -> str:
     """Sequential replay of the streaming MinHash near-dup dedup
-    (streaming/quality_stream.py streaming_neardup_dedup): identical
-    signature kernel (the Spark side's pandas UDF IS this python kernel),
+    (streaming/quality_stream.py streaming_neardup_dedup): the signature
+    is ``dedup.minhash_signature``, the kernel the Spark stage maps over
+    each Arrow batch,
     buckets keyed on raw band-slice tuples (the Spark side hashes the
     slice with xxhash64 — same partition of the rows modulo 2^-64
     collisions), min-md5-key-wins per bucket, per-turn dup = OR over
     bands."""
     import hashlib
 
-    import numpy as np
-
     from .fixtures import generate_transcripts
-    from .operators.dedup import _MERSENNE, _perm_params, _py_shingle_hashes
+    from .operators.dedup import _perm_params, minhash_signature
 
-    params = np.array(_perm_params(num_hashes, mh_seed), dtype=np.int64)
-    a_vec, b_vec = params[:, 0][:, None], params[:, 1][:, None]
+    params = _perm_params(num_hashes, mh_seed)
     r = num_hashes // bands
     recs = []
     for row in generate_transcripts(n_convs, seed):
         key = hashlib.md5(
             f"{row['conv_id']}#{row['turn_idx']}".encode("utf-8")
         ).hexdigest()
-        h = _py_shingle_hashes(row["text"], k)
-        if h.size == 0:
-            sig = np.full(num_hashes, _MERSENNE, dtype=np.int64)
-        else:
-            sig = ((a_vec * h[None, :] + b_vec) % _MERSENNE).min(axis=1)
+        sig = minhash_signature(row["text"], k, params)
         recs.append((row["conv_id"], row["turn_idx"], key, sig))
     mins: dict = {}
     for _, _, key, sig in recs:

@@ -25,24 +25,26 @@ size by dropping top-frequency shingles from *blocking only* (they still
 count toward verification), the standard prefix-filter trick.
 
 Signature computation (MinHash permutation grids, SimHash bit votes) is
-vectorized numpy over Arrow batches — measured 40-100x faster than the
-interpreted Catalyst lambda folds — over crc32 shingle hashes that the
-golden replays reproduce.  Candidate generation, verification, and
-clustering stay JVM-side (equi-joins + aggregates).
+numpy per text in the shared Arrow stage (``functions/scoring.py``) —
+measured 40-100x faster than the interpreted Catalyst lambda folds —
+over crc32 shingle hashes; the golden replays call the same per-text
+kernels (:func:`minhash_signature`, :func:`simhash_fingerprint`).
+Candidate generation, verification, and clustering stay JVM-side
+(equi-joins + aggregates).
 """
 
 from __future__ import annotations
 
 import zlib
-from typing import Iterator
+from functools import cache
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..functions import text as T
+from ..functions.scoring import model_stage
 
 # --------------------------------------------------------------------------
 # shared text canonicalization
@@ -422,9 +424,10 @@ def edit_distance_neardup_pairs(
 _MERSENNE = (1 << 31) - 1
 
 
-def _perm_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs derived from a seeded splitmix-style walk
-    (no RNG object: reproducible across platforms and executor counts)."""
+def _perm_params(num_hashes: int, seed: int) -> np.ndarray:
+    """Deterministic ``(num_hashes, 2)`` array of (a, b) pairs derived
+    from a seeded splitmix-style walk (no RNG object: reproducible across
+    platforms and executor counts)."""
     params = []
     state = seed & 0xFFFFFFFFFFFFFFFF
     for _ in range(num_hashes):
@@ -433,25 +436,49 @@ def _perm_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
         state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
         b = state % _MERSENNE
         params.append((a, b))
-    return params
+    return np.array(params, dtype=np.int64).reshape(num_hashes, 2)
 
 
-def _py_shingle_hashes(text: str | None, k: int) -> np.ndarray:
-    """Distinct word-k-shingle hashes in the 31-bit domain, matching the
-    normalization of :func:`word_shingles` (crc32: C speed, deterministic
-    everywhere)."""
+def _shingles(text: str | None, k: int) -> list[bytes]:
+    """Distinct UTF-8 word-k-shingles, with the normalization of
+    :func:`word_shingles`; a text shorter than k words is one shingle."""
     if text is None:
-        return np.empty(0, dtype=np.int64)
+        return []
     toks = text.lower().split()
     if len(toks) >= k:
         shingles = {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
     else:
         shingles = {" ".join(toks)}
+    return [s.encode("utf-8") for s in shingles]
+
+
+def _py_shingle_hashes(text: str | None, k: int) -> np.ndarray:
+    """Shingle hashes in the 31-bit domain (crc32: C speed, deterministic
+    everywhere)."""
+    shingles = _shingles(text, k)
     return np.fromiter(
-        (zlib.crc32(s.encode("utf-8")) % _MERSENNE for s in shingles),
+        (zlib.crc32(s) % _MERSENNE for s in shingles),
         dtype=np.int64,
         count=len(shingles),
     )
+
+
+def minhash_signature(text: str | None, k: int, params: np.ndarray) -> np.ndarray:
+    """The MinHash signature of one text: per (a, b) row of ``params``
+    (:func:`_perm_params`), the min over shingle hashes h of
+    ``(a*h + b) mod p``; all ``p`` when the text has no shingle (NULL)."""
+    h = _py_shingle_hashes(text, k)
+    if h.size == 0:
+        return np.full(len(params), _MERSENNE, dtype=np.int64)
+    # (num_hashes, n_shingles) grid; int64 safe: p^2 < 2^63
+    return ((params[:, :1] * h[None, :] + params[:, 1:]) % _MERSENNE).min(axis=1)
+
+
+@cache
+def _minhash_kernel(num_hashes: int, k: int, seed: int) -> Callable[[list], tuple]:
+    """One kernel object per parameter set, so a rebuilt plan reuses its UDF."""
+    params = _perm_params(num_hashes, seed)
+    return lambda texts: ([minhash_signature(t, k, params) for t in texts],)
 
 
 def with_minhash_signature(
@@ -464,28 +491,19 @@ def with_minhash_signature(
 ) -> DataFrame:
     """Add an ``array<bigint>`` MinHash signature without explode/shuffle.
 
-    One Arrow round trip; the permutation matrix ``(a*h + b) mod p``
-    evaluates as a numpy broadcast over the (num_hashes x shingles) grid
-    — measured ~40x faster than a Catalyst fold (lambda HOFs are
-    interpreted per element, ~3.5 ms/doc).
+    One Arrow round trip (``functions/scoring.py::model_stage``); per
+    text, the permutation matrix ``(a*h + b) mod p`` evaluates as a numpy
+    broadcast over the (num_hashes x shingles) grid — measured ~40x
+    faster than a Catalyst fold (lambda HOFs are interpreted per element,
+    ~3.5 ms/doc).
     """
-    params = np.array(_perm_params(num_hashes, seed), dtype=np.int64)
-    a_vec, b_vec = params[:, 0][:, None], params[:, 1][:, None]
-
-    @pandas_udf("array<bigint>")
-    def _sig(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in batches:
-            out = []
-            for t in series:
-                h = _py_shingle_hashes(None if pd.isna(t) else t, k)
-                if h.size == 0:
-                    out.append(np.full(num_hashes, _MERSENNE, dtype=np.int64))
-                    continue
-                # (num_hashes, n_shingles) grid; int64 safe: p^2 < 2^63
-                out.append(((a_vec * h[None, :] + b_vec) % _MERSENNE).min(axis=1))
-            yield pd.Series(out)
-
-    return df.withColumn(out_col, _sig(F.col(text_col)))
+    return model_stage(
+        df,
+        text_col,
+        {out_col: "array<bigint>"},
+        (),
+        _minhash_kernel(num_hashes, k, seed),
+    )
 
 
 def minhash_lsh_pairs(
@@ -585,25 +603,38 @@ def minhash_lsh_pairs(
 
 SIMHASH_BITS = 64
 _CHUNKS = 4  # 4 x 16-bit chunks => finds all pairs with hamming <= 3
+_BIT_IDX = np.arange(SIMHASH_BITS, dtype=np.uint64)
 
 
 def _py_shingle_hashes64(text: str | None, k: int) -> np.ndarray:
     """64-bit shingle hashes (two salted crc32 halves)."""
-    if text is None:
-        return np.empty(0, dtype=np.uint64)
-    toks = text.lower().split()
-    if len(toks) >= k:
-        shingles = {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
-    else:
-        shingles = {" ".join(toks)}
+    shingles = _shingles(text, k)
     return np.fromiter(
-        (
-            (zlib.crc32(b) | (zlib.crc32(b, 0x9E3779B9) << 32))
-            for b in (s.encode("utf-8") for s in shingles)
-        ),
+        (zlib.crc32(b) | (zlib.crc32(b, 0x9E3779B9) << 32) for b in shingles),
         dtype=np.uint64,
         count=len(shingles),
     )
+
+
+def simhash_fingerprint(text: str | None, k: int) -> int:
+    """The 64-bit SimHash of one text as a signed long: bit i is set when
+    more shingle hashes have it set than not; 0 when the text has no
+    shingle (NULL)."""
+    h = _py_shingle_hashes64(text, k)
+    if h.size == 0:
+        return 0
+    bits = ((h[:, None] >> _BIT_IDX[None, :]) & 1).astype(np.int64)
+    votes = (2 * bits - 1).sum(axis=0)
+    fp = np.bitwise_or.reduce(
+        np.where(votes > 0, np.uint64(1) << _BIT_IDX, np.uint64(0))
+    )
+    return int(np.uint64(fp).view(np.int64))
+
+
+@cache
+def _simhash_kernel(k: int) -> Callable[[list], tuple]:
+    """One kernel object per shingle length, so a rebuilt plan reuses its UDF."""
+    return lambda texts: ([simhash_fingerprint(t, k) for t in texts],)
 
 
 def with_simhash(
@@ -614,30 +645,12 @@ def with_simhash(
 ) -> DataFrame:
     """Add a 64-bit SimHash fingerprint column (Charikar construction).
 
-    Per Arrow batch, the vote matrix is one broadcast
-    ``(shingles x 64) -> sum -> sign`` in numpy (~100x faster than a
-    Catalyst fold, measured 3.6 ms/doc there).
+    One Arrow round trip (``functions/scoring.py::model_stage``); per
+    text, the vote matrix is one broadcast ``(shingles x 64) -> sum ->
+    sign`` in numpy (~100x faster than a Catalyst fold, measured 3.6
+    ms/doc there).
     """
-    bit_idx = np.arange(SIMHASH_BITS, dtype=np.uint64)
-
-    @pandas_udf("long")
-    def _fp(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in batches:
-            out = np.zeros(len(series), dtype=np.int64)
-            for j, t in enumerate(series):
-                h = _py_shingle_hashes64(None if pd.isna(t) else t, k)
-                if h.size == 0:
-                    continue
-                bits = ((h[:, None] >> bit_idx[None, :]) & 1).astype(np.int64)
-                votes = (2 * bits - 1).sum(axis=0)
-                out[j] = np.int64(
-                    np.bitwise_or.reduce(
-                        np.where(votes > 0, np.uint64(1) << bit_idx, np.uint64(0))
-                    ).astype(np.uint64).view(np.int64)
-                )
-            yield pd.Series(out)
-
-    return df.withColumn(out_col, _fp(F.col(text_col)))
+    return model_stage(df, text_col, {out_col: "long"}, (), _simhash_kernel(k))
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -3,12 +3,13 @@ behind it (functions/textcore.py).
 
 Every public model stage must score each row exactly as the model's
 per-row method does — with a custom model, not just the default one —
-map NULL and empty text the same way, and leave no temporary struct
-column behind.  The stage must hold no model after it dies, and every
-vector and classifier scorer built on it must map a NULL input as its
-documented rule says.  The batch kernels must equal the per-row methods
-bit for bit, and keep the bits they had before the grouped gather was
-rewritten (a pinned digest)."""
+and every model-free text stage as its per-row kernel does, reusing its
+UDF when a plan is rebuilt; each must map NULL and empty text the same
+way and leave no temporary column behind.  The stage must hold no model
+after it dies, and every vector and classifier scorer built on it must
+map a NULL input as its documented rule says.  The batch kernels must
+equal the per-row methods bit for bit, and keep the bits they had before
+the grouped gather was rewritten (a pinned digest)."""
 
 from __future__ import annotations
 
@@ -24,10 +25,14 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
+from pyspark.sql import functions as F
+
 from data_caterer_spark.fixtures import generate_transcripts
-from data_caterer_spark.functions import scoring
+from data_caterer_spark.functions import bpe, docs, scoring
 from data_caterer_spark.functions.classifier import (
     QualityClassifier,
+    featurize,
+    featurize_doc,
     score_doc,
     score_keyed,
 )
@@ -44,7 +49,8 @@ from data_caterer_spark.functions.scoring import (
     with_turn_scores,
 )
 from data_caterer_spark.functions.textcore import LangIdModel, PerplexityModel
-from data_caterer_spark.operators import selection, similarity
+from data_caterer_spark.golden import _spark_round
+from data_caterer_spark.operators import dedup, selection, similarity
 
 LM = LangIdModel.train(
     {
@@ -103,6 +109,36 @@ def scores_one(t, lm, pm):
     return (*lm.predict_one(t), pm.score_one(t))
 
 
+MERGES = bpe.train_bpe({"the": 9, "quick": 4, "lorem": 5, "dolor": 3, "ipsum": 2}, 12)
+RANKS = {m: i for i, m in enumerate(MERGES)}
+
+
+def bpe_one(t):
+    toks = bpe.tokenize_text(t, RANKS)
+    return {"bpe_tokens": toks, "n_bpe_tokens": len(toks)}
+
+
+def compression_one(t):
+    """The per-row compression columns; the ratio rounded as Spark's
+    ``round`` does, and NULL for an empty text (a zero byte length)."""
+    if t is None:
+        return dict.fromkeys(("raw_bytes", "comp_bytes", "comp_ratio", "flag_repetitive"))
+    raw, comp = len(t.encode("utf-8")), docs.compressed_len(t)
+    ratio = comp / raw if raw else None
+    return {
+        "raw_bytes": raw,
+        "comp_bytes": comp,
+        "comp_ratio": None if ratio is None else _spark_round(ratio, 6),
+        "flag_repetitive": None if ratio is None else ratio < 0.4,
+    }
+
+
+def featurize_stage(df):
+    """``featurize`` keyed back onto the input rows; a NULL label is 0."""
+    feat = featurize(df, F.lit(None), 64, id_col="id").withColumnRenamed("doc_id", "id")
+    return df.join(feat, "id")
+
+
 STAGES = {
     "with_language": (
         lambda df: with_language(df, model=LM),
@@ -128,6 +164,25 @@ STAGES = {
         lambda t: dict(
             zip(scoring.TURN_SCORE_FIELDS, features_one(t, 4) + scores_one(t, LM, PM))
         ),
+    ),
+    "with_minhash_signature": (
+        lambda df: dedup.with_minhash_signature(df, num_hashes=8, k=2, seed=3),
+        lambda t: {
+            "minhash_sig": dedup.minhash_signature(t, 2, dedup._perm_params(8, 3)).tolist()
+        },
+    ),
+    "with_simhash": (
+        lambda df: dedup.with_simhash(df, k=2),
+        lambda t: {"simhash": dedup.simhash_fingerprint(t, 2)},
+    ),
+    "with_bpe_tokens": (
+        lambda df: bpe.with_bpe_tokens(df, MERGES, tokens_col="bpe_tokens"),
+        bpe_one,
+    ),
+    "with_compression_ratio": (docs.with_compression_ratio, compression_one),
+    "featurize": (
+        featurize_stage,
+        lambda t: dict(zip(("y", "buckets", "counts", "total"), (0, *featurize_doc(t, 64)))),
     ),
 }
 
@@ -171,6 +226,29 @@ def test_model_stage_broadcasts_each_model_once_per_context(spark, monkeypatch):
         with_turn_scores(df, run, langid_model=lm, ppl_model=pm).collect()
     assert [list(f) for f in built[2:]] == [list(scoring.TURN_SCORE_FIELDS)] * 2
     assert [id(v) for v in calls] == [id(lm), id(pm)]
+
+
+def test_row_kernel_stages_build_one_udf_per_parameter_set(spark, monkeypatch):
+    """The model-free text stages reuse their UDF when a plan is rebuilt
+    with the same parameters.  (``with_bpe_tokens`` stages the caller's
+    merge table, a new model per call.)"""
+    monkeypatch.setattr(scoring, "_built", (None, {}))  # nothing built yet
+    built = []
+    real_udf = scoring._stage_udf
+    monkeypatch.setattr(
+        scoring, "_stage_udf", lambda *a: built.append(list(a[1])) or real_udf(*a)
+    )
+    df = spark.createDataFrame([(0, "the lazy dog sat")], "id int, text string")
+    stages = [
+        lambda: dedup.with_minhash_signature(df, num_hashes=4, k=1, seed=11),
+        lambda: dedup.with_simhash(df, k=5),
+        lambda: docs.with_compression_ratio(df),
+        lambda: featurize(df, F.lit(1), 16, id_col="id", include_bigrams=False),
+    ]
+    for stage in stages:
+        stage().collect()
+        stage().collect()
+    assert built == [["minhash_sig"], ["simhash"], ["comp_bytes"], ["buckets", "counts", "total"]]
 
 
 def test_model_stage_forgets_a_dead_model(spark):
